@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 import graft.plans.PlanSnapshots
@@ -13,7 +15,8 @@ import graft.plans.PlanSnapshots
   *
   * With SPARK_GRAFT_PLAN_DIR set, also dumps a NORMALIZED plan snapshot
   * per query plus `exchange_budget.tsv` (query → shuffle-exchange
-  * count) — the versioned artifacts PlanRegressionSpec gates against:
+  * count; a run over named queries updates only their rows) — the
+  * versioned artifacts PlanRegressionSpec gates against:
   * a diff on these files is a deliberate, reviewed plan change, never a
   * silent regression. */
 object Explain {
@@ -72,8 +75,28 @@ object Explain {
           spark.catalog.clearCache()
       }
     }
-    planDir.foreach(dir =>
-      Files.writeString(Paths.get(dir, "exchange_budget.tsv"), budget.toString))
+    planDir.foreach { dir =>
+      val file = Paths.get(dir, "exchange_budget.tsv")
+      // a full run rewrites the file, dropping rows of removed queries
+      val existing =
+        if (args.nonEmpty && Files.exists(file))
+          Files.readAllLines(file).asScala.toSeq
+        else Nil
+      Files.writeString(file, mergeBudget(existing, names.toSet,
+        budget.toString.linesIterator.toSeq).map(_ + "\n").mkString)
+    }
     spark.stop()
+  }
+
+  /** The budget file after a run over `names`: rows of every other
+    * query are kept from `existing`, this run's `fresh` rows replace the
+    * named queries' rows (`q` and `q#interior` alike), and rows are
+    * sorted by key — so a subset run rewrites only its own rows and the
+    * file reads the same as after a full run. */
+  private[graft] def mergeBudget(existing: Seq[String], names: Set[String],
+      fresh: Seq[String]): Seq[String] = {
+    def key(row: String) = row.takeWhile(_ != '\t')
+    (existing.filter(r => r.nonEmpty && !names(key(r).takeWhile(_ != '#'))) ++
+      fresh).sortBy(key)
   }
 }

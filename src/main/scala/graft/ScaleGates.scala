@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *     frontier loop under the session's AQE posture);
   *  2. the CC gate: d05_dup_clusters at ~sf1 run BOTH ways — default
   *     (driver union-find finish) vs `spark.graft.cc.localFinishEdges=0`
-  *     (pure distributed label propagation) — with the two outputs
+  *     (distributed star rounds) — with the two outputs
   *     compared row-for-row: the gate is a pure execution-strategy
   *     switch on the big corpus too, and the over-cap path demonstrably
   *     runs at the new size. */
@@ -85,7 +85,7 @@ object ScaleGates {
       s"CC local-finish vs distributed outputs diverged at $bigDir: " +
         s"${localRows.length} vs ${distRows.length} rows")
     log(f"[gate:cc] d05_dup_clusters at $bigDir: driver union-find " +
-      f"finish $tLocal%.2f s == distributed label propagation " +
+      f"finish $tLocal%.2f s == distributed star rounds " +
       f"(localFinishEdges=0) $tDist%.2f s, ${localRows.length}%,d rows " +
       "BYTE-IDENTICAL — the over-cap CC path runs the same answer at " +
       "the new size")

@@ -2,8 +2,7 @@ package graft.core
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** F10 — the session/metadata surface the reference drives its
   * worksheets with (A4:47-51 `set myname = current_user(); grant role
@@ -36,10 +35,6 @@ final class SessionCtx(val user: String, initialRole: String = "PUBLIC") {
 
   def currentUser: String = user
   def currentRole: String = role
-  /** `current_user()` as a column (`set myname = current_user()` is
-    * `ctx.set("myname", ctx.currentUser)` driver-side). */
-  def currentUserCol: Column = lit(user)
-  def currentRoleCol: Column = lit(role)
 
   /** `GRANT ROLE r TO USER u` (A4:50). Idempotent, like the DDL. */
   def grantRole(r: String, u: String): this.type = { grants += ((r, u)); this }

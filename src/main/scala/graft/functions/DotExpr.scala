@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * codegen-friendly expression.
   *
   * The composed formulation (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`,
-  * kept as [[graft.operators.Similarity.dotHof]]) is correct but sits
+  * kept as the specs' expression twin) is correct but sits
   * outside whole-stage codegen: ZipWith allocates a fresh array per
   * pair and ArrayAggregate folds it through boxed lambda evaluation —
   * on the ANN candidate tier that is the single hottest per-row

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 /** `rand_project(vec)` — the whole Rademacher projection of one vector
   * as ONE native, codegen-friendly expression.
   *
-  * The composed formulation ([[graft.operators.Projection.hofProjection]]:
+  * The composed formulation (the specs' expression twin:
   * `transform(signM, row => aggregate(zip_with(...)))`) is correct but
   * runs INTERPRETED — higher-order functions sit outside whole-stage
   * codegen, and the decimal fold allocates a `Decimal` per element per

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** `shingle_hashes(text, k)` — distinct xxhash64 values of a document's
   * word k-shingles, as ONE native expression.
   *
-  * The composed formulation ([[graft.operators.Dedup.hashedShinglesExpr]]:
+  * The composed formulation (the specs' expression twin:
   * `array_distinct(transform(shingles, s => xxhash64(s)))` over
   * `transform(sequence(...), i => concat_ws(" ", slice(tokens, i, k)))`)
   * is correct but materializes, per document: the token array, an index

@@ -49,11 +49,6 @@ object TextFns {
     round(length(regexp_replace(c, "[^A-Za-z]", "")).cast("double") /
       nullif(length(c), lit(0)), 4)
 
-  /** Fraction of characters that are punctuation. */
-  def punctRatio(c: Column): Column =
-    round(length(regexp_replace(c, "[^.,;:!?'\"()\\[\\]-]", "")).cast("double") /
-      nullif(length(c), lit(0)), 4)
-
   /** English stopword list used by quality scoring (fixed, tiny — ships to
     * executors as a literal IN-list, no broadcast needed). */
   val enStopwords: Seq[String] = Seq(

@@ -196,9 +196,11 @@ private[graft] object Caches {
     * localizing something data-sized is a bug (that is what [[eager]]
     * is for), and it should fail loudly at the call site. */
   def localize(df: DataFrame, maxRows: Int = 1 << 20): DataFrame = {
-    val rows = df.collect()
+    // one row past the bound is enough to fail: the guard never pulls a
+    // data-sized frame onto the driver to count it
+    val rows = df.limit(maxRows + 1).collect()
     require(rows.length <= maxRows,
-      s"Caches.localize: ${rows.length} rows exceed the $maxRows yardstick " +
+      s"Caches.localize: more than $maxRows rows exceed the yardstick " +
         "bound — this frame is data-sized; checkpoint it instead")
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
@@ -257,7 +259,7 @@ private[graft] object Caches {
     * OWN Spark job plus a driver re-optimization round trip, and an
     * iterative fit multiplies that by its round count (measured: e12's
     * 5-iteration fit ran 23 stage-jobs for its 3 checkpoint actions;
-    * the log-star loop ~8 jobs a round). Two overrides, restored on
+    * the CC star loop ~8 jobs a round). Two overrides, restored on
     * exit:
     *
     *  - **AQE off**: each checkpoint materialization becomes ONE job
@@ -292,10 +294,8 @@ private[graft] object Caches {
     val cap = scala.util.Try(spark.conf
       .get("spark.graft.broadcast.maxRows", "2000000").toLong)
       .getOrElse(2000000L)
-    // over-cap fits keep the session's AQE posture; the env var is the
-    // dev escape hatch for same-window A/B measurement
-    if (stateRows > cap || sys.env.contains("SPARK_GRAFT_NO_ITERCONF"))
-      return body
+    // over-cap fits keep the session's AQE posture
+    if (stateRows > cap) return body
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val prev = keys.map(k => k -> scala.util.Try(spark.conf.get(k)).toOption)
     // width = max(bytes-based, ROWS-based) + 1: state exchanges are

@@ -8,7 +8,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
-  * SimHash, and n-gram Jaccard.
+  * md5-portable SimHash, exact n-gram Jaccard (prefix-filtered) and
+  * containment, span/fingerprint detection, and connected-component
+  * clustering — one implementation per capability. Expression-level
+  * twins of the native aggregates live with the specs that compare
+  * against them.
   *
   * Scale posture (the part that matters at 100 TB):
   *  - every stage is a native-expression projection or a key-partitioned
@@ -53,25 +57,6 @@ object Dedup {
           i => concat_ws(" ", slice(ts, i, lit(k))))))))
   }
 
-  /** MinHash signatures as a hash AGGREGATION, not a per-row nested
-    * higher-order expression: explode each doc's shingle hashes to
-    * (id, h) rows, then take numHashes `min(xxhash64(i, h))` aggregates
-    * in one codegen'd, map-side-combined groupBy(id). Seeded fixed-width
-    * rehashing of a long is orders of magnitude cheaper than re-hashing
-    * every shingle STRING once per permutation, and the only shuffle
-    * carries partial minima — numHashes longs per (id, partition)
-    * (Broder '97 single-hash-family minhash). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 64): DataFrame =
-    signaturesFromShingles(docs.select(col(idCol).as("id"),
-      shingles(col(textCol), k).as("sh")), numHashes)
-
-  /** Same, over a prepared (id, sh) frame — callers that already hold the
-    * shingle frame (e.g. for verification) avoid re-shingling. */
-  def signaturesFromShingles(sh: DataFrame, numHashes: Int = 64): DataFrame =
-    minhashAgg(sh.select(col("id"),
-      explode(transform(col("sh"), s => xxhash64(s))).as("h")), numHashes)
-
   /** Hashed shingle sets: distinct xxhash64 of each shingle — 8-byte
     * longs instead of ~20-char strings, so downstream signature explodes
     * and verification intersects move fixed-width integers. Jaccard on
@@ -80,39 +65,22 @@ object Dedup {
     *
     * Computed by the native [[graft.functions.ShingleHashes]] expression
     * (single tokenize, reused shingle buffer, no intermediate string
-    * array) — bit-identical to the composed formulation
-    * [[hashedShinglesExpr]], asserted in DedupSpec. */
+    * array); DedupSpec checks it elementwise against the composed
+    * `array_distinct(transform(shingles, xxhash64))` form. */
   def hashedShingles(textCol: Column, k: Int = 3): Column =
     graft.functions.ShingleHashes(textCol, k)
 
-  /** Composed-expression formulation of [[hashedShingles]] (five
-    * higher-order functions deep) — kept as the cross-check twin. */
-  def hashedShinglesExpr(textCol: Column, k: Int = 3): Column =
-    array_distinct(transform(shingles(textCol, k), s => xxhash64(s)))
-
-  /** Signatures over a prepared (id, hs: array<long>) hashed-shingle
-    * frame — native single-buffer aggregate ([[TextFns]] sibling
-    * [[graft.functions.MinHashSigAgg]]): one Array[Long] buffer and a
-    * tight per-row lane loop instead of `numHashes` separate aggregate
-    * buffers/projections. Bit-identical to the expression formulation
-    * ([[signaturesFromHashesExpr]], asserted in DedupSpec). */
+  /** MinHash signatures over a prepared (id, hs: array<long>)
+    * hashed-shingle frame: explode to (id, h) rows and take `numHashes`
+    * seeded minima `min(xxhash64(i, h))` in one map-side-combined
+    * groupBy(id) (Broder '97 single-hash-family minhash). The native
+    * single-buffer aggregate [[graft.functions.MinHashSigAgg]] runs one
+    * tight per-row lane loop instead of `numHashes` aggregate buffers;
+    * DedupSpec checks it bit for bit against the 64-aggregate form. */
   def signaturesFromHashes(hs: DataFrame, numHashes: Int = 64): DataFrame =
     hs.select(col("id"), explode(col("hs")).as("h"))
       .groupBy("id")
       .agg(graft.functions.MinHashSigAgg.minhashSig(col("h"), numHashes).as("sig"))
-
-  /** Expression-level formulation of [[signaturesFromHashes]] (64
-    * codegen'd min-aggs) — kept as the cross-check twin. */
-  def signaturesFromHashesExpr(hs: DataFrame, numHashes: Int = 64): DataFrame =
-    minhashAgg(hs.select(col("id"), explode(col("hs")).as("h")), numHashes)
-
-  private def minhashAgg(hashed: DataFrame, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("h"))).as(s"__m$i"))
-    hashed.groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
-  }
 
   /** LSH banding: split the signature into `bands` bands of
     * numHashes/bands rows; docs sharing any band bucket are candidates.
@@ -202,7 +170,8 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
     require(numHashes >= bands && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    minhashSignatures(docs, idCol, textCol, k, numHashes)
+    signaturesFromHashes(docs.select(col(idCol).as("id"),
+        hashedShingles(col(textCol), k).as("hs")), numHashes)
       .select(col("id"),
         posexplode(bandKeys(col("sig"), bands, numHashes / bands))
           .as(Seq("band", "bucket")))
@@ -260,7 +229,8 @@ object Dedup {
 
   /** Exact-Jaccard verification of (id_a, id_b) candidate pairs against
     * an (id, hs) hashed-shingle frame — the shared precision stage of
-    * [[minhashDedupPairs]] and [[incrementalMinhashPairs]]. */
+    * [[minhashDedupPairs]], [[incrementalMinhashPairs]] and
+    * [[ngramJaccardPairs]]. */
   private def verifyJaccardPairs(cands: DataFrame, hs: DataFrame,
       threshold: Double): DataFrame =
     cands
@@ -671,51 +641,6 @@ object Dedup {
       .distinct()
   }
 
-  // ---- SimHash ----
-
-  /** Distinct-token xxhash64 array — the SimHash input. */
-  def tokenHashes(textCol: Column): Column =
-    transform(array_distinct(TextFns.tokens(textCol)), t => xxhash64(t))
-
-  /** id → 64-bit SimHash fingerprint, as a hash AGGREGATION: explode the
-    * token hashes to (id, h) rows, sum the ±1 contribution of every bit
-    * position in 64 codegen'd sum-aggregates (map-side combined — the
-    * shuffle carries 64 longs per (id, partition)), then assemble the
-    * positive-sum bits into one long. Bit 63 lands on the sign bit —
-    * well-defined two's-complement, no ANSI overflow (bitwise OR). */
-  def withSimhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val exploded = Caches.spreadByKey(docs, col(idCol)).select(col(idCol).as("id"),
-      explode(tokenHashes(col(textCol))).as("h"))
-    val aggs = (0 until 64).map(b =>
-      sum(shiftrightunsigned(col("h"), b).bitwiseAND(lit(1L)) * 2 - 1)
-        .as(s"__b$b"))
-    val fp = (0 until 64)
-      .map(b => when(col(s"__b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ bitwiseOR _)
-    exploded.groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), fp.as("fp"))
-  }
-
-  /** Near-dup pairs by SimHash: block on the four 16-bit chunks of the
-    * fingerprint (any shared chunk → candidate; by pigeonhole this
-    * catches every pair with hamming distance ≤ 3), then verify with
-    * bit_count(xor). The self-join shuffles on (chunk_idx, chunk). */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // delegate to the capped chunk engine: an earlier standalone
-    // implementation here had NO hot-bucket guard, so one
-    // identical-fingerprint boilerplate family (all 4 chunks shared)
-    // made the chunk self-join quadratic — exactly the blowup
-    // [[withBucketStats]] exists to cap. The 4 chunks partition the 64
-    // fp bits, so the chunk-sum hamming equals the full-fp bit_count
-    // and honest buckets emit identical pairs.
-    val withFp = withSimhash(docs, idCol, textCol)
-    val chunks = withFp.select(col("id") +: (0 until 4).map(i =>
-      shiftrightunsigned(col("fp"), 16 * i).bitwiseAND(lit(0xFFFFL))
-        .as(s"c$i")): _*)
-    simhashPairsFromChunks(chunks, maxHamming, maxBucket)
-  }
-
   // ---- near-dup clustering ----
 
   /** Connected components over a near-dup pair list → one cluster
@@ -723,56 +648,42 @@ object Dedup {
     * a dedup pipeline actually consumes: pairs say "these two are dups",
     * the cluster id says "keep exactly this one".
     *
-    * Algorithm: min-label propagation — every round each node takes the
-    * min of its own label and its neighbors' labels; converges in
-    * O(component diameter) rounds (near-dup components are template
-    * cliques, so 2-3 rounds in practice; `maxRounds` bounds adversarial
-    * chains). Each round is one key-partitioned shuffle; labels are
-    * re-checkpointed per round so the iterative lineage never grows.
-    * At extreme diameters use [[dupClustersLogStar]] — the O(log n)
-    * large-star/small-star rewrite behind the same signature.
+    * Pair ids absent from `docs` are INERT: they neither receive a label
+    * nor bridge two components, so the labels are the components of the
+    * pair graph induced on the doc ids.
     *
-    * Throws `IllegalStateException` if propagation is still changing
-    * labels after `maxRounds` — truncated propagation would silently
+    * Two paths, identical labels (DedupSpec pins local ≡ forced
+    * distributed on random, chain, star and clique shapes):
+    *  - a bounded-small edge set whose endpoints are all doc ids
+    *    finishes on the driver ([[localMinLabels]]) — near-dup pair
+    *    graphs are sparse by construction, so this is the common case;
+    *  - otherwise [[starClusters]] runs the O(log n) large-star/
+    *    small-star rounds over the doc-id pairs, whatever the component
+    *    diameter.
+    *
+    * Throws `IllegalStateException` if the rounds are still changing
+    * the edge set after `maxRounds` — truncated rounds would silently
     * return SPLIT clusters (two labels for one component), and a dedup
     * pipeline acting on those would keep duplicates it believes it
-    * removed. Raise `maxRounds` for adversarially deep chains. */
+    * removed. */
   def dupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxRounds: Int = 20): DataFrame = {
-    // LAZY two-direction expansion: the engine's one production caller
-    // (collapsedDupClusters) hands in an eagerly-checkpointed pair list,
-    // so evaluating this union is two cheap scans of materialized
-    // blocks. Checkpointing it AGAIN just to probe the local-finish
-    // gate was one materialization job plus its storage blocks of pure
-    // overhead per query on the d05/d10/t19/t41 family — the edge
-    // checkpoint now happens only where it pays: on the distributed
-    // propagation path below, whose rounds genuinely reuse the frame.
-    // (A caller handing in an expensive UNmaterialized pair frame pays
-    // its lineage once per probe job — materialize pairs first, as the
-    // engine does.)
+    val ids = docs.select(col(idCol).as("id"))
+    // LAZY two-direction expansion: engine callers hand in an eagerly
+    // materialized pair list, so the count and the local collect are
+    // cheap scans of materialized blocks; checkpointing it again would
+    // be one materialization job of pure overhead per query
     val edgesLazy = pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
     val nEdges = edgesLazy.count()
-    // bounded-small edge set: finish on the driver (identical labels —
-    // min-label propagation's fixed point IS the component min; see
-    // [[localMinLabels]]); the propagation rounds below remain the
-    // over-cap scale path. `edgesLazy` carries both directions, so the
-    // union-find sees every pair (twice — harmless). ONE semantic
-    // caveat, probed before committing: label-prop leaves pair-ids
-    // absent from `docs` INERT (they neither receive nor forward
-    // labels), while union-find transits them — so the local result
-    // only stands when every edge endpoint is a doc id (the engine
-    // shape: pair generators derive ids from the corpus). Any phantom
-    // endpoint falls back to the distributed rounds.
-    // Probed BEFORE the corpus-id label state is built: the fast path
-    // needs only the bare id projection (scanned twice — against the
-    // caller's cached/cheap docs frame that is cheaper than the label
-    // checkpoint's own materialization + count jobs, ~4 scheduler
-    // round-trips saved per query on the d05/d10/t19/t41 family).
+    // the union-find transits pair ids absent from `docs`, so its labels
+    // only stand when every edge endpoint is a doc id (the engine shape:
+    // pair generators derive ids from the corpus) — probed by one count
+    // against the bare id projection; any phantom endpoint falls back to
+    // the rounds, which drop phantom pairs up front
     localMinLabels(edgesLazy, nEdges) match {
       case Some((lbl, nLbl)) =>
-        val ids = docs.select(col(idCol).as("id"))
         val matched = ids
           .join(Caches.broadcastIfSmall(lbl, 2 * nEdges), Seq("id")).count()
         if (matched == nLbl)
@@ -782,60 +693,10 @@ object Dedup {
               coalesce(col("__root"), col("id")).as("cluster_id"))
       case None => ()
     }
-    // distributed path: the edge frame is read every propagation round —
-    // THIS is where the checkpoint earns its materialization job
-    val edges = edgesLazy.eagerCheckpoint()
-    var labels = Caches.spreadByKey(docs.select(col(idCol).as("id")), col("id"))
-      .withColumn("label", col("id"))
-      .eagerCheckpoint()
-    // both loop-constant counts are one cheap job each over materialized
-    // checkpoints; they gate WHICH side of the per-round join gets the
-    // broadcast hint. Checkpoint-backed frames report the unknown-size
-    // sentinel, so Catalyst would otherwise sort-merge-shuffle BOTH
-    // sides every round. The small side differs by workload: a dedup
-    // pair list is usually tiny against a corpus-wide label table
-    // (broadcast edges); a dense graph dwarfs its node state
-    // (broadcast labels) — and past the cap both ways, the two-narrow-
-    // shuffles-per-round posture stands.
-    val nNodes = labels.count()
-    var round = 0
-    var converged = nEdges == 0
-    while (!converged && round < maxRounds) {
-      val labeled =
-        if (nEdges <= nNodes)
-          Caches.broadcastIfWorthIt(edges, nEdges, nNodes)
-            .join(labels.select(col("id").as("src"), col("label")), "src")
-        else
-          edges.join(Caches.broadcastIfWorthIt(
-            labels.select(col("id").as("src"), col("label")), nNodes, nEdges),
-            "src")
-      val neighborMin = labeled
-        .groupBy(col("dst").as("id")).agg(min("label").as("nmin"))
-      // carry the pre-update label through the checkpoint so the
-      // convergence check is a scan of the materialized state, not a
-      // second join job per round
-      // neighborMin's sound row bound is nEdges (one row per distinct
-      // dst): pairs may legally name ids that are not in `docs` (they
-      // drop out in this left join), so min(nNodes, nEdges) could
-      // UNDERSTATE the build side and let an over-cap table broadcast
-      val next = labels.select(col("id"), col("label").as("__old"))
-        .join(Caches.broadcastIfWorthIt(neighborMin, nEdges, nNodes),
-          Seq("id"), "left")
-        .select(col("id"), col("__old"),
-          least(col("__old"), coalesce(col("nmin"), col("__old"))).as("label"))
-        .eagerCheckpoint()
-      converged = next.filter(col("label") =!= col("__old")).isEmpty
-      // the pre-update state is dead the moment `next` is materialized —
-      // drop its blocks now rather than letting rounds stack up in storage
-      Caches.release(labels)
-      labels = next.select("id", "label")
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dupClusters did not converge in $maxRounds rounds — component " +
-          "diameter exceeds the bound; labels would be split. Raise maxRounds.")
-    labels.select(col("id").as(idCol), col("label").as("cluster_id"))
+    val docPairs = pairs
+      .join(ids.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
+      .join(ids.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
+    starClusters(ids, idCol, docPairs, maxRounds)
   }
 
   /** Driver-side union-find finish for connected components whose edge
@@ -906,72 +767,47 @@ object Dedup {
     Some((labels.toDF("id", "__root"), labels.size.toLong))
   }
 
-  /** O(log n)-round connected components — the large-star/small-star
-    * alternation (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) behind the SAME signature as [[dupClusters]], for
-    * components whose DIAMETER is adversarial (chains of incremental
-    * revisions, crawl snapshots): min-label propagation pays one
-    * key-partitioned round per hop of diameter, this pays O(log n)
-    * rounds total regardless of shape.
+  /** The distributed path of [[dupClusters]]: the large-star/small-star
+    * alternation (Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SoCC'14) over pairs whose endpoints are all in `ids`.
+    * Min-label propagation pays one key-partitioned round per hop of
+    * component diameter; this pays O(log n) rounds regardless of shape
+    * (a 300-hop chain converges in ~9 rounds).
     *
     * Per round: large-star hangs every neighbor LARGER than a node onto
     * the minimum of that node's closed neighborhood; small-star re-hangs
     * the smaller neighbors (and the node) onto their minimum. Both are
-    * one groupBy + one join on the node key — the same shuffle shape as
-    * a propagation round — and the edge set provably contracts to one
-    * star per component rooted at its minimum id. The canonical edge
-    * set is checkpointed per round (lineage stays O(1)); the undirected
-    * expansion each round consumes is a shuffle-free union of two scans
-    * of that checkpoint, never materialized separately.
-    * Equality with [[dupClusters]] on arbitrary graphs is asserted in
-    * DedupSpec; a 300-hop chain converges in ~9 rounds where min-label
-    * needs 300. */
-  def dupClustersLogStar(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxRounds: Int = 30): DataFrame = {
+    * one groupBy + one join on the node key, and the edge set provably
+    * contracts to one star per component rooted at its minimum id. Only
+    * the canonical (src < dst) edge set is checkpointed per round, so
+    * lineage stays O(1); the undirected expansion each round consumes is
+    * a shuffle-free union of two scans of that checkpoint. */
+  private def starClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
+      maxRounds: Int): DataFrame = {
     // (src, dst) BOTH directions — each star step processes full
-    // neighborhoods keyed by src. The general form dedups: arbitrary
-    // input (the caller's pairs, a star step's output) can contain
-    // (a, b) alongside (b, a), which the union would double.
+    // neighborhoods keyed by src. The general form dedups: a star
+    // step's output can contain (a, b) alongside (b, a), which the
+    // union would double.
     def undirect(e: DataFrame): DataFrame =
       e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct()
-    // Distinct-free twin for a CANONICAL (distinct, src <= dst) input:
+    // Distinct-free twin for a CANONICAL (distinct, src < dst) input:
     // the forward scan emits only src < dst rows and the swapped scan
-    // only src > dst rows (self-loops filtered), so the union is
-    // duplicate-free BY CONSTRUCTION — per round this saves the hash
-    // exchange a .distinct() would plan on the expanded edge set, and
-    // the consumers (a min() aggregate and the star joins, whose output
-    // is re-canonicalized anyway) are duplicate-insensitive besides.
+    // only src > dst rows, so the union is duplicate-free BY
+    // CONSTRUCTION — per round this saves the hash exchange a
+    // .distinct() would plan on the expanded edge set
     def undirectCanon(e: DataFrame): DataFrame =
       e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst"))
-    // canonical ordered form, for the convergence check
+    // canonical ordered form, self-loops dropped; also the convergence
+    // check's set
     def canon(e: DataFrame): DataFrame =
-      e.select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst")).distinct()
+      e.filter(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("src"),
+          greatest(col("src"), col("dst")).as("dst")).distinct()
 
-    val edges0 = undirect(pairs.select(col("id_a").as("src"),
-      col("id_b").as("dst"))).eagerCheckpoint()
-    var prev = canon(edges0).eagerCheckpoint()
+    var prev = canon(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      .eagerCheckpoint()
     var prevCount = prev.count()
-    // only the CANONICAL set is checkpointed per round: the undirected
-    // expansion is a shuffle-free union of two scans of that checkpoint
-    // (undirect(canon(E)) = undirect(E) as sets), so materializing it
-    // too would buy nothing and cost one checkpoint job + release per
-    // round. The initial expansion is dead once `prev` is materialized.
-    Caches.release(edges0)
-    // bounded-small edge set: finish on the driver (exact same labels,
-    // ~60 cluster jobs fewer at bench scale; see [[localMinLabels]]) —
-    // the distributed star rounds below remain the over-cap scale path
-    localMinLabels(prev, prevCount) match {
-      case Some((lbl, _)) =>
-        Caches.release(prev) // labels are on the driver; the ckpt is dead
-        return docs.select(col(idCol).as("id"))
-          .join(Caches.broadcastIfSmall(lbl, 2 * prevCount), Seq("id"), "left")
-          .select(col("id").as(idCol),
-            coalesce(col("__root"), col("id")).as("cluster_id"))
-      case None => ()
-    }
     var round = 0
     var converged = prevCount == 0
     // round loop under iteration conf (AQE off, shuffle width sized
@@ -980,7 +816,7 @@ object Dedup {
     // as a handful of pipelined jobs instead of a stage-job + driver
     // re-plan per exchange per round. Scheduling only — identical
     // plans, identical labels.
-    Caches.withIterationConf(docs.sparkSession, prevCount, bytesPerRow = 16L) {
+    Caches.withIterationConf(ids.sparkSession, prevCount, bytesPerRow = 16L) {
     while (!converged && round < maxRounds) {
       val edges = undirectCanon(prev)
       // large-star: for (x, y>x) emit (y, min(Γ(x) ∪ {x}))
@@ -1022,11 +858,10 @@ object Dedup {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"dupClustersLogStar did not converge in $maxRounds rounds — " +
+        s"dupClusters did not converge in $maxRounds rounds — " +
           "labels would be split. Raise maxRounds.")
     // fixed point = one star per component, rooted at the component min
-    docs.select(col(idCol).as("id"))
-      .join(prev.select(col("dst").as("id"), col("src").as("root")),
+    ids.join(prev.select(col("dst").as("id"), col("src").as("root")),
         Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("root"), col("id")).as("cluster_id"))
@@ -1088,34 +923,32 @@ object Dedup {
 
   // ---- SimHash (portable, md5-derived) ----
 
-  /** md5-portable SimHash, as four 16-bit chunks `c0..c3`.
-    *
-    * Token bits come from the first 16 hex chars of md5(token): bits
-    * 31..0 from hex digits 9..16 ("lo"), bits 63..32 from digits 1..8
-    * ("hi"). md5 is bit-identical across engines, so the DuckDB oracle
-    * replays the exact fingerprint digit-for-digit — unlike the
-    * xxhash64 variant ([[withSimhash]]), which is faster but has no
-    * cross-engine twin. Chunked (not one i64) output is sign-safe and
-    * doubles as the pigeonhole blocking key. */
-  /** The md5-derived 32-bit halves every portable-SimHash variant
-    * consumes: (id, hi, lo) per distinct token. */
-  private def simhashHalves(docs: DataFrame, idCol: String,
+  /** The md5-derived 32-bit halves the portable SimHash consumes:
+    * (id, hi, lo) per distinct token. Token bits come from the first 16
+    * hex chars of md5(token): bits 31..0 from hex digits 9..16 ("lo"),
+    * bits 63..32 from digits 1..8 ("hi"). md5 is bit-identical across
+    * engines, so the DuckDB oracle replays the exact fingerprint
+    * digit-for-digit. */
+  private[graft] def simhashHalves(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
     Caches.spreadByKey(docs, col(idCol))
       .select(col(idCol).as("id"),
-        // slice: the packed sums in the expression twin stay < 2^63
-        // (ANSI-safe) iff each lane count ≤ 32767, so at most 32767
-        // distinct tokens contribute per document
+        // at most 32767 distinct tokens contribute per document: the
+        // bound keeps every 16-bit lane of the lane-packed formulation
+        // (the shape the oracle replays) from borrowing, and its top
+        // lane's running sum below 2^63 under ANSI arithmetic
         explode(slice(array_distinct(TextFns.tokens(col(textCol))), 1, 32767)).as("tok"))
       .select(col("id"), md5(col("tok").cast("binary")).as("hx"))
       .select(col("id"),
         conv(substring(col("hx"), 1, 8), 16, 10).cast("long").as("hi"),
         conv(substring(col("hx"), 9, 8), 16, 10).cast("long").as("lo"))
 
-  /** Native-aggregate form: all 64 bit-counters in one buffer
-    * ([[graft.functions.SimHashChunksAgg]]) — chunk-identical to
-    * [[withSimhashChunksExpr]] (asserted in DedupSpec) with a fraction
-    * of its generated-code footprint. */
+  /** md5-portable SimHash, as four 16-bit chunks `c0..c3` — all 64
+    * bit-counters in one native aggregate buffer
+    * ([[graft.functions.SimHashChunksAgg]]). Chunked (not one i64)
+    * output is sign-safe and doubles as the pigeonhole blocking key.
+    * DedupSpec checks it against the lane-packed expression form and a
+    * plain-JVM reference. */
   def withSimhashChunks(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     simhashHalves(docs, idCol, textCol)
       .groupBy("id")
@@ -1124,36 +957,6 @@ object Dedup {
       .select(col("id"),
         element_at(col("__c"), 1).as("c0"), element_at(col("__c"), 2).as("c1"),
         element_at(col("__c"), 3).as("c2"), element_at(col("__c"), 4).as("c3"))
-
-  /** Lane-packed expression formulation — kept as the cross-check twin
-    * (and the shape the DuckDB oracle literally replays). */
-  def withSimhashChunksExpr(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val halves = simhashHalves(docs, idCol, textCol)
-    // 64 per-bit set-counts, LANE-PACKED into 16 sum aggregates (bits
-    // 4g..4g+3 in four 16-bit lanes of agg __s<g>): 4× fewer aggregate
-    // buffers and update calls, and the generated aggregate class stays
-    // small enough to compile+JIT fast. Lanes can't borrow: each lane
-    // count ≤ 32767 (the slice above), which also keeps the top lane's
-    // running sum below 2^63 under ANSI arithmetic.
-    def bitOf(b: Int): Column = {
-      val (src, sh) = if (b < 32) (col("lo"), b) else (col("hi"), b - 32)
-      shiftrightunsigned(src, sh).bitwiseAND(lit(1L))
-    }
-    val aggs = (0 until 16).map { g =>
-      sum((0 until 4).map(t => bitOf(4 * g + t) * lit(1L << (16 * t))).reduce(_ + _))
-        .as(s"__s$g")
-    } :+ count(lit(1L)).as("__n")
-    // bit b set ⟺ signed sum positive ⟺ 2·count(b) > n_tokens
-    def countOf(b: Int): Column =
-      shiftrightunsigned(col(s"__s${b / 4}"), 16 * (b % 4)).bitwiseAND(lit(0xFFFFL))
-    val chunkCols = (0 until 4).map { j =>
-      (0 until 16).map { t =>
-        when(countOf(16 * j + t) * 2 > col("__n"), lit(1L << t)).otherwise(lit(0L))
-      }.reduce(_ bitwiseOR _).as(s"c$j")
-    }
-    halves.groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(col("id") +: chunkCols: _*)
-  }
 
   /** Near-dup pairs by portable SimHash. With 4 chunks and
     * maxHamming ≤ 3 the pigeonhole blocking is EXACT (any pair within
@@ -1221,100 +1024,7 @@ object Dedup {
     }
   }
 
-  // ---- n-gram Jaccard (exact) ----
-
-  /** EXACT pairwise n-gram Jaccard as a count-based inverted-index join:
-    * every (repeated) shingle posts its documents, pairs meet once per
-    * shared shingle, and the intersection size IS the meet count — one
-    * aggregate, no per-pair array work at all. Singleton shingles
-    * (df = 1, the long tail) are dropped up front: they cannot
-    * contribute to any intersection.
-    *
-    * Skew posture for 100 TB: a shingle shared by d documents emits
-    * d·(d-1)/2 meet rows into ONE reducer — the "every document contains
-    * 'the quick brown'" key would melt it. Shingles with df > `hotDf`
-    * therefore run through an exact salted self-join (a-side salted,
-    * b-side replicated `salts`×, same algebra as [[Skew.saltedJoin]]),
-    * spreading each hot shingle over `salts` reducers; cold shingles
-    * join directly. Union before the count preserves exactness: each
-    * shared shingle contributes exactly one meet row on exactly one
-    * path. For an index-size-bounded alternative see
-    * [[ngramJaccardPairsPrefix]]. */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, k: Int = 3,
-      hotDf: Int = 4096, salts: Int = 16): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "jaccard threshold in (0, 1]")
-    shingleMeets(docs, idCol, textCol, k, hotDf, salts) { meets =>
-      meets
-        .withColumn("__j", col("__i").cast("double") /
-          (col("__sa") + col("__sb") - col("__i")))
-        // unrounded threshold — rounding first would admit sub-threshold
-        // boundary pairs the all-pairs definition excludes
-        .filter(col("__j") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
-    }
-  }
-
-  /** EXACT pairwise n-gram CONTAINMENT — |A ∩ B| / min(|A|, |B|) — the
-    * asymmetric twin of [[ngramJaccardPairs]]: a short document wholly
-    * embedded in a long one scores ~1 here while its jaccard collapses
-    * toward |A|/|B| (a 50-gram quote inside a 5000-gram page is
-    * containment 1.0, jaccard 0.01) — the quote/excerpt/wrapper-page
-    * detector a corpus dedup needs ALONGSIDE the symmetric measures.
-    * Same meet-count inverted index, same hot-shingle salting, same
-    * exactness argument; only the denominator differs. */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 3,
-      hotDf: Int = 4096, salts: Int = 16): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "containment threshold in (0, 1]")
-    shingleMeets(docs, idCol, textCol, k, hotDf, salts) { meets =>
-      meets
-        .withColumn("__c", col("__i").cast("double") /
-          least(col("__sa"), col("__sb")))
-        .filter(col("__c") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("__c"), 4).as("containment"))
-    }
-  }
-
-  /** Shared meet-count core of the exact pairwise measures: hashed
-    * shingle postings (df = 1 singletons dropped — they cannot
-    * intersect), cold keys joined directly, hot keys (df > hotDf)
-    * through the exact salted self-join, aggregated to one row per
-    * unordered pair: (id_a, id_b, __i = |A ∩ B|, __sa = |A|,
-    * __sb = |B|). `finish` shapes the measure; it runs inside the
-    * cache scope so its plan reuses the hot shingle frame. */
-  private def shingleMeets(docs: DataFrame, idCol: String, textCol: String,
-      k: Int, hotDf: Int, salts: Int)(
-      finish: DataFrame => DataFrame): DataFrame = {
-    val hs = Caches.spreadByKey(docs, col(idCol)).select(col(idCol).as("id"),
-      hashedShingles(col(textCol), k).as("hs"))
-    Caches.scoped(hs) {
-      val ex = hs.select(col("id"), size(col("hs")).as("sz"),
-        explode(col("hs")).as("s"))
-      val dfTab = ex.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") > lit(1L))
-      val withDf = ex.join(dfTab, "s")
-      val cold = withDf.filter(col("df") <= lit(hotDf.toLong))
-      val hot = withDf.filter(col("df") > lit(hotDf.toLong))
-      def pairCols(side: DataFrame, other: DataFrame, extraKey: Seq[String]) =
-        side.as("a").join(other.as("b"),
-            (Seq(col("a.s") === col("b.s")) ++
-              extraKey.map(k0 => col(s"a.$k0") === col(s"b.$k0")))
-              .reduce(_ && _) && col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-            col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      val coldPairs = pairCols(cold, cold, Nil)
-      val hotL = hot.withColumn("__salt",
-        pmod(xxhash64(col("id"), col("s")), lit(salts.toLong)))
-      val hotR = hot.withColumn("__salt",
-        explode(sequence(lit(0L), lit(salts - 1L))))
-      val hotPairs = pairCols(hotL, hotR, Seq("__salt"))
-      finish(coldPairs.unionByName(hotPairs)
-        .groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("__i"),
-          first(col("sz_a")).as("__sa"), first(col("sz_b")).as("__sb")))
-    }
-  }
+  // ---- n-gram Jaccard and containment (exact) ----
 
   /** EXACT pairwise n-gram Jaccard via prefix filtering (AllPairs /
     * PPJoin family — Bayardo et al. WWW'07, Xiao et al. WWW'08): order
@@ -1323,18 +1033,16 @@ object Dedup {
     * candidates meet on shared PREFIX shingles. Any pair with
     * jaccard ≥ t must share a prefix element under a common global
     * order, so — unlike first-token or LSH blocking — this is lossless:
-    * the result is identical to the all-pairs join. Candidates then pass
-    * the PPJoin positional filter before full set verification.
+    * the result is identical to the all-pairs join (ContainmentSpec
+    * checks it against brute force). Candidates then pass the PPJoin
+    * positional filter before full set verification.
     *
-    * Trade-off vs [[ngramJaccardPairs]]: the candidate join only ever
-    * touches prefix (= globally rare) shingles, so its buckets stay
-    * small without any salting — the index is what's bounded. The price
-    * is a per-candidate array intersection; on corpora whose documents
-    * share large fractions of their shingles (template-heavy crawls) the
-    * count-based variant is faster. */
-  def ngramJaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
+    * The candidate join only ever touches prefix (= globally rare)
+    * shingles, so its buckets stay small without any salting: the index
+    * is what's bounded. */
+  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, k: Int = 3): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "prefix filtering needs 0 < t <= 1")
+    require(threshold > 0 && threshold <= 1, "jaccard threshold in (0, 1]")
     val hs = Caches.spreadByKey(docs, col(idCol)).select(col(idCol).as("id"),
       hashedShingles(col(textCol), k).as("hs"))
     Caches.scoped(hs) {
@@ -1370,14 +1078,74 @@ object Dedup {
           least(col("__sa") - col("__ra"), col("__sb") - col("__rb")) >=
           ceil(lit(threshold / (1 + threshold)) * (col("__sa") + col("__sb"))))
         .select("id_a", "id_b")
-      cands
-        .join(hs.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-        .join(hs.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-        .withColumn("__i", size(array_intersect(col("hs_a"), col("hs_b"))))
-        .withColumn("__j", col("__i").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("__i")))
-        .filter(col("__j") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      verifyJaccardPairs(cands, hs, threshold)
+    }
+  }
+
+  /** EXACT pairwise n-gram CONTAINMENT — |A ∩ B| / min(|A|, |B|) — the
+    * asymmetric twin of [[ngramJaccardPairs]]: a short document wholly
+    * embedded in a long one scores ~1 here while its jaccard collapses
+    * toward |A|/|B| (a 50-gram quote inside a 5000-gram page is
+    * containment 1.0, jaccard 0.01) — the quote/excerpt/wrapper-page
+    * detector a corpus dedup needs ALONGSIDE the symmetric measures.
+    *
+    * Count-based inverted index ([[shingleMeets]]): pairs meet once per
+    * shared shingle and the intersection size IS the meet count; hot
+    * shingles (df > `hotDf`) are spread over `salts` reducers by an
+    * exact salted self-join. */
+  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double = 0.8, k: Int = 3,
+      hotDf: Int = 4096, salts: Int = 16): DataFrame = {
+    require(threshold > 0 && threshold <= 1, "containment threshold in (0, 1]")
+    shingleMeets(docs, idCol, textCol, k, hotDf, salts) { meets =>
+      meets
+        .withColumn("__c", col("__i").cast("double") /
+          least(col("__sa"), col("__sb")))
+        .filter(col("__c") >= threshold)
+        .select(col("id_a"), col("id_b"), round(col("__c"), 4).as("containment"))
+    }
+  }
+
+  /** Meet-count core of [[containmentPairs]]: hashed shingle postings
+    * (df = 1 singletons dropped — they cannot intersect), cold keys
+    * joined directly, hot keys (df > hotDf) through the exact salted
+    * self-join (a-side salted, b-side replicated `salts`×, the
+    * [[Skew.saltedJoin]] algebra), aggregated to one row per unordered
+    * pair: (id_a, id_b, __i = |A ∩ B|, __sa = |A|, __sb = |B|). Each
+    * shared shingle contributes exactly one meet row on exactly one
+    * path, so the union stays exact. `finish` shapes the measure; it
+    * runs inside the cache scope so its plan reuses the hot shingle
+    * frame. */
+  private def shingleMeets(docs: DataFrame, idCol: String, textCol: String,
+      k: Int, hotDf: Int, salts: Int)(
+      finish: DataFrame => DataFrame): DataFrame = {
+    val hs = Caches.spreadByKey(docs, col(idCol)).select(col(idCol).as("id"),
+      hashedShingles(col(textCol), k).as("hs"))
+    Caches.scoped(hs) {
+      val ex = hs.select(col("id"), size(col("hs")).as("sz"),
+        explode(col("hs")).as("s"))
+      val dfTab = ex.groupBy("s").agg(count(lit(1)).as("df"))
+        .filter(col("df") > lit(1L))
+      val withDf = ex.join(dfTab, "s")
+      val cold = withDf.filter(col("df") <= lit(hotDf.toLong))
+      val hot = withDf.filter(col("df") > lit(hotDf.toLong))
+      def pairCols(side: DataFrame, other: DataFrame, extraKey: Seq[String]) =
+        side.as("a").join(other.as("b"),
+            (Seq(col("a.s") === col("b.s")) ++
+              extraKey.map(k0 => col(s"a.$k0") === col(s"b.$k0")))
+              .reduce(_ && _) && col("a.id") < col("b.id"))
+          .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+            col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+      val coldPairs = pairCols(cold, cold, Nil)
+      val hotL = hot.withColumn("__salt",
+        pmod(xxhash64(col("id"), col("s")), lit(salts.toLong)))
+      val hotR = hot.withColumn("__salt",
+        explode(sequence(lit(0L), lit(salts - 1L))))
+      val hotPairs = pairCols(hotL, hotR, Seq("__salt"))
+      finish(coldPairs.unionByName(hotPairs)
+        .groupBy("id_a", "id_b")
+        .agg(count(lit(1)).as("__i"),
+          first(col("sz_a")).as("__sa"), first(col("sz_b")).as("__sb")))
     }
   }
 

@@ -55,6 +55,11 @@ import org.apache.spark.sql.functions._
   */
 object EditDistance {
 
+  /** Raw-input size (optimizer estimate) at or above which
+    * [[editPairs]] pins its candidate and verify stages to the session
+    * shuffle width instead of letting AQE coalesce them. */
+  private val PinMinBytes = 64L << 20
+
   /** Normalized comparison key: first `prefixLen` chars of the
     * whitespace-trimmed, lower-cased text. */
   def prefixKey(textCol: Column, prefixLen: Int): Column =
@@ -103,16 +108,13 @@ object EditDistance {
     // scale the same folding is exactly right (the whole candidate set
     // is one task's work) and the pins only buy w near-empty tasks per
     // stage of scheduling. Gate on the optimizer's size estimate of the
-    // input — a plan-stats read, zero jobs: pin at/above
-    // `spark.graft.editdist.pinMinBytes` (default 64 MB raw input; the
-    // ~sf1+ legs where folding measurably serialized), skip below it.
-    // Stats-less sources report the huge defaultSizeInBytes sentinel
-    // and therefore PIN — the safe direction at unknown scale.
-    val pinMinBytes = scala.util.Try(docs.sparkSession.conf
-      .get("spark.graft.editdist.pinMinBytes", (64L << 20).toString).toLong)
-      .getOrElse(64L << 20)
+    // input — a plan-stats read, zero jobs: pin at/above PinMinBytes
+    // raw input (the ~sf1+ legs where folding measurably serialized),
+    // skip below it. Stats-less sources report the huge
+    // defaultSizeInBytes sentinel and therefore PIN — the safe
+    // direction at unknown scale.
     val pinWidth = docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(pinMinBytes)
+      BigInt(PinMinBytes)
     def pinned(df: DataFrame, keys: Seq[Column]): DataFrame =
       if (pinWidth) df.repartition(w, keys: _*) else df
 

@@ -36,6 +36,13 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** Iterations that ride one lineage before the rank state is
+    * re-materialized: trades per-round checkpoint jobs against
+    * optimizer-visible plan depth (an `iters`-deep join tree measured a
+    * 14.4 s analysis blow-up at sf0.1). 2 measured best against 3 and 5
+    * in same-window A/B runs at sf0.1 and ~sf1. */
+  private val CkptCadence = 2
+
   /** Ranks after `iters` damped power iterations over the directed
     * edge list. Output: (node, deg, rank), one row per node.
     *
@@ -94,18 +101,6 @@ object PageRank {
       var r = deg.select(col("node"), col("deg"),
         round(lit(1.0 / n), 12).as("r"))
       var prevCkpt: Option[DataFrame] = None
-      // checkpoint cadence: how many iterations ride one lineage before
-      // the state is re-materialized. Cadence trades per-round
-      // checkpoint jobs against optimizer-visible plan depth (an
-      // `iters`-deep join tree measured a 14.4 s analysis blow-up at
-      // sf0.1 in round 11); 2 re-measured optimal this round (ABAB at
-      // sf0.1 and the ~sf1 leg — see OPTIMIZATION_r14.md) against 3
-      // and 5. Conf/env-overridable so the next scale regime can
-      // re-measure instead of re-patching.
-      val cadence = math.max(1, sys.env.get("SPARK_GRAFT_PAGERANK_CADENCE")
-        .orElse(scala.util.Try(edges0.sparkSession.conf
-          .get("spark.graft.pagerank.ckptCadence")).toOption)
-        .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(2))
       // the whole fit loop runs under iteration conf (AQE off, shuffle
       // width sized from the known n-row state): every checkpoint
       // materialization becomes ONE pipelined job instead of a stage-
@@ -133,7 +128,7 @@ object PageRank {
         val inflow = edges
           .join(Caches.broadcastIfWorthIt(contrib, n.toLong, eCnt), "src")
           .groupBy(col("dst").as("node")).agg(F.sum(col("__c")).as("__s"))
-        // checkpoint every `cadence` iterations' state (the bfsHops
+        // checkpoint every CkptCadence iterations' state (the bfsHops
         // discipline, batched): lineage stays O(1)-bounded — the
         // optimizer sees plans at most two joins deep, still far from
         // the `iters`-deep tree whose analysis/codegen blow-up measured
@@ -159,7 +154,7 @@ object PageRank {
                   lit(new java.math.BigDecimal("1E-13"))).cast("double"),
                 lit(0.0)),
               12).as("r"))
-        if (t % cadence == 0 || t == iters) {
+        if (t % CkptCadence == 0 || t == iters) {
           r = r.eagerCheckpoint()
           // the previous batch-checkpoint is dead once the new state is
           // materialized — release its blocks instead of stacking

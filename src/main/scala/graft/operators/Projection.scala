@@ -5,7 +5,6 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Johnson–Lindenstrauss random projection (Achlioptas, JCSS 2003:
   * database-friendly ±1 projections) — the dimensionality-reduction
@@ -29,8 +28,6 @@ import org.apache.spark.sql.types.DecimalType
   * 4dp round are applied identically by the oracle.
   */
 object Projection {
-
-  private val dec386 = DecimalType(38, 6)
 
   /** +1/-1 from the parity of the first hex nibble of md5("tag-i-j") —
     * the engine-portable derivation (DuckDB: strpos over the hex
@@ -59,8 +56,8 @@ object Projection {
     *
     * Runs as the native codegen'd
     * [[graft.functions.RandProjectExpr]] (scaled-long folds inside
-    * whole-stage codegen); [[hofProjection]] is the Column-algebra twin
-    * the expression is bit-equality-tested against. */
+    * whole-stage codegen); ProjectionSpec tests it bit for bit against
+    * the interpreted DECIMAL fold it replaced. */
   def randProject(df: DataFrame, idCol: String, vecCol: String,
       dimIn: Int, dimOut: Int, tag: String = "rp"): DataFrame = {
     require(dimIn >= 1 && dimOut >= 1, "dims must be >= 1")
@@ -71,35 +68,6 @@ object Projection {
         posexplode(graft.functions.RandProjectExpr(col(vecCol), signs, inv)))
       .select(col("id"), (col("pos") + 1).cast("long").as("component"),
         col("col").as("val"))
-  }
-
-  /** The Column-algebra formulation of the projection (interpreted
-    * higher-order fold in DECIMAL): the semantic ground truth
-    * [[graft.functions.RandProjectExpr]] must match bit-for-bit.
-    *
-    * The fold runs in DECIMAL(38,6) (exact, order-free); the sum is
-    * then narrowed to DECIMAL(20,6) — far above any real vector's
-    * magnitude, but below the precision ceiling, so the ×(1/√dimOut)
-    * product keeps its full scale-8 result instead of triggering
-    * Spark's precision-loss re-round at scale 6 (a double-rounding
-    * that would diverge from the oracle's single round on …4950-tail
-    * values). One ROUND(·, 4) on the exact decimal, then DOUBLE. */
-  private[graft] def hofProjection(vecCol: Column, dimIn: Int, dimOut: Int,
-      tag: String): Column = {
-    val inv = exactInvRoot(dimOut).get
-    val signM: Column = typedLit(
-      (1 to dimOut).map(j => (1 to dimIn).map(i => sign(tag, i, j))))
-    // slice to dimIn: without it zip_with null-pads the SIGN side for a
-    // longer vector and `otherwise(-x)` would treat the null sign as -1,
-    // silently adding tail elements the native expression and the oracle
-    // (which index v[1..dimIn]) both ignore
-    val xd = transform(slice(vecCol, 1, dimIn),
-      x => round(x.cast("double"), 6).cast(dec386))
-    val praw = transform(signM, row =>
-      aggregate(zip_with(xd, row, (x, s) => when(s === 1, x).otherwise(-x)),
-        lit(0).cast(dec386), (acc, t) => acc + t)
-        .cast(DecimalType(20, 6)))
-    transform(praw, p => round(p * lit(inv), 4).cast("double"))
   }
 
   /** DuckDB twin of [[randProject]] over

@@ -27,10 +27,11 @@ object Similarity {
 
   /** Dot product of two array<double|float> columns (left-fold,
     * deterministic summation order) — the native codegen expression
-    * ([[graft.functions.DotExpr]]); bit-identical to the composed twin
-    * [[dotHof]] on double arrays (asserted in DotExprSpec; float
-    * inputs are widened to double before the multiply, unlike the raw
-    * HOF), several times cheaper on the candidate-scoring hot path.
+    * ([[graft.functions.DotExpr]]); bit-identical to the composed
+    * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` on double arrays
+    * (asserted in DotExprSpec; float inputs are widened to double
+    * before the multiply, unlike the raw HOF), several times cheaper on
+    * the candidate-scoring hot path.
     *
     * CONTRACT: inputs must be ARRAY<FLOAT|DOUBLE> — analysis-time
     * checked. Other numeric arrays (the pre-DotExpr HOF accepted e.g.
@@ -38,11 +39,6 @@ object Similarity {
     * / `transform(c, _.cast("double"))`. Every engine call site
     * already routes through [[asDouble]]. */
   def dot(a: Column, b: Column): Column = graft.functions.DotExpr(a, b)
-
-  /** Composed-HOF formulation of [[dot]] — kept as the cross-check twin
-    * (and the shape the oracle SQL replays). */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -32,14 +32,6 @@ object Masking {
     case _         => lit("MASKED")
   }
 
-  /** G12 masking policy as a runtime expression (the reference's
-    * current_role() branching form, A4:1019-1026) for multi-tenant rows. */
-  def maskPanExpr(v: Column, role: Column): Column =
-    when(role === "admin", v)
-      .when(role === "auditor", maskPanAuditor(v))
-      .when(role === "analyst", maskPanAnalyst(v))
-      .otherwise(lit("MASKED"))
-
   /** G10 PII classification registry (A4:950-970): constant governance
     * table mapping (table, column) → category + sensitivity. */
   val piiClassification: Seq[(String, String, String, String)] = Seq(

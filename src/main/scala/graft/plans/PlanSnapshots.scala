@@ -52,9 +52,6 @@ object PlanSnapshots {
     plan.linesIterator.count(l =>
       l.contains("Exchange ") && !l.contains("BroadcastExchange"))
 
-  def broadcastCount(plan: String): Int =
-    plan.linesIterator.count(_.contains("BroadcastExchange"))
-
   def hasCartesian(plan: String): Boolean =
     plan.contains("CartesianProduct")
 

@@ -878,8 +878,8 @@ object PipelineQueries {
     * resulting selection decision (keep ∧ representative). This is the
     * query a reference user's END-TO-END pipeline reduces to; each stage
     * keeps its own scale posture (codegen'd projections, exact-dedup
-    * pre-collapse + capped LSH self-join, key-partitioned label
-    * propagation, md5 split — no new shuffles beyond the stages' own). */
+    * pre-collapse + capped LSH self-join, connected components, md5
+    * split — no new shuffles beyond the stages' own). */
   def t19CorpusManifest(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val quality = t12FilterPass(s, dir).select("doc_id", "keep")
@@ -1118,10 +1118,10 @@ object PipelineQueries {
 
   /** Mutual-kNN graph clustering — symmetrize the LSH top-2 lists
     * ([[Similarity.mutualKnnEdges]]) and label the connected
-    * components with the O(log n) star contraction
-    * ([[Dedup.dupClustersLogStar]]): embedding cluster structure with
-    * no k to pick and no similarity threshold to tune, the grouping
-    * SemDeDup-style curation slices a corpus by. The top-k source is
+    * components with [[Dedup.dupClusters]] (driver union-find on a
+    * bounded edge set, O(log n) star rounds past it): embedding
+    * cluster structure with no k to pick and no similarity threshold to
+    * tune, the grouping SemDeDup-style curation slices a corpus by. The top-k source is
     * the multi-probe LSH tier (v02's exact parameters, so the oracle
     * replays it arithmetic-step-for-arithmetic-step), NOT brute force:
     * self-kNN for EVERY vector is the one ANN call where the O(n²)
@@ -1141,7 +1141,7 @@ object PipelineQueries {
       Similarity.lshTopK(e, e, "vec_id", "embedding", k = 2,
         numPlanes = annAutoPlanes(s, dir), dim = 64,
         numBuckets = annAutoBuckets(s, dir)))
-    val comp = Dedup.dupClustersLogStar(e.select("vec_id"), "vec_id", edges)
+    val comp = Dedup.dupClusters(e.select("vec_id"), "vec_id", edges)
     val sizes = comp.groupBy("cluster_id").agg(count(lit(1)).as("comp_size"))
     comp.join(sizes, "cluster_id")
       .select("vec_id", "cluster_id", "comp_size").orderBy("vec_id")

@@ -78,10 +78,10 @@ class CachesSpec extends SparkSuite {
   test("iteration state is released per round: block count is O(1) in rounds") {
     import graft.operators.Dedup
     Caches.releaseAllPersistent(spark)
-    // a 12-hop chain forces ~12 min-label propagation rounds; each round
-    // checkpoints fresh label state. With per-round release the resident
-    // set stays {edges, current labels}; without it, one dead snapshot
-    // per round accumulates (the 50-iteration-fit OOM shape at scale).
+    // a 12-hop chain takes several star rounds; each round checkpoints
+    // a fresh canonical edge set. With per-round release the resident
+    // set stays {current edge set}; without it, one dead snapshot per
+    // round accumulates (the 50-iteration-fit OOM shape at scale).
     val n = 13L
     val docs = (1L to n).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -95,7 +95,7 @@ class CachesSpec extends SparkSuite {
       "one chain, one component")
     assert(persistedIds.size <= 3,
       s"superseded per-round state leaked: ${persistedIds.size} RDDs resident " +
-        "after a ~12-round propagation (expected edges + final labels only)")
+        "after the component rounds (expected the final edge set only)")
     Caches.releaseAllPersistent(spark)
   }
 
@@ -173,5 +173,25 @@ class CachesSpec extends SparkSuite {
       s"sweepAfter leaked or over-released: ${persistedIds.size} vs $before")
     assert(outside.count() === 1, "sweepAfter released a frame outside its scope")
     Caches.releaseAllPersistent(spark)
+  }
+
+  test("localize: maxRows rows pass, maxRows + 1 fail before a full collect") {
+    val ok = Caches.localize(spark.range(5).toDF("id"), maxRows = 5)
+    assert(ok.count() === 5L)
+    assert(ok.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val e = intercept[IllegalArgumentException] {
+      Caches.localize(spark.range(6).toDF("id"), maxRows = 5)
+    }
+    assert(e.getMessage.contains("more than 5 rows exceed the yardstick bound"))
+    // rows past maxRows + 1 are never evaluated: a frame that raises
+    // from its 11th row on still fails on the bound, not on the raise
+    val poisoned = spark.range(0, 1000, 1, 1).select(
+      when(col("id") >= 10, raise_error(lit("evaluated past the bound")))
+        .otherwise(col("id")).as("id"))
+    val e2 = intercept[IllegalArgumentException] {
+      Caches.localize(poisoned, maxRows = 5)
+    }
+    assert(e2.getMessage.contains("yardstick bound"))
   }
 }

@@ -39,16 +39,22 @@ class DedupSpec extends SparkSuite {
     assert(row(0).getDouble(2) === 1.0)
   }
 
+  /** The four 16-bit SimHash chunks of each doc packed into one long,
+    * in id order. */
+  private def fingerprints(d: org.apache.spark.sql.DataFrame): Seq[Long] =
+    Dedup.withSimhashChunks(d, "doc_id", "text").orderBy("id").collect()
+      .map(r => (0 until 4).map(j => r.getLong(j + 1) << (16 * j)).reduce(_ | _))
+      .toSeq
+
   test("simhash of identical docs is equal; hamming pairs found") {
     val d = docs(
       1L -> "spark catalyst tungsten codegen shuffle partition broadcast join agg window",
       2L -> "spark catalyst tungsten codegen shuffle partition broadcast join agg window",
       3L -> "zzz yyy xxx www vvv uuu ttt sss rrr qqq")
-    val fps = Dedup.withSimhash(d, "doc_id", "text")
-      .orderBy("id").collect().map(_.getLong(1))
+    val fps = fingerprints(d)
     assert(fps(0) === fps(1))
     assert(fps(0) !== fps(2))
-    val pairs = Dedup.simhashPairs(d, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.simhashPortablePairs(d, "doc_id", "text", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.contains((1L, 2L, 0L)))
   }
@@ -59,10 +65,9 @@ class DedupSpec extends SparkSuite {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val variant = base.replace("tok40", "tok41")
     val d = docs(1L -> base, 2L -> variant)
-    val fps = Dedup.withSimhash(d, "doc_id", "text")
-      .orderBy("id").collect().map(_.getLong(1))
+    val fps = fingerprints(d)
     val hamming = java.lang.Long.bitCount(fps(0) ^ fps(1))
-    val blocked = Dedup.simhashPairs(d, "doc_id", "text", maxHamming = 3)
+    val blocked = Dedup.simhashPortablePairs(d, "doc_id", "text", maxHamming = 3)
       .collect()
     if (hamming <= 3) assert(blocked.length === 1)
     else assert(blocked.isEmpty)
@@ -79,41 +84,6 @@ class DedupSpec extends SparkSuite {
     assert(pairs.toSeq === Seq((1L, 2L, 1.0)))
   }
 
-  test("ngram jaccard: count-based and prefix-filtered variants agree") {
-    // template-ish corpus: twins, a near-twin, an overlapping-but-below-
-    // threshold doc, and an unrelated doc
-    val d = docs(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      2L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      3L -> "alpha beta gamma delta epsilon zeta eta theta iota lambda",
-      4L -> "alpha beta gamma delta other words entirely now here yes",
-      5L -> "unrelated text with completely different content thanks")
-    def norm(df0: org.apache.spark.sql.DataFrame) =
-      df0.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val count = norm(Dedup.ngramJaccardPairs(d, "doc_id", "text", threshold = 0.3))
-    val prefix = norm(Dedup.ngramJaccardPairsPrefix(d, "doc_id", "text", threshold = 0.3))
-    assert(count === prefix)
-    assert(count.exists { case (a, b, j) => a == 1L && b == 2L && j == 1.0 })
-  }
-
-  test("ngram jaccard: salted hot-shingle path is exact (hotDf=1)") {
-    val d = docs(
-      1L -> "one two three four five six seven eight",
-      2L -> "one two three four five six seven nine",
-      3L -> "one two three ten eleven twelve thirteen fourteen")
-    // hotDf=1 forces EVERY repeated shingle through the salted join
-    val salted = Dedup.ngramJaccardPairs(d, "doc_id", "text",
-        threshold = 0.2, hotDf = 1, salts = 4)
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val plain = Dedup.ngramJaccardPairs(d, "doc_id", "text", threshold = 0.2)
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(salted === plain)
-    assert(salted.nonEmpty)
-  }
-
   test("native minhash aggregate is bit-identical to the 64-agg expression form") {
     val rnd = new scala.util.Random(11)
     val d = (1L to 50L).map { i =>
@@ -122,9 +92,9 @@ class DedupSpec extends SparkSuite {
     def sigs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     assert(sigs(Dedup.signaturesFromHashes(d, 64)) ===
-      sigs(Dedup.signaturesFromHashesExpr(d, 64)))
+      sigs(ExprTwins.signaturesFromHashesExpr(d, 64)))
     assert(sigs(Dedup.signaturesFromHashes(d, 16)) ===
-      sigs(Dedup.signaturesFromHashesExpr(d, 16)))
+      sigs(ExprTwins.signaturesFromHashesExpr(d, 16)))
   }
 
   test("dupClusters: min-label propagation finds components incl. chains") {
@@ -148,7 +118,7 @@ class DedupSpec extends SparkSuite {
       df.orderBy("id").collect()
         .map(r => (r.getLong(0), (1 to 4).map(r.getLong))).toSeq
     assert(chunks(Dedup.withSimhashChunks(d, "doc_id", "text")) ===
-      chunks(Dedup.withSimhashChunksExpr(d, "doc_id", "text")))
+      chunks(ExprTwins.withSimhashChunksExpr(d, "doc_id", "text")))
   }
 
   test("native shingle_hashes ≡ composed array_distinct(transform(...)) elementwise") {
@@ -162,7 +132,7 @@ class DedupSpec extends SparkSuite {
     for (k <- Seq(1, 3, 5)) {
       val native = d.select(col("id"), Dedup.hashedShingles(col("text"), k).as("hs"))
         .orderBy("id").collect().map(_.getSeq[Long](1)).toSeq
-      val composed = d.select(col("id"), Dedup.hashedShinglesExpr(col("text"), k).as("hs"))
+      val composed = d.select(col("id"), ExprTwins.hashedShinglesExpr(col("text"), k).as("hs"))
         .orderBy("id").collect().map(_.getSeq[Long](1)).toSeq
       assert(native === composed, s"k=$k")
     }
@@ -206,12 +176,13 @@ class DedupSpec extends SparkSuite {
   }
 
   test("dupClusters: truncated propagation throws instead of returning split labels") {
-    // a 5-chain needs ~4 propagation rounds; maxRounds=1 must be loud,
-    // not silently emit two labels for one component
+    // a 5-chain is not yet a star after one large/small-star round;
+    // maxRounds=1 must be loud, not silently emit two labels for one
+    // component
     val d = (1L to 5L).toDF("doc_id")
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
     // forced distributed: the local union-find finish is exact at any
-    // depth, so maxRounds only governs the over-cap iterative path
+    // depth, so maxRounds only governs the over-cap star rounds
     val e = intercept[IllegalStateException] {
       forceDistributed {
         Dedup.dupClusters(d, "doc_id", chain, maxRounds = 1).collect()
@@ -350,34 +321,48 @@ class DedupSpec extends SparkSuite {
     assert(got === Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
-  /** Force the distributed component rounds (the over-cap scale path)
-    * by zeroing the local union-find finish's edge cap. */
+  /** Force the distributed star rounds (the over-cap scale path) by
+    * zeroing the local union-find finish's edge cap. */
   private def forceDistributed[A](body: => A): A = {
     spark.conf.set("spark.graft.cc.localFinishEdges", "0")
     try body finally spark.conf.unset("spark.graft.cc.localFinishEdges")
   }
 
-  test("dupClustersLogStar ≡ dupClusters on random graphs (distributed rounds)") {
+  /** Plain-Scala component labels over docs 1..n: relax every edge to
+    * the min of its endpoints' labels until nothing changes. */
+  private def refClusters(n: Long, edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val label = scala.collection.mutable.Map((1L to n).map(i => i -> i): _*)
+    var changed = true
+    while (changed) {
+      changed = false
+      edges.foreach { case (a, b) =>
+        val m = math.min(label(a), label(b))
+        if (label(a) != m || label(b) != m) {
+          label(a) = m; label(b) = m; changed = true
+        }
+      }
+    }
+    (1L to n).map(i => i -> label(i))
+  }
+
+  private def clusters(d: org.apache.spark.sql.DataFrame,
+      pairs: org.apache.spark.sql.DataFrame, maxRounds: Int = 20) =
+    Dedup.dupClusters(d, "doc_id", pairs, maxRounds).orderBy("doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("dupClusters: forced distributed rounds ≡ the plain-Scala reference on random graphs") {
     val rnd = new scala.util.Random(7)
     val n = 200L
     val d = (1L to n).toDF("doc_id")
-    val pairs = Seq.fill(150)(
-      (rnd.nextLong(n) + 1, rnd.nextLong(n) + 1))
+    val edges = Seq.fill(150)((rnd.nextLong(n) + 1, rnd.nextLong(n) + 1))
       .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    def norm(df0: org.apache.spark.sql.DataFrame) =
-      df0.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    forceDistributed {
-      assert(norm(Dedup.dupClustersLogStar(d, "doc_id", pairs)) ===
-        norm(Dedup.dupClusters(d, "doc_id", pairs, maxRounds = 300)))
-    }
+    assert(forceDistributed(clusters(d, edges.toDF("id_a", "id_b"))) ===
+      refClusters(n, edges))
   }
 
-  test("local union-find finish ≡ distributed rounds, both operators") {
-    // several shapes: random graph, chain (deep diameter), star, and
-    // singletons-with-an-isolated-clique — the local finish must be
-    // byte-identical to the converged distributed fixed point
+  test("local union-find finish ≡ distributed rounds on random, chain, star, clique") {
+    // the local finish must be byte-identical to the converged
+    // distributed fixed point, deep diameters included
     val rnd = new scala.util.Random(41)
     val n = 250L
     val d = (1L to n).toDF("doc_id")
@@ -387,57 +372,44 @@ class DedupSpec extends SparkSuite {
       (1L until 60L).map(i => (i, i + 1)),
       (2L to 40L).map(i => (1L, i)),
       Seq((240L, 241L), (241L, 242L), (240L, 242L)))
-    def norm(df0: org.apache.spark.sql.DataFrame) =
-      df0.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
     shapes.foreach { edges =>
       val pairs = edges.toDF("id_a", "id_b")
-      val localStar = norm(Dedup.dupClustersLogStar(d, "doc_id", pairs))
-      val localProp = norm(Dedup.dupClusters(d, "doc_id", pairs))
-      forceDistributed {
-        assert(localStar ===
-          norm(Dedup.dupClustersLogStar(d, "doc_id", pairs)))
-        assert(localProp ===
-          norm(Dedup.dupClusters(d, "doc_id", pairs, maxRounds = 300)))
-      }
+      val local = clusters(d, pairs)
+      assert(local === refClusters(n, edges))
+      assert(forceDistributed(clusters(d, pairs)) === local)
     }
   }
 
   test("dupClusters: phantom pair-ids fall back to the inert distributed semantics") {
-    // label-prop semantics: pair ids ABSENT from docs are inert — they
-    // never transit connectivity. The local union-find WOULD transit
-    // them, so the probe must reject the local result and the
-    // distributed fallback must keep 1 and 2 in separate clusters
-    // (connected only through phantom 99).
+    // pair ids ABSENT from docs are inert — they never transit
+    // connectivity. The local union-find WOULD transit them, so the
+    // probe must reject the local result and the distributed fallback
+    // must keep 1 and 2 in separate clusters (connected only through
+    // phantom 99).
     val d = (1L to 3L).toDF("doc_id")
     val pairs = Seq((1L, 99L), (99L, 2L)).toDF("id_a", "id_b")
-    val got = Dedup.dupClusters(d, "doc_id", pairs)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got === Seq(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(clusters(d, pairs) === Seq(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
-  test("dupClustersLogStar: a 300-hop chain converges in O(log n) distributed rounds") {
+  test("dupClusters: phantom ids on a chain stay inert in the forced distributed rounds") {
+    // docs 1-6; the chain 1-2-3 continues to 4-5 only through phantom
+    // 99, and 6 touches nothing but phantom 100
+    val d = (1L to 6L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 99L), (99L, 4L), (4L, 5L),
+      (100L, 6L)).toDF("id_a", "id_b")
+    assert(forceDistributed(clusters(d, pairs)) ===
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
+  }
+
+  test("dupClusters: a 300-hop chain converges within 15 forced distributed rounds") {
+    // one label-propagation round per hop would need ~300 rounds on
+    // this diameter; the star alternation must land well inside 15
     val n = 300L
     val d = (1L to n).toDF("doc_id")
     val chain = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // min-label propagation would need ~300 rounds on this diameter;
-    // the star alternation must land well inside 15. Forced distributed:
-    // the local finish would otherwise short-circuit the very rounds
-    // this test pins.
-    val got = forceDistributed {
-      Dedup.dupClustersLogStar(d, "doc_id", chain, maxRounds = 15)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
+    val got = forceDistributed(clusters(d, chain, maxRounds = 15))
     assert(got.length === n.toInt)
     assert(got.forall(_._2 == 1L))
-  }
-
-  test("dupClustersLogStar: no pairs → every doc is its own cluster") {
-    val d = (1L to 5L).toDF("doc_id")
-    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val got = Dedup.dupClustersLogStar(d, "doc_id", empty)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got === (1L to 5L).map(i => i -> i))
   }
 
   test("lshHotBuckets reports template families without any self-join") {

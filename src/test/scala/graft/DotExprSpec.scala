@@ -21,7 +21,7 @@ class DotExprSpec extends SparkSuite {
       spark.sparkContext.parallelize(rows, 2), schema(elem))
     val out = df.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(
+      ExprTwins.dotHof(
         transform(col("a"), x => x.cast("double")),
         transform(col("b"), x => x.cast("double"))).as("hof"))
       .collect()

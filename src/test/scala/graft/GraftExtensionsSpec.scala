@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 
 import graft.functions.{GraftExtensions, GraftFunctions}
-import graft.operators.Dedup
 
 /** SQL-surface registration of the native functions. */
 class GraftExtensionsSpec extends SparkSuite {
@@ -17,7 +16,7 @@ class GraftExtensionsSpec extends SparkSuite {
       "SELECT id, minhash_sig(h, 16) AS sig FROM hashes GROUP BY id ORDER BY id")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     // must equal the DataFrame-API formulation
-    val api = Dedup.signaturesFromHashesExpr(
+    val api = ExprTwins.signaturesFromHashesExpr(
       Seq((1L, Seq(10L, 20L)), (2L, Seq(30L))).toDF("id", "hs"), 16)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     assert(sql === api)
@@ -32,7 +31,7 @@ class GraftExtensionsSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     val api = Seq((1L, "the quick brown fox jumps"), (2L, "tiny"))
       .toDF("id", "text")
-      .select($"id", Dedup.hashedShinglesExpr($"text", 3).as("hs"))
+      .select($"id", ExprTwins.hashedShinglesExpr($"text", 3).as("hs"))
       .orderBy("id")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     assert(sql === api)

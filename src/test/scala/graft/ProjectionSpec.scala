@@ -54,7 +54,7 @@ class ProjectionSpec extends SparkSuite {
       Projection.sign("rp", i + 1, j + 1))
     val both = e.select(
       graft.functions.RandProjectExpr(col("embedding"), signs, inv).as("nat"),
-      Projection.hofProjection(col("embedding"), 64, 16, "rp").as("hof"))
+      ExprTwins.hofProjection(col("embedding"), 64, 16, "rp").as("hof"))
     assert(both.filter(not(col("nat") <=> col("hof"))).count() === 0)
   }
 
@@ -97,7 +97,7 @@ class ProjectionSpec extends SparkSuite {
       .toDF("id", "v")
     val both = long.select(
       graft.functions.RandProjectExpr(col("v"), signs, inv).as("nat"),
-      Projection.hofProjection(col("v"), 8, 4, "rp").as("hof"))
+      ExprTwins.hofProjection(col("v"), 8, 4, "rp").as("hof"))
     val r = both.collect().head
     assert(r.getSeq[Double](0) === r.getSeq[Double](1))
     // and equals the projection of the truncated vector

@@ -60,8 +60,8 @@ class ReliableCheckpointSpec extends SparkSuite {
     spark.sparkContext.setCheckpointDir(ckDir.toString)
     spark.conf.set("spark.graft.checkpoint.mode", "reliable")
     try {
-      // a 12-hop chain: ~12 propagation rounds, each checkpointing fresh
-      // label state. Reliable-mode state lives as FILES — without the
+      // a 12-hop chain: several star rounds, each checkpointing a fresh
+      // canonical edge set. Reliable-mode state lives as FILES — without the
       // release-time delete the dir would accumulate one rdd-* snapshot
       // per round (Spark's own cleaner is off by default), the
       // unbounded-disk twin of the block-accumulation failure. Forced
@@ -78,8 +78,8 @@ class ReliableCheckpointSpec extends SparkSuite {
         w.iterator().asScala.count(_.getFileName.toString.startsWith("rdd-"))
       }
       assert(rddDirs <= 3,
-        s"$rddDirs reliable checkpoint snapshots left after a ~12-round " +
-          "propagation (expected only edges + final labels)")
+        s"$rddDirs reliable checkpoint snapshots left after the component " +
+          "rounds (expected only the final edge set)")
     } finally {
       spark.conf.set("spark.graft.checkpoint.mode", "local")
       spark.conf.unset("spark.graft.cc.localFinishEdges")
@@ -147,7 +147,7 @@ class ReliableCheckpointSpec extends SparkSuite {
       q(spark, sf0001).collect().map(_.toSeq).toSeq
     }
     assert(reliable === local)
-    // the log-star rounds release superseded state; the bound covers the
+    // the component rounds release superseded state; the bound covers the
     // chain's live scoped() exits, not one snapshot per round
     assert(snapshots <= 12,
       s"$snapshots checkpoint snapshots left after the v23 chain")
