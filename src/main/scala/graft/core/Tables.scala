@@ -211,12 +211,10 @@ object Tables {
   }
 
   /** Recover from a temp-and-swap crash that landed between the two
-    * renames (settled dir missing, backup present): restore the backup.
-    * Call at the entry of any hand-rolled swap maintenance op —
-    * [[replaceAtomic]] performs the equivalent itself — so a crashed
-    * compact heals on its next run instead of failing unrecoverably on
-    * the missing settled table. */
-  def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
+    * renames (settled dir missing, backup present): restore the backup,
+    * so a crashed maintenance op heals on its next run instead of
+    * failing unrecoverably on the missing settled table. */
+  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
       target: org.apache.hadoop.fs.Path,
       backup: org.apache.hadoop.fs.Path): Unit =
     if (!fs.exists(target) && fs.exists(backup) && !fs.rename(backup, target))

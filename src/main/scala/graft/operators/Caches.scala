@@ -194,8 +194,11 @@ private[graft] object Caches {
     *
     * The guard is a hard require, not a silent fallback: a caller
     * localizing something data-sized is a bug (that is what [[eager]]
-    * is for), and it should fail loudly at the call site. */
-  def localize(df: DataFrame, maxRows: Int = 1 << 20): DataFrame = {
+    * is for), and it should fail loudly at the call site. `maxRows` is
+    * required: every caller passes its own construction bound (k, the
+    * centroid count, m·nCodes), so a blanket default can never hide a
+    * frame that outgrew it. */
+  def localize(df: DataFrame, maxRows: Int): DataFrame = {
     // one row past the bound is enough to fail: the guard never pulls a
     // data-sized frame onto the driver to count it
     val rows = df.limit(maxRows + 1).collect()

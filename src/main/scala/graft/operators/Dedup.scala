@@ -1177,11 +1177,10 @@ object Dedup {
     require(numHashes >= bands && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
     require(parts >= 1, s"parts ($parts) must be >= 1")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((k, numHashes, bands, parts))
-      .toDF("k", "num_hashes", "bands", "parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("minhash",
+      Map("k" -> k.toLong, "num_hashes" -> numHashes.toLong,
+        "bands" -> bands.toLong, "parts" -> parts.toLong),
+      Seq(MinhashPostings, MinhashShingles)))
     writeMinhashIndexRows(corpus, idCol, textCol,
       k, numHashes, bands, parts, indexDir, "overwrite")
   }
@@ -1194,11 +1193,17 @@ object Dedup {
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, newDocs: DataFrame, idCol: String,
       textCol: String): Unit = {
-    val m = spark.read.parquet(s"$indexDir/meta").head()
-    writeMinhashIndexRows(newDocs, idCol, textCol,
-      m.getAs[Int]("k"), m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("bands"), m.getAs[Int]("parts"), indexDir, "append")
+    val m = IndexStore.meta(spark, indexDir)
+    writeMinhashIndexRows(newDocs, idCol, textCol, m.int("k"),
+      m.int("num_hashes"), m.int("bands"), m.int("parts"), indexDir, "append")
   }
+
+  /** The MinHash index's growable tables: band postings and the
+    * exact-Jaccard verification shingles, both id-keyed. */
+  private val MinhashPostings = IndexStore.Table("postings", Some("id"),
+    Some("bucket_p"))
+  private val MinhashShingles = IndexStore.Table("shingles", Some("id"),
+    Some("id_p"))
 
   private def writeMinhashIndexRows(docs: DataFrame, idCol: String,
       textCol: String, k: Int, numHashes: Int, bands: Int, parts: Int,
@@ -1210,20 +1215,15 @@ object Dedup {
       // shingles partitioned by an id-hash directory key so the probe's
       // verification join prunes to the candidate ids' partitions
       // instead of scanning the corpus-wide shingle table
-      hs.withColumn("id_p", pmod(xxhash64(col("id")), lit(parts.toLong)))
-        .repartition(col("id_p"))
-        .write.mode(mode).partitionBy("id_p")
-        .parquet(s"$indexDir/shingles")
-      signaturesFromHashes(hs, numHashes)
-        .select(col("id"),
-          posexplode(bandKeys(col("sig"), bands, numHashes / bands))
-            .as(Seq("band", "bucket")))
-        .withColumn("bucket_p", pmod(col("bucket"), lit(parts.toLong)))
-        // one writer task per touched partition — not tasks × parts
-        // sliver files (the pathology Tables.compact exists to fix)
-        .repartition(col("bucket_p"))
-        .write.mode(mode).partitionBy("bucket_p")
-        .parquet(s"$indexDir/postings")
+      IndexStore.write(
+        hs.withColumn("id_p", pmod(xxhash64(col("id")), lit(parts.toLong))),
+        indexDir, MinhashShingles, mode)
+      IndexStore.write(signaturesFromHashes(hs, numHashes)
+          .select(col("id"),
+            posexplode(bandKeys(col("sig"), bands, numHashes / bands))
+              .as(Seq("band", "bucket")))
+          .withColumn("bucket_p", pmod(col("bucket"), lit(parts.toLong))),
+        indexDir, MinhashPostings, mode)
     } finally hs.unpersist()
   }
 
@@ -1251,10 +1251,9 @@ object Dedup {
       textCol: String, threshold: Double = 0.7,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(maxBucket >= 1, s"maxBucket ($maxBucket) must be >= 1")
-    val m = spark.read.parquet(s"$indexDir/meta").head()
-    val (k, numHashes, bands, parts) = (m.getAs[Int]("k"),
-      m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
-      m.getAs[Int]("parts"))
+    val m = IndexStore.meta(spark, indexDir)
+    val (k, numHashes, bands, parts) = (m.int("k"), m.int("num_hashes"),
+      m.int("bands"), m.int("parts"))
     val phs = Caches.spreadByKey(probeDocs, col(idCol))
       .select(col(idCol).as("probe_id"),
         hashedShingles(col(textCol), k).as("phs"))
@@ -1277,10 +1276,8 @@ object Dedup {
       // hot-bucket population and representative are computed over the
       // live index only — a tombstoned probe is exactly a probe of the
       // index rebuilt without the deleted docs (IndexDeleteSpec)
-      val postings = graft.core.Tables.antiTombstones(spark,
-          s"$indexDir/tombstones",
-          spark.read.parquet(s"$indexDir/postings")
-            .filter(col("bucket_p").isin(ps.toSeq: _*)), "id")
+      val postings = IndexStore.live(spark, indexDir, MinhashPostings,
+        Some(ps.toSeq))
       val w = Window.partitionBy("band", "bucket")
       val sized = postings
         .withColumn("__bsz", count(lit(1)).over(w))
@@ -1298,8 +1295,8 @@ object Dedup {
         val idPs = cands
           .select(pmod(xxhash64(col("index_id")), lit(parts.toLong)))
           .distinct().collect().map(_.get(0)) // bounded by `parts`
-        val ihs = spark.read.parquet(s"$indexDir/shingles")
-          .filter(col("id_p").isin(idPs.toSeq: _*))
+        val ihs = IndexStore.live(spark, indexDir, MinhashShingles,
+            Some(idPs.toSeq))
           .select(col("id").as("index_id"), col("hs").as("ihs"))
         cands.join(phs, "probe_id").join(ihs, "index_id")
           .withColumn("__i", size(array_intersect(col("phs"), col("ihs"))))
@@ -1309,67 +1306,6 @@ object Dedup {
           .select(col("probe_id"), col("index_id"),
             round(col("__j"), 4).as("jaccard"))
       }
-    }
-  }
-
-  /** Compact a materialized MinHash index's delta tail: every
-    * [[appendToMinhashIndex]] drops new parquet files into the touched
-    * `bucket_p=`/`id_p=` partition directories, so at continuous-ingest
-    * scale the file count — and with it the probe's open/footer cost —
-    * grows with append count, not data size. This folds each partition
-    * directory back to ~`targetBytes` files via [[Tables.compact]]'s
-    * atomic swap (complete rewrite staged, then renamed — a crash never
-    * loses the partition). Postings/shingle rows are pure per-document
-    * functions of the frozen meta, so compaction is a pure layout
-    * change: probe results are byte-identical before and after
-    * (DedupIndexSpec asserts it). Returns (files before, files after).
-    * The one-compactor contract is ENFORCED by
-    * [[graft.core.Tables.withMaintenanceLock]] (a second maintainer
-    * fails fast); not concurrent with a probe of the same partition. */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      Seq("postings", "shingles")
-        .map(t => graft.core.Tables.compactTable(spark, s"$indexDir/$t",
-          targetBytes))
-        .foldLeft((0, 0)) { case ((b, a), (pb, pa)) => (b + pb, a + pa) }
-    }
-
-  /** Delete documents from a materialized MinHash index WITHOUT a
-    * rebuild — the right-to-be-forgotten path at continuous-ingest
-    * scale: ids land in a small `tombstones` table (cost ∝ the delete
-    * batch), and every subsequent [[probeMinhashIndex]] drops them
-    * before candidate generation AND before the hot-bucket population
-    * count, so a tombstoned index probes exactly like one rebuilt
-    * without the deleted docs (IndexDeleteSpec asserts equality).
-    * Physical removal is deferred to [[purgeMinhashTombstones]].
-    * Delete is terminal for an id until a purge: re-appending a
-    * tombstoned id does not resurrect it (purge first, then append). */
-  def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    graft.core.Tables.appendTombstones(spark, s"$indexDir/tombstones", ids)
-
-  /** Physically remove tombstoned documents' rows from the postings
-    * and shingle tables, then clear the tombstone table — cost ∝ the
-    * AFFECTED partition directories ([[graft.core.Tables.purgeRows]]'s
-    * pruned rewrite), not the index. Probe results are identical
-    * before and after (the tombstone anti-join was already hiding the
-    * rows); what a purge buys is scan bytes and an empty tombstone
-    * broadcast. The one-maintainer contract is enforced by the same
-    * maintenance lock compaction takes; not concurrent with probes of
-    * the affected partitions. */
-  def purgeMinhashTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val tomb = s"$indexDir/tombstones"
-    val path = new org.apache.hadoop.fs.Path(tomb)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      val ids = spark.read.parquet(tomb) // read lazily; dir cleared after
-      graft.core.Tables.purgeRows(spark, s"$indexDir/postings", "id", ids)
-      graft.core.Tables.purgeRows(spark, s"$indexDir/shingles", "id", ids)
-      fs.delete(path, true)
     }
   }
 }

@@ -14,12 +14,19 @@ import graft.functions.TextFns
   *  - `postings` — (token, doc_id, tf, dl) PARTITIONED BY
   *    `tok_p = pmod(xxhash64(token), parts)`: a query's terms map to a
   *    handful of tok_p directories, collected into a LITERAL partition
-  *    filter at serve time (the [[Dedup.probeMinhashIndex]] /
-  *    [[Similarity.ivfServeTopK]] discipline);
+  *    filter at serve time ([[IndexStore.live]], the
+  *    [[Dedup.probeMinhashIndex]] / [[Similarity.ivfServeTopK]]
+  *    discipline);
   *  - `stats` — one (n_docs, sum_dl) partial row PER build/append
   *    batch: exact integer sums, so corpus-level N and avgdl are a
   *    3-row aggregate at serve time, never a corpus scan;
-  *  - `meta` — the frozen partition count.
+  *  - `meta` — the frozen partition count ([[IndexStore.Meta]]).
+  *
+  * Delete, purge and compaction are [[IndexStore]]'s. BM25 keeps only
+  * its stats correction: tombstones carry each deleted doc's length
+  * (`dl`), every serve subtracts them from N/Σdl ([[liveStats]]), and
+  * purge folds them into `stats` ([[foldTombstonesIntoStats]]) before
+  * the postings rows go.
   *
   * Unlike the IVF/PQ families there is NO drifting yardstick: postings
   * are a pure per-document function, and df/N/avgdl are recomputed at
@@ -29,6 +36,13 @@ import graft.functions.TextFns
   * (Bm25IndexSpec asserts both, byte-for-byte against t17's inline
   * formulation). */
 object SearchIndex {
+
+  /** The family name in the index meta; [[IndexStore.purge]] runs the
+    * stats fold for it. */
+  private[graft] val Family = "bm25"
+
+  private val Postings = IndexStore.Table("postings", Some("doc_id"),
+    Some("tok_p"))
 
   private def postingsRows(docs: DataFrame, idCol: String, textCol: String,
       parts: Int): DataFrame =
@@ -59,13 +73,10 @@ object SearchIndex {
       indexDir: String, parts: Int = 64): Unit = {
     require(parts >= 1, s"parts ($parts) must be >= 1")
     val spark = docs.sparkSession
-    import spark.implicits._
-    Seq(parts).toDF("parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    postingsRows(docs, idCol, textCol, parts)
-      .repartition(col("tok_p"))
-      .write.mode("overwrite").partitionBy("tok_p")
-      .parquet(s"$indexDir/postings")
+    IndexStore.create(spark, indexDir, IndexStore.Meta(Family,
+      Map("parts" -> parts.toLong), Seq(Postings), tombCols = Seq("dl")))
+    IndexStore.write(postingsRows(docs, idCol, textCol, parts), indexDir,
+      Postings, "overwrite")
     // stats WITHOUT a second tokenize pass (the corpus's most expensive
     // scan): n_docs is a tokenize-free count of the input's NON-NULL
     // texts (count(textCol) — a null-text row has no postings, so it is
@@ -90,26 +101,16 @@ object SearchIndex {
   def appendToBm25Index(spark: SparkSession, indexDir: String,
       newDocs: DataFrame, idCol: String, textCol: String): Unit =
     graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      val parts = spark.read.parquet(s"$indexDir/meta").head.getInt(0)
+      val parts = IndexStore.meta(spark, indexDir).int("parts")
       statsRow(newDocs, idCol, textCol)
         .coalesce(1).write.mode("append").parquet(s"$indexDir/stats")
-      postingsRows(newDocs, idCol, textCol, parts)
-        .repartition(col("tok_p"))
-        .write.mode("append").partitionBy("tok_p")
-        .parquet(s"$indexDir/postings")
+      IndexStore.write(postingsRows(newDocs, idCol, textCol, parts),
+        indexDir, Postings, "append")
     }
 
-  /** Serve a keyword query: top-k documents by BM25 (Lucene's variant,
-    * t17's exact arithmetic — idf = ln(1 + (N-df+0.5)/(df+0.5)),
-    * default k1 = 1.2, b = 0.75). The terms' tok_p values become a
-    * LITERAL partition filter (computed by the same xxhash64 the build
-    * used, via a 1-row local job), so the scan reads |terms| directory
-    * slivers of the postings, never the corpus; df comes exactly from
-    * the pruned rows, N/avgdl from the stats partials. Top-k plans as
-    * TakeOrderedAndProject. */
   /** Marker file inside `stats` recording the tombstone-set signature
     * whose negative partial the table already absorbed (written
-    * atomically WITH the folded data by [[purgeBm25Tombstones]]'s
+    * atomically WITH the folded data by [[foldTombstonesIntoStats]]'s
     * replaceAtomic) — how a serve in a crashed-purge window knows not
     * to subtract the same victims twice. Underscore-prefixed so the
     * parquet reader skips it. */
@@ -156,19 +157,24 @@ object SearchIndex {
         (col("__s").cast("double") / col("__n")).as("avg_len"))
   }
 
+  /** Serve a keyword query: top-k documents by BM25 (Lucene's variant,
+    * t17's exact arithmetic — idf = ln(1 + (N-df+0.5)/(df+0.5)),
+    * default k1 = 1.2, b = 0.75). The terms' tok_p values become a
+    * LITERAL partition filter (computed by the same xxhash64 the build
+    * used, via a 1-row local job), so the scan reads |terms| directory
+    * slivers of the postings, never the corpus; df comes exactly from
+    * the pruned rows, N/avgdl from the stats partials. Top-k plans as
+    * TakeOrderedAndProject. */
   def bm25Serve(spark: SparkSession, indexDir: String, terms: Seq[String],
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25Serve needs at least one term")
     import spark.implicits._
-    val parts = spark.read.parquet(s"$indexDir/meta").head.getInt(0)
+    val parts = IndexStore.meta(spark, indexDir).int("parts")
     val ps = terms.toDF("t")
       .select(pmod(xxhash64(col("t")), lit(parts.toLong)))
       .distinct().collect().map(_.getLong(0)) // bounded by |terms|
-    val tf = graft.core.Tables.antiTombstones(spark,
-        s"$indexDir/tombstones",
-        spark.read.parquet(s"$indexDir/postings")
-          .filter(col("tok_p").isin(ps.toSeq: _*))
-          .filter(col("token").isin(terms: _*)), "doc_id")
+    val tf = IndexStore.live(spark, indexDir, Postings, Some(ps.toSeq))
+      .filter(col("token").isin(terms: _*))
       .select(col("doc_id"), col("token"),
         col("tf").cast("double").as("tf"), col("dl").cast("double").as("len"))
     val stats = liveStats(spark, indexDir)
@@ -187,99 +193,16 @@ object SearchIndex {
       .orderBy(desc("score"), col("doc_id")).limit(k)
   }
 
-  /** Delete documents from the index WITHOUT a rebuild — the
-    * [[Dedup.deleteFromMinhashIndex]] contract for the lexical tier.
-    * ONE atomic write: the victims land in the `tombstones` table as
-    * (id, dl) rows — dl read from their own postings — and every serve
-    * both anti-joins the ids out of the postings AND derives the
-    * N/avgdl correction from the very same rows ([[liveStats]]). A
-    * single job commit means a crash mid-delete leaves NOTHING visible
-    * (the earlier two-write shape could crash between its stats append
-    * and its tombstone append, permanently double-subtracting stats on
-    * retry); the anti-join on the existing tombstones makes a repeat
-    * request a no-op, and an all-already-tombstoned request skips the
-    * write entirely — no garbage files, and a purged index's tombstone
-    * dir is not resurrected by a vacuous delete. The victim scan is
-    * postings-wide but column-pruned (doc_id, dl) — deletes are rare by
-    * contract, and serialize against purge/compact via the maintenance
-    * lock. Terminal until [[purgeBm25Tombstones]]. */
-  def deleteFromBm25Index(spark: SparkSession, indexDir: String,
-      ids: DataFrame): Unit =
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      // materialized BEFORE the write: the row set feeds an append INTO
-      // the tombstone table its anti-join reads. The emptiness guard is
-      // on the POSTINGS-resident victims — ids never indexed, already
-      // tombstoned, or already purged are all fully vacuous and must
-      // not write (a purged index's tombstone dir stays gone)
-      import graft.operators.Caches.EagerOps
-      val victims = broadcast(graft.core.Tables.antiTombstones(spark,
-        s"$indexDir/tombstones",
-        ids.select(col(ids.columns.head).cast("long").as("doc_id"))
-          .distinct(), "doc_id"))
-      val victimRows = spark.read.parquet(s"$indexDir/postings")
-        .join(victims, Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id")).agg(first("dl").as("dl"))
-        .select(col("doc_id").as("id"), col("dl"))
-        .eagerCheckpoint()
-      if (!victimRows.isEmpty) {
-        victimRows.coalesce(1).write.mode("append")
-          .parquet(s"$indexDir/tombstones")
-      }
-    }
-
-  /** Physically drop tombstoned docs' postings rows, fold their
-    * (count, Σdl) correction into the stats table as a lasting negative
-    * partial, and clear the tombstone table — in an order where EVERY
-    * crash window serves correctly and a re-run converges:
-    *  1. the stats fold commits atomically WITH a [[FoldedMarker]]
-    *     carrying the tombstone set's signature ([[replaceAtomic]]), so
-    *     a serve between the fold and the tombstone delete sees the
-    *     marker match and skips its usual live correction (no double
-    *     subtraction), and a re-run purge skips the fold;
-    *  2. the postings purge is idempotent ([[graft.core.Tables
-    *     .purgeRows]] — absent victims rewrite nothing); victims spread
-    *     across token partitions, so unlike the id-partitioned indexes
-    *     the rewrite typically touches most tok_p directories;
-    *  3. the tombstone dir is deleted last — until then serves keep
-    *     anti-joining ids that may or may not still have postings rows,
-    *     which is correct either way.
-    * Serves are identical before, during (any window), and after.
-    * Deletes take the same maintenance lock, so no new tombstones can
-    * slip between the signature read and the fold. */
-  def purgeBm25Tombstones(spark: SparkSession, indexDir: String): Unit = {
-    val tomb = s"$indexDir/tombstones"
-    val path = new org.apache.hadoop.fs.Path(tomb)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/stats",
-      FoldedMarker)
-    if (!fs.exists(path)) {
-      // a purge that crashed between its tombstone delete and its
-      // marker delete left a STALE marker; a later delete of a set with
-      // the same signature would silently skip both its serve-time
-      // correction and its fold — clear the residue before returning
-      graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-        fs.delete(marker, false); ()
-      }
-      return
-    }
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      foldTombstonesIntoStats(spark, indexDir)
-      graft.core.Tables.purgeRows(spark, s"$indexDir/postings", "doc_id",
-        spark.read.parquet(tomb).select(col("id")))
-      fs.delete(path, true)
-      // 4. the marker's job ends with the tombstones: with the dir gone
-      // no serve consults it, and leaving it would shadow the NEXT
-      // delete's fold if that set's signature collides (same docs
-      // re-deleted after a re-append)
-      fs.delete(marker, false); ()
-    }
-  }
-
-  /** Step 1 of [[purgeBm25Tombstones]], visible to the crash-window
-    * spec: fold the live tombstones' negative partial into stats,
-    * committing the set signature atomically with the data. Skips when
-    * the marker says this exact set is already absorbed (the re-run /
-    * crashed-purge path). */
+  /** BM25's purge step, run by [[IndexStore.purge]] under its lock
+    * before the postings rows go, in an order where EVERY crash window
+    * serves correctly and a re-run converges: this fold commits the
+    * tombstones' negative (count, Σdl) partial atomically WITH a
+    * [[FoldedMarker]] carrying the set's signature
+    * ([[graft.core.Tables.replaceAtomic]]), so a serve between the fold
+    * and the tombstone delete sees the marker match and skips its live
+    * correction (no double subtraction), and a re-run skips the fold.
+    * Deletes take the same lock, so no tombstone can slip between the
+    * signature read and the fold. */
   private[graft] def foldTombstonesIntoStats(spark: SparkSession,
       indexDir: String): Unit = {
     val toms = spark.read.parquet(s"$indexDir/tombstones")
@@ -294,14 +217,16 @@ object SearchIndex {
     }
   }
 
-  /** Fold the append-file pile back to target-size files per tok_p
-    * partition — [[graft.core.Tables.compactTable]]'s staged atomic
-    * swaps, under the same maintenance lock the other index families
-    * take. Pure layout change; serves are identical before and after. */
-  def compactBm25Index(spark: SparkSession, indexDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      graft.core.Tables.compactTable(spark, s"$indexDir/postings",
-        targetBytes)
-    }
+  /** Drop the fold marker once the tombstones are gone ([[IndexStore
+    * .purge]]'s last step, also clearing the residue of a purge that
+    * crashed between the two deletes): a stale marker would shadow the
+    * NEXT delete's correction and fold when that set's signature
+    * collides (same docs re-deleted after a re-append). */
+  private[graft] def dropFoldedMarker(spark: SparkSession,
+      indexDir: String): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/stats",
+      FoldedMarker)
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(marker, false)
+  }
 }

@@ -193,9 +193,7 @@ object Similarity {
     * at most once, so this inline path skips the (query, neighbor)
     * max-dedup the served path performs (append epochs can re-add an
     * id there). A frame with duplicated ids therefore ranks each copy
-    * separately — set `spark.graft.lsh.dedupCandidates=true` to
-    * max-collapse duplicates instead (LshHotBucketSpec pins both
-    * behaviors). */
+    * separately. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
@@ -447,44 +445,36 @@ object Similarity {
     // and the merge-on-read union then carries that id twice — the
     // serve doc relies on this collapse); the inline tier skips it
     // under the same id contract every index build enforces
-    // (requireIntegralId / one-row-per-id), overridable with
-    // spark.graft.lsh.dedupCandidates=true for arbitrary frames with
-    // duplicated ids (duplicates then max-collapse instead of ranking
-    // twice; LshHotBucketSpec pins both behaviors).
-    val dedup = forceDedup || scala.util.Try(rawBucketed.sparkSession.conf
-      .get("spark.graft.lsh.dedupCandidates", "false").toBoolean)
-      .getOrElse(false)
+    // (requireIntegralId / one-row-per-id).
     val scored =
-      if (dedup)
+      if (forceDedup)
         scoredRaw.groupBy("query_id", "neighbor_id").agg(max("sim").as("sim"))
       else scoredRaw
     cosineRank(scored, k)
   }
 
-  /** Materialize the LSH index: a 1-row meta table freezing
-    * (num_planes, dim, seed) — serve and append must replay the
-    * IDENTICAL hyperplanes — plus the bucketed corpus PARTITIONED BY
-    * bucket, so serving scans only the probed bucket= directories.
-    * Partition count is ≤ 2^numPlanes; keep numPlanes modest (≤ ~12)
-    * or the directory fan-out outgrows the filesystem's comfort. Unlike
-    * IVF/PQ there is no data-dependent yardstick: the hyperplanes are
-    * seed-determined, so [[appendToLshIndex]] is ALWAYS exactly
-    * equivalent to a one-shot build (LshIndexSpec asserts it). */
+  /** The LSH index's growable table: the bucketed corpus PARTITIONED
+    * BY bucket, so serving scans only the probed bucket= directories. */
+  private val LshBucketed = IndexStore.Table("bucketed",
+    Some("neighbor_id"), Some("bucket"))
+
+  /** Materialize the LSH index: meta freezing (num_planes, dim, seed) —
+    * serve and append must replay the IDENTICAL hyperplanes — plus the
+    * bucketed corpus. Partition count is ≤ 2^numPlanes; keep numPlanes
+    * modest (≤ ~12) or the directory fan-out outgrows the filesystem's
+    * comfort. Unlike IVF/PQ there is no data-dependent yardstick: the
+    * hyperplanes are seed-determined, so [[appendToLshIndex]] is ALWAYS
+    * exactly equivalent to a one-shot build (LshIndexSpec asserts it). */
   def buildLshIndex(corpus: DataFrame, idCol: String, vecCol: String,
       indexDir: String, numPlanes: Int = 8, dim: Int = 64,
       seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     requireIntegralId(corpus, idCol, "buildLshIndex")
-    Seq((numPlanes, dim, seed)).toDF("num_planes", "dim", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    // one writer task per bucket — same small-file discipline as the
-    // IVF inverted file
-    lshBucketed(corpus, idCol, vecCol, numPlanes, dim, seed)
-      .withColumn("neighbor_id", col("neighbor_id").cast("long"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/bucketed")
+    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("lsh",
+      Map("num_planes" -> numPlanes.toLong, "dim" -> dim.toLong,
+        "seed" -> seed), Seq(LshBucketed)))
+    IndexStore.write(lshBucketed(corpus, idCol, vecCol, numPlanes, dim, seed)
+        .withColumn("neighbor_id", col("neighbor_id").cast("long")),
+      indexDir, LshBucketed, "overwrite")
   }
 
   /** The materialized index tiers store ids as LONG (the delta epochs
@@ -508,10 +498,8 @@ object Similarity {
   def appendToLshIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, newVecs: DataFrame, idCol: String,
       vecCol: String): Unit =
-    bucketWithFrozenMeta(spark, indexDir, newVecs, idCol, vecCol)
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$indexDir/bucketed")
+    IndexStore.write(bucketWithFrozenMeta(spark, indexDir, newVecs, idCol,
+      vecCol), indexDir, LshBucketed, "append")
 
   /** Bucket vectors with an EXISTING index's frozen (num_planes, dim,
     * seed) — the shared step behind [[appendToLshIndex]] and the
@@ -520,9 +508,9 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       newVecs: DataFrame, idCol: String, vecCol: String): DataFrame = {
     requireIntegralId(newVecs, idCol, "appendToLshIndex")
-    val m = spark.read.parquet(s"$indexDir/meta").head()
+    val m = IndexStore.meta(spark, indexDir)
     lshBucketed(newVecs, idCol, vecCol,
-        m.getAs[Int]("num_planes"), m.getAs[Int]("dim"), m.getAs[Long]("seed"))
+        m.int("num_planes"), m.int("dim"), m.params("seed"))
       .withColumn("neighbor_id", col("neighbor_id").cast("long"))
   }
 
@@ -530,115 +518,28 @@ object Similarity {
     * identical results to the inline [[lshTopK]] over the same corpus
     * (LshIndexSpec asserts it). The probed buckets are collected
     * (bounded by |Q|·(numPlanes+1)) into a LITERAL partition filter, so
-    * the scan statically prunes to the probed bucket= directories. */
+    * the scan statically prunes to the probed bucket= directories.
+    * [[IndexStore.live]] merges the streaming delta tail
+    * ([[graft.streaming.StreamIndexAppend]]'s epochs): delta rows are
+    * the same pure per-vector function as the base, so the union serves
+    * exactly like a one-shot build over everything ingested. */
   def lshServeTopK(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    val m = spark.read.parquet(s"$indexDir/meta").head()
+    val m = IndexStore.meta(spark, indexDir)
     val probes = lshProbes(queries, idCol, vecCol,
-        m.getAs[Int]("num_planes"), m.getAs[Int]("dim"), m.getAs[Long]("seed"))
+        m.int("num_planes"), m.int("dim"), m.params("seed"))
       .eagerCheckpoint()
     val buckets = probes.select("bucket").distinct().collect().map(_.get(0))
-    def bucketRows(path: String) =
-      spark.read.parquet(path)
-        .filter(col("bucket").isin(buckets.toSeq: _*))
-        // partition-column inference may narrow the written long; restore
-        // the join key's type
-        .select(col("neighbor_id"), col("v"), col("vn"),
-          col("bucket").cast("long").as("bucket"))
-    // merge-on-read over the streaming delta tail
-    // ([[graft.streaming.StreamIndexAppend]]'s batch=<id> epochs): delta
-    // rows are the same pure per-vector function as the base, so the
-    // union serves exactly like a one-shot build over everything
-    // ingested — and an id present in both tiers collapses in
-    // lshSearch's candidate dedup. Probed-bucket partition pruning
-    // applies to both trees. The delta read carries an EXPLICIT schema:
-    // a deltas dir whose only epoch crashed mid-write (nothing but
-    // _temporary inside) must serve as zero delta rows, not kill every
-    // serve with a schema-inference failure.
-    val deltasPath = new org.apache.hadoop.fs.Path(s"$indexDir/deltas")
-    val fs = deltasPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def deltaRows(path: String) =
-      spark.read.schema(LshBucketedSchema).parquet(path)
-        .filter(col("bucket").isin(buckets.toSeq: _*))
-        .select(col("neighbor_id"), col("v"), col("vn"), col("bucket"))
-    val rows =
-      if (fs.exists(deltasPath))
-        bucketRows(s"$indexDir/bucketed")
-          .unionByName(deltaRows(s"$indexDir/deltas"))
-      else bucketRows(s"$indexDir/bucketed")
-    val bucketed = graft.core.Tables.antiTombstones(spark,
-      s"$indexDir/tombstones", rows, "neighbor_id")
+    val bucketed = IndexStore.live(spark, indexDir, LshBucketed,
+        Some(buckets.toSeq))
+      // partition-column inference may narrow the written long; restore
+      // the join key's type
+      .select(col("neighbor_id"), col("v"), col("vn"),
+        col("bucket").cast("long").as("bucket"))
     // forceDedup: an id present in base AND a delta epoch must collapse
     lshSearch(bucketed, probes, k, forceDedup = true)
   }
-
-  /** The bucketed/delta row schema, explicit so reads of a dir holding
-    * only uncommitted write leftovers return zero rows instead of
-    * failing schema inference. `bucket` doubles as the partition
-    * column. */
-  private val LshBucketedSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "neighbor_id LONG, v ARRAY<DOUBLE>, vn DOUBLE, bucket LONG, batch LONG")
-
-  /** Fold the streaming delta tail ([[graft.streaming.StreamIndexAppend]])
-    * into the settled `bucketed` tree: read base ∪ deltas, rewrite the
-    * base COMPLETE to a temp sibling, atomically swap it over, then drop
-    * the delta epochs — the [[graft.operators.TokenIndex.compact]]
-    * crash-safety discipline (the settled dir is never truncated before
-    * its replacement exists). Only the epochs LISTED AT ENTRY are folded
-    * and deleted: a live streaming writer may commit new epochs during
-    * the fold, and deleting the whole tree would silently drop them
-    * forever (their checkpoint already advanced, so they never replay).
-    * Served results are identical before and after (LshIndexSpec asserts
-    * it); compaction buys back the per-probe delta-tree listing cost,
-    * which is the read amplification continuous ingest accumulates.
-    * One-maintainer contract via the lock. */
-  def compactLshDeltas(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit =
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      val deltas = new org.apache.hadoop.fs.Path(s"$indexDir/deltas")
-      val target = new org.apache.hadoop.fs.Path(s"$indexDir/bucketed")
-      val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/bucketed.compacting")
-      val old = new org.apache.hadoop.fs.Path(s"$indexDir/bucketed.old")
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a crash between the two renames left no settled tree — restore
-      // the backup and fold again (the staged tmp is discarded below)
-      graft.core.Tables.recoverSwap(fs, target, old)
-      val epochs =
-        if (!fs.exists(deltas)) Array.empty[org.apache.hadoop.fs.Path]
-        else fs.listStatus(deltas).filter(_.isDirectory)
-          .map(_.getPath).filter(_.getName.startsWith("batch="))
-      if (epochs.nonEmpty) {
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        val base = spark.read.parquet(target.toString)
-          .select(col("neighbor_id"), col("v"), col("vn"),
-            col("bucket").cast("long").as("bucket"))
-        val tail = spark.read.schema(LshBucketedSchema)
-          .parquet(deltas.toString)
-          .filter(col("batch").isin(
-            epochs.map(_.getName.stripPrefix("batch=").toLong).toIndexedSeq: _*))
-          .select(col("neighbor_id"), col("v"), col("vn"), col("bucket"))
-        // dropDuplicates makes the fold idempotent: a crash after the
-        // swap but before the delta delete re-folds rows the new base
-        // already holds (ids are unique by the append contract, so the
-        // dedup can never merge two genuinely different vectors)
-        base.unionByName(tail)
-          .dropDuplicates("neighbor_id")
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-        if (fs.exists(old)) fs.delete(old, true)
-        if (!fs.rename(target, old))
-          throw new java.io.IOException(
-            s"compact could not move $target aside")
-        if (!fs.rename(tmp, target)) {
-          fs.rename(old, target) // roll back — the settled tree survives
-          throw new java.io.IOException(s"compact swap failed for $target")
-        }
-        fs.delete(old, true)
-        epochs.foreach(e => fs.delete(e, true))
-        if (fs.listStatus(deltas).isEmpty) fs.delete(deltas, true)
-      }
-    }
 
   /** IVF (inverted-file) ANN — the other classic scale path beside LSH.
     *
@@ -711,16 +612,22 @@ object Similarity {
       .select(col(idCol).as("neighbor_id") +: attrCols.map(col) :+
         asDouble(col(vecCol)).as("v") :+
         l2Norm(asDouble(col(vecCol))).as("vn"): _*)
-    // tiny (nCentroids rows) but referenced by build AND search side:
-    // materialize once so the corpus isn't scanned twice for it —
-    // driver-resident (localize), so each consumer's broadcast builds
-    // from driver memory with no executeCollect job
-    val centroids = Caches.localize(md5Sample(c, "neighbor_id", nCentroids)
-      .select(col("neighbor_id").as("cid"), col("v").as("cv"),
-        col("vn").as("cn")))
+    val centroids = ivfCentroids(md5Sample(c, "neighbor_id", nCentroids),
+      nCentroids)
     // single consumer (the probe join or the index write) — no cache
     (centroids, assignToCentroids(c, centroids))
   }
+
+  /** The (cid, cv, cn) centroid table from an already-drawn
+    * (neighbor_id, v, vn) sample. Tiny (nCentroids rows) but referenced
+    * by build AND search side: materialize once so the corpus isn't
+    * scanned twice for it — driver-resident (localize), so each
+    * consumer's broadcast builds from driver memory with no
+    * executeCollect job. A sample above `nCentroids` rows fails here. */
+  private[graft] def ivfCentroids(sample: DataFrame,
+      nCentroids: Int): DataFrame =
+    Caches.localize(sample.select(col("neighbor_id").as("cid"),
+      col("v").as("cv"), col("vn").as("cn")), nCentroids)
 
   /** Nearest-centroid (cosine, tie by cid) assignment of a prepared
     * (neighbor_id, v, vn) frame against a broadcast centroid table —
@@ -770,6 +677,10 @@ object Similarity {
           nullif(col("qn") * col("vn"), lit(0.0))),
       k)
 
+  /** The IVF index's growable table: the assignment lists. */
+  private val IvfAssigned = IndexStore.Table("assigned",
+    Some("neighbor_id"), Some("cid"))
+
   /** Materialize the IVF index: the centroid table plus the assignment
     * lists written PARTITIONED BY centroid id — build once per corpus
     * version, serve many. The cid-directory layout is the on-disk form
@@ -779,15 +690,12 @@ object Similarity {
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       indexDir: String, nCentroids: Int = 16,
       attrCols: Seq[String] = Nil): Unit = {
+    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("ivf",
+      Map("n_centroids" -> nCentroids.toLong), Seq(IvfAssigned)))
     val (centroids, assigned) =
       ivfBuild(corpus, idCol, vecCol, nCentroids, attrCols)
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    // one writer task per list — without this, every upstream task
-    // writes a sliver into every cid= directory (tasks × lists small
-    // files, the pathology Tables.compact exists to fix)
-    assigned.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$indexDir/assigned")
+    IndexStore.write(assigned, indexDir, IvfAssigned, "overwrite")
   }
 
   /** Append NEW vectors to a materialized IVF index WITHOUT rebuilding —
@@ -814,10 +722,8 @@ object Similarity {
       .select(col(idCol).as("neighbor_id") +: attrCols.map(col) :+
         asDouble(col(vecCol)).as("v") :+
         l2Norm(asDouble(col(vecCol))).as("vn"): _*)
-    assignToCentroids(c, centroids)
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$indexDir/assigned")
+    IndexStore.write(assignToCentroids(c, centroids), indexDir, IvfAssigned,
+      "append")
   }
 
   /** Serve ANN queries from a [[buildIvfIndex]]-materialized index —
@@ -841,13 +747,9 @@ object Similarity {
     // partition filter, so a filtered serve reads nProbe/nCentroids of
     // the index bytes and row-group-skips off-attr rows — never
     // post-filters a scored candidate set
-    val assigned0 = spark.read.parquet(s"$indexDir/assigned")
-    val assigned = graft.core.Tables.antiTombstones(spark,
-      s"$indexDir/tombstones",
-      where.fold(assigned0)(assigned0.filter)
-        .filter(col("cid").isin(cids.toSeq: _*))
-        .select(col("neighbor_id"), col("v"), col("vn"), col("cid")),
-      "neighbor_id")
+    val live = IndexStore.live(spark, indexDir, IvfAssigned, Some(cids.toSeq))
+    val assigned = where.fold(live)(live.filter)
+      .select(col("neighbor_id"), col("v"), col("vn"), col("cid"))
     ivfSearch(probes, assigned, k)
   }
 
@@ -870,7 +772,8 @@ object Similarity {
     // (localize): both consumers broadcast it with no build job, where
     // the checkpoint form paid one executeCollect job per broadcast
     val centroids = Caches.localize(md5Sample(c, "id", nCentroids)
-      .select(col("id").as("cid"), col("v").as("cv"), col("vn").as("cn")))
+      .select(col("id").as("cid"), col("v").as("cv"), col("vn").as("cn")),
+      nCentroids)
     val wAssign = Window.partitionBy("id").orderBy(col("csim").desc, col("cid"))
     val assigned = c.crossJoin(broadcast(centroids))
       .withColumn("csim", dot(col("v"), col("cv")) /
@@ -965,7 +868,7 @@ object Similarity {
     // so the oracle replay and ReliableCheckpointSpec's mode matrix
     // hold unchanged.
     var cents = Caches.localize(md5Sample(c, "id", k)
-      .select(col("id").as("cid"), col("v").as("cv"), col("vn").as("cn")))
+      .select(col("id").as("cid"), col("v").as("cv"), col("vn").as("cn")), k)
     // per-iteration state is the k-row centroid table: the same
     // broadcast-regime loop shape as pageRank/CC/BFS, so the same
     // iteration conf applies — AQE off (one job per checkpoint instead
@@ -986,7 +889,8 @@ object Similarity {
       for (_ <- 1 to iters) {
         // localize IS the iteration's one materializing action; the
         // superseded state needs no release (driver rows, no blocks)
-        cents = Caches.localize(kmeansUpdate(cents, kmeansAssign(c, cents), dim))
+        cents = Caches.localize(
+          kmeansUpdate(cents, kmeansAssign(c, cents), dim), k)
       }
     }
     cents
@@ -1188,13 +1092,14 @@ object Similarity {
       nCodes: Int): DataFrame =
     pqCodebookFromSample(
       md5Sample(c, "id", nCodes)
-        .select(col("id").as("cid"), col("v").as("cv")), m, dsub)
+        .select(col("id").as("cid"), col("v").as("cv")), m, dsub, nCodes)
 
-  /** Subspace-explode an already-sampled (cid, cv) seed table into the
-    * codebook — split out so [[ivfPqBuild]] can reuse ONE corpus sample
-    * for both yardsticks when the sizes coincide. */
+  /** Subspace-explode an already-sampled (cid, cv) seed table of at most
+    * `nCodes` rows into the codebook — split out so [[ivfPqBuild]] can
+    * reuse ONE corpus sample for both yardsticks when the sizes
+    * coincide. */
   private def pqCodebookFromSample(sample: DataFrame, m: Int,
-      dsub: Int): DataFrame = {
+      dsub: Int, nCodes: Int): DataFrame = {
     // rank once (the sampled id set is the same in every subspace), so
     // cidx is "position of cid among the sampled ids" everywhere
     val wIdx = Window.orderBy(col("cid")) // nCodes rows: fine unpartitioned
@@ -1208,7 +1113,7 @@ object Similarity {
         col("cid"), col("cidx"), col("cv"))
       .withColumn("cs", slice(col("cv"), col("j") * dsub + 1, lit(dsub)))
       .select(col("j"), col("cid"), col("cidx"), col("cs"),
-        dot(col("cs"), col("cs")).as("csq")))
+        dot(col("cs"), col("cs")).as("csq")), m * nCodes)
   }
 
   /** Encode every corpus vector as its `m` nearest-subvector code
@@ -1434,6 +1339,9 @@ object Similarity {
     cosineRank(scored, k)
   }
 
+  /** The PQ index's growable table: flat codes, scanned whole. */
+  private val PqCodes = IndexStore.Table("codes", Some("id"), None)
+
   /** Materialize the PQ index: codebook (m·nCodes subvector entries)
     * plus the codes table — (id, m small ints) per corpus vector, the
     * 32×-compressed scan target. Build once per corpus version, serve
@@ -1441,11 +1349,14 @@ object Similarity {
   def buildPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       indexDir: String, m: Int = 8, dsub: Int = 8,
       nCodes: Int = 16): Unit = {
+    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("pq",
+      Map("m" -> m.toLong, "dsub" -> dsub.toLong, "n_codes" -> nCodes.toLong),
+      Seq(PqCodes)))
     val c = pqPrepare(requirePqDim(corpus, vecCol, m, dsub), idCol, vecCol)
     val codebook = pqCodebook(c, m, dsub, nCodes)
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
-    pqEncodeAgainst(c, codebook, m, dsub)
-      .write.mode("overwrite").parquet(s"$indexDir/codes")
+    IndexStore.write(pqEncodeAgainst(c, codebook, m, dsub), indexDir, PqCodes,
+      "overwrite")
   }
 
   /** Append NEW vectors to a materialized PQ index without rebuilding —
@@ -1460,9 +1371,9 @@ object Similarity {
       vecCol: String): Unit = {
     val codebook = spark.read.parquet(s"$indexDir/codebook")
     val (m, dsub, _) = pqMeta(codebook)
-    pqEncodeAgainst(pqPrepare(requirePqDim(newVecs, vecCol, m, dsub),
-        idCol, vecCol), codebook, m, dsub)
-      .write.mode("append").parquet(s"$indexDir/codes")
+    IndexStore.write(pqEncodeAgainst(pqPrepare(
+        requirePqDim(newVecs, vecCol, m, dsub), idCol, vecCol),
+      codebook, m, dsub), indexDir, PqCodes, "append")
   }
 
   /** Serve ANN queries from a [[buildPqIndex]]-materialized index —
@@ -1474,9 +1385,7 @@ object Similarity {
       k: Int): DataFrame = {
     val codebook = spark.read.parquet(s"$indexDir/codebook")
     val (m, dsub, nCodes) = pqMeta(codebook)
-    pqAdcSearch(
-      graft.core.Tables.antiTombstones(spark, s"$indexDir/tombstones",
-        spark.read.parquet(s"$indexDir/codes"), "id"),
+    pqAdcSearch(IndexStore.live(spark, indexDir, PqCodes),
       pqLuts(queries, codebook, idCol, vecCol, m, dsub, nCodes), k, m, nCodes)
   }
 
@@ -1523,7 +1432,7 @@ object Similarity {
     val c = Caches.spreadByKey(corpus, col(idCol))
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"),
         l2Norm(asDouble(col(vecCol))).as("vn"))
-    val sample = Caches.localize(md5Sample(c, "id", nCentroids))
+    val sample = Caches.localize(md5Sample(c, "id", nCentroids), nCentroids)
     val centroids = sample
       .select(col("id").as("cid"), col("v").as("cv"), col("vn").as("cn"))
     // at the (default) nCentroids == nCodes the two yardsticks are the
@@ -1531,7 +1440,8 @@ object Similarity {
     val codebook =
       if (nCodes == nCentroids)
         pqCodebookFromSample(
-          sample.select(col("id").as("cid"), col("v").as("cv")), m, dsub)
+          sample.select(col("id").as("cid"), col("v").as("cv")), m, dsub,
+          nCodes)
       else pqCodebook(c.select(col("id"), col("v")), m, dsub, nCodes)
     val codes = pqEncodeAgainst(c.select(col("id"), col("v")),
         codebook, m, dsub)
@@ -1552,6 +1462,9 @@ object Similarity {
         .join(broadcast(luts), "query_id"),
       k, m, nCodes)
 
+  /** The IVF-PQ index's growable table: the compressed inverted file. */
+  private val IvfPqCodes = IndexStore.Table("codes", Some("id"), Some("cid"))
+
   /** Materialize the IVF-PQ index: centroids + codebook (both tiny) and
     * the compressed inverted file, PARTITIONED BY cid — serving scans
     * nProbe partition directories of m-byte codes, the smallest
@@ -1559,14 +1472,15 @@ object Similarity {
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       indexDir: String, nCentroids: Int = 16,
       m: Int = 8, dsub: Int = 8, nCodes: Int = 16): Unit = {
+    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("ivfpq",
+      Map("n_centroids" -> nCentroids.toLong, "m" -> m.toLong,
+        "dsub" -> dsub.toLong, "n_codes" -> nCodes.toLong), Seq(IvfPqCodes)))
     val (centroids, codebook, codes) =
       ivfPqBuild(requirePqDim(corpus, vecCol, m, dsub),
         idCol, vecCol, nCentroids, m, dsub, nCodes)
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
-    codes.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$indexDir/codes")
+    IndexStore.write(codes, indexDir, IvfPqCodes, "overwrite")
   }
 
   /** Append NEW vectors to a materialized IVF-PQ index without
@@ -1586,14 +1500,13 @@ object Similarity {
       requirePqDim(newVecs, vecCol, m, dsub), col(idCol))
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"),
         l2Norm(asDouble(col(vecCol))).as("vn"))
-    pqEncodeAgainst(c.select(col("id"), col("v")), codebook, m, dsub)
-      .join(assignToCentroids(
-          c.select(col("id").as("neighbor_id"), col("v"), col("vn")),
-          centroids)
-        .select(col("neighbor_id").as("id"), col("cid")), "id")
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$indexDir/codes")
+    IndexStore.write(
+      pqEncodeAgainst(c.select(col("id"), col("v")), codebook, m, dsub)
+        .join(assignToCentroids(
+            c.select(col("id").as("neighbor_id"), col("v"), col("vn")),
+            centroids)
+          .select(col("neighbor_id").as("id"), col("cid")), "id"),
+      indexDir, IvfPqCodes, "append")
   }
 
   /** Serve from a [[buildIvfPqIndex]] index — bit-identical to the
@@ -1609,11 +1522,8 @@ object Similarity {
     val probes = ivfProbes(centroids, queries, idCol, vecCol, nProbe)
       .eagerCheckpoint()
     val cids = probes.select("cid").distinct().collect().map(_.get(0))
-    val codes = graft.core.Tables.antiTombstones(spark,
-      s"$indexDir/tombstones",
-      spark.read.parquet(s"$indexDir/codes")
-        .filter(col("cid").isin(cids.toSeq: _*))
-        .select(col("id"), col("codes"), col("cid")), "id")
+    val codes = IndexStore.live(spark, indexDir, IvfPqCodes, Some(cids.toSeq))
+      .select(col("id"), col("codes"), col("cid"))
     ivfPqSearch(codes, probes,
       pqLuts(queries, codebook, idCol, vecCol, m, dsub, nCodes),
       k, m, nCodes)
@@ -1943,75 +1853,6 @@ object Similarity {
       clique.unionByName(star)
         .filter(col("sim") >= threshold)
         .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
-    }
-  }
-
-  /** Compact the growable tables of any materialized ANN index
-    * (LSH `bucketed`, IVF `assigned`, PQ / IVF-PQ `codes`): every
-    * append drops new files into the touched partition (or flat)
-    * directory, so at continuous-ingest scale the file count — and the
-    * serve path's open/footer cost — grows with append count. This
-    * folds each back to ~target-size files via
-    * [[graft.core.Tables.compactTable]]'s staged-rewrite-then-rename
-    * swap (a crash never loses a partition). Pure layout change:
-    * served results are identical before and after
-    * (IndexCompactionSpec asserts it per family). The frozen
-    * `meta`/`centroids`/`codebook` yardsticks are overwrite-only and
-    * never pile up — untouched. Returns (files before, files after).
-    * The one-compactor contract is enforced by
-    * [[graft.core.Tables.withMaintenanceLock]] (a second maintainer
-    * fails fast); not concurrent with a serve of the same partition. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      Seq("bucketed", "assigned", "codes")
-        .map(t => graft.core.Tables.compactTable(spark, s"$indexDir/$t",
-          targetBytes))
-        .foldLeft((0, 0)) { case ((b, a), (pb, pa)) => (b + pb, a + pa) }
-    }
-
-  /** Delete vectors from any materialized ANN index (LSH / IVF / PQ /
-    * IVF-PQ) WITHOUT a rebuild — the right-to-be-forgotten path: ids
-    * land in a small `tombstones` table and every serve drops them
-    * before scoring, so a tombstoned index serves exactly like one
-    * whose deleted vectors were never appended (IndexDeleteSpec asserts
-    * per-family equality — exact because the centroid/codebook/plane
-    * yardsticks are frozen at build time and never derived from the
-    * deleted rows' presence). Physical removal is deferred to
-    * [[purgeIndexTombstones]]; delete is terminal for an id until a
-    * purge (re-append after purge to resurrect). */
-  def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    graft.core.Tables.appendTombstones(spark, s"$indexDir/tombstones", ids)
-
-  /** Physically remove tombstoned vectors from whichever growable
-    * table this index family has (`bucketed`/`assigned` key on
-    * `neighbor_id`, `codes` on `id`), then clear the tombstone table —
-    * cost ∝ the affected partition directories
-    * ([[graft.core.Tables.purgeRows]]), not the index. Serve results
-    * are identical before and after; the purge buys back scan bytes.
-    * The one-maintainer contract is enforced by the maintenance lock;
-    * not concurrent with serves of the affected partitions. */
-  def purgeIndexTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val tomb = s"$indexDir/tombstones"
-    val path = new org.apache.hadoop.fs.Path(tomb)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    // fold any streaming delta epochs into the base FIRST (its own
-    // lock; no-op for index families without a deltas tree): a deleted
-    // vector still sitting in an un-compacted delta would survive the
-    // base-table purge below and resurrect once the tombstones are
-    // cleared
-    compactLshDeltas(spark, indexDir)
-    graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      val ids = spark.read.parquet(tomb) // read lazily; dir cleared after
-      Seq("bucketed" -> "neighbor_id", "assigned" -> "neighbor_id",
-          "codes" -> "id")
-        .foreach { case (t, idc) =>
-          graft.core.Tables.purgeRows(spark, s"$indexDir/$t", idc, ids) }
-      fs.delete(path, true)
     }
   }
 }

@@ -19,10 +19,12 @@ import graft.functions.TextFns
   * sum-merges deltas on read (a dictionary-scale aggregate). Nightly
   * maintenance therefore costs ∝ increment; a periodic [[compact]]
   * rewrite folds accumulated deltas back to one row per (source,
-  * token) when the delta tail grows. At 100 TB the corpus tokenize is
-  * the single most expensive text pass there is — this index is how
-  * t39/t08-class questions get answered daily without paying it
-  * daily. */
+  * token) when the delta tail grows. The dir's meta and layout are
+  * [[IndexStore]]'s, so [[IndexStore.compact]] folds its file pile
+  * like any index's; the counts are not id-keyed, so there is nothing
+  * to tombstone. At 100 TB the corpus tokenize is the single most
+  * expensive text pass there is — this index is how t39/t08-class
+  * questions get answered daily without paying it daily. */
 object TokenIndex {
 
   private[graft] def counts(docs: DataFrame, idCol: String, textCol: String,
@@ -32,12 +34,19 @@ object TokenIndex {
         explode(TextFns.tokens(col(textCol))).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("cnt"))
 
+  /** The one growable table: (source, token, cnt) delta rows, not
+    * id-keyed — counts are deleted by re-counting, never by id. */
+  private val TokenStats = IndexStore.Table("token_stats", None, None)
+
   /** Build the index from scratch: one tokenize, one dictionary-scale
     * shuffle, one parquet write. */
   def buildTokenStats(docs: DataFrame, idCol: String, textCol: String,
-      srcCol: String, indexDir: String): Unit =
-    counts(docs, idCol, textCol, srcCol)
-      .write.mode("overwrite").parquet(s"$indexDir/token_stats")
+      srcCol: String, indexDir: String): Unit = {
+    IndexStore.create(docs.sparkSession, indexDir,
+      IndexStore.Meta("token", Map.empty, Seq(TokenStats)))
+    IndexStore.write(counts(docs, idCol, textCol, srcCol), indexDir,
+      TokenStats, "overwrite")
+  }
 
   /** Append an increment's counts as delta rows — tokenizes ONLY
     * `newDocs`; the settled index is untouched. Takes the index's
@@ -47,8 +56,8 @@ object TokenIndex {
   def appendTokenStats(newDocs: DataFrame, idCol: String, textCol: String,
       srcCol: String, indexDir: String): Unit =
     graft.core.Tables.withMaintenanceLock(newDocs.sparkSession, indexDir) {
-      counts(newDocs, idCol, textCol, srcCol)
-        .write.mode("append").parquet(s"$indexDir/token_stats")
+      IndexStore.write(counts(newDocs, idCol, textCol, srcCol), indexDir,
+        TokenStats, "append")
     }
 
   /** The merged view: sum delta rows per (source, token). Exactly the
@@ -58,43 +67,20 @@ object TokenIndex {
     * without it every serve after such a crash would fail on the
     * missing settled dir until a compact was manually re-run. */
   def tokenStats(spark: SparkSession, indexDir: String): DataFrame = {
-    val target = new org.apache.hadoop.fs.Path(s"$indexDir/token_stats")
-    val old = new org.apache.hadoop.fs.Path(s"$indexDir/token_stats.old")
-    graft.core.Tables.recoverSwap(
-      target.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      target, old)
+    graft.core.Tables.recoverReplaceAtomic(spark, s"$indexDir/token_stats")
     spark.read.parquet(s"$indexDir/token_stats")
       .groupBy("source", "token").agg(sum("cnt").as("cnt"))
   }
 
   /** Fold accumulated deltas back to one row per key (run when the
     * delta tail grows past taste; serving is correct either way).
-    *
-    * Crash-safe by construction: the merged table is written COMPLETE
-    * to a temp sibling and only then renamed over the settled dir — the
-    * earlier read-then-overwrite-in-place shape (via localCheckpoint)
-    * could lose the whole index if an executor died mid-overwrite,
-    * after the target had already been truncated. The settled dir is
-    * never truncated before its replacement exists on disk. */
+    * Crash-safe through [[graft.core.Tables.replaceAtomic]]: the merged
+    * table is staged complete before the settled dir moves, and a
+    * re-run is a pure re-merge, idempotent. */
   def compact(spark: SparkSession, indexDir: String): Unit =
     graft.core.Tables.withMaintenanceLock(spark, indexDir) {
-      val target = new org.apache.hadoop.fs.Path(s"$indexDir/token_stats")
-      val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/token_stats.compacting")
-      val old = new org.apache.hadoop.fs.Path(s"$indexDir/token_stats.old")
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a crash between the two renames left no settled table — restore
-      // the backup and re-merge (a re-run is a pure re-merge, idempotent)
-      graft.core.Tables.recoverSwap(fs, target, old)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      tokenStats(spark, indexDir).write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(old)) fs.delete(old, true)
-      if (!fs.rename(target, old))
-        throw new java.io.IOException(s"compact could not move $target aside")
-      if (!fs.rename(tmp, target)) {
-        fs.rename(old, target) // roll back — the settled table survives
-        throw new java.io.IOException(s"compact swap failed for $target")
-      }
-      fs.delete(old, true); ()
+      graft.core.Tables.replaceAtomic(spark, s"$indexDir/token_stats",
+        tokenStats(spark, indexDir))
     }
 
   /** t39's per-source KL divergence served FROM THE INDEX — the same

@@ -92,11 +92,10 @@ object Masking {
     * request physically removes the subject's rows from the corpus
     * table ([[graft.core.Tables.purgeRows]] — only the affected
     * partition directories rewrite) and tombstones the same ids in
-    * every DERIVED index handed in
-    * ([[graft.operators.Dedup.deleteFromMinhashIndex]] /
-    * [[graft.operators.Similarity.deleteFromIndex]] — serves exclude
-    * them immediately; the physical index purge is the owner's next
-    * maintenance window, `purge*Tombstones`). Erasure that stops at
+    * every DERIVED index handed in ([[graft.operators.IndexStore.delete]],
+    * one call for every family — serves exclude them immediately; the
+    * physical removal is the owner's next maintenance window,
+    * [[graft.operators.IndexStore.purge]]). Erasure that stops at
     * the base table is not erasure: the dedup postings and ANN lists
     * still carry the subject's fingerprints, and a probe would keep
     * surfacing the deleted ids. Returns a one-row audit report
@@ -116,12 +115,8 @@ object Masking {
       graft.core.Tables.purgeRows(spark, d, idColName, ids)
       hit
     }.getOrElse(0L)
-    minhashIndexDirs.foreach(d =>
-      graft.operators.Dedup.deleteFromMinhashIndex(spark, d, ids))
-    annIndexDirs.foreach(d =>
-      graft.operators.Similarity.deleteFromIndex(spark, d, ids))
-    bm25IndexDirs.foreach(d =>
-      graft.operators.SearchIndex.deleteFromBm25Index(spark, d, ids))
+    (minhashIndexDirs ++ annIndexDirs ++ bm25IndexDirs).foreach(d =>
+      graft.operators.IndexStore.delete(spark, d, ids))
     Seq((nRequested, corpusRemoved, minhashIndexDirs.size.toLong,
         annIndexDirs.size.toLong, bm25IndexDirs.size.toLong))
       .toDF("n_requested", "corpus_rows_removed",

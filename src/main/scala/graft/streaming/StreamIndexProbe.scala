@@ -21,10 +21,13 @@ import graft.operators.Dedup
   * [[StreamApply]] discipline without the snapshot swap).
   *
   * Index MAINTENANCE stays a scheduled batch concern
-  * ([[graft.operators.Dedup.appendToMinhashIndex]], append ≡ rebuild) —
+  * ([[graft.operators.Dedup.appendToMinhashIndex]], append ≡ rebuild,
+  * and [[graft.operators.IndexStore]]'s delete/purge/compact) —
   * appending mid-stream would make replayed epochs at-least-once on the
-  * postings side; within-stream (doc vs doc, both in flight) dedup is
-  * [[StreamNearDup]]'s job. */
+  * postings side; a tombstone ([[graft.operators.IndexStore.delete]])
+  * may land between micro-batches and every later batch stops
+  * surfacing the deleted docs. Within-stream (doc vs doc, both in
+  * flight) dedup is [[StreamNearDup]]'s job. */
 object StreamIndexProbe {
 
   def start(docs: DataFrame, indexDir: String, outDir: String,

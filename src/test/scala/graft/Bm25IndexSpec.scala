@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.SearchIndex
+import graft.operators.{IndexStore, SearchIndex}
 
 /** Materialized BM25 search index: serve ≡ the inline t17 BM25 over the
   * same corpus, append ≡ one-shot build (no drifting yardstick — df and
@@ -60,7 +60,7 @@ class Bm25IndexSpec extends SparkSuite {
       docs.filter($"doc_id" % 3 === 2), "doc_id", "text")
     val expect = served(oneShot)
     assert(served(grown) === expect)
-    val (before, after) = SearchIndex.compactBm25Index(spark, grown)
+    val (before, after) = IndexStore.compact(spark, grown)
     assert(after < before, s"no collapse ($before -> $after)")
     assert(served(grown) === expect, "compaction changed served rows")
   }
@@ -78,16 +78,16 @@ class Bm25IndexSpec extends SparkSuite {
     SearchIndex.buildBm25Index(core, "doc_id", "text", twin, parts = 8)
     SearchIndex.appendToBm25Index(spark, twin, sliceA, "doc_id", "text")
     val before = served(full)
-    SearchIndex.deleteFromBm25Index(spark, full, sliceB.select("doc_id"))
+    IndexStore.delete(spark, full, sliceB.select("doc_id"))
     val tombstoned = served(full)
     assert(tombstoned === served(twin),
       "tombstoned serve differs from the never-appended twin")
     assert(tombstoned !== before, "delete was a vacuous no-op")
     // deletion is idempotent: repeating the request must not subtract
     // the victims' stats partial a second time
-    SearchIndex.deleteFromBm25Index(spark, full, sliceB.select("doc_id"))
+    IndexStore.delete(spark, full, sliceB.select("doc_id"))
     assert(served(full) === tombstoned, "double delete skewed the stats")
-    SearchIndex.purgeBm25Tombstones(spark, full)
+    IndexStore.purge(spark, full)
     assert(served(full) === tombstoned, "purge changed served rows")
     assert(!new java.io.File(s"$full/tombstones").exists)
     assert(spark.read.parquet(s"$full/postings")
@@ -96,7 +96,7 @@ class Bm25IndexSpec extends SparkSuite {
     // a delete of already-purged ids is fully vacuous: it must not
     // resurrect the tombstone dir (which would put every later serve
     // back on the anti-join path for an empty table)
-    SearchIndex.deleteFromBm25Index(spark, full, sliceB.select("doc_id"))
+    IndexStore.delete(spark, full, sliceB.select("doc_id"))
     assert(!new java.io.File(s"$full/tombstones").exists,
       "vacuous delete recreated the tombstone dir")
     assert(served(full) === tombstoned)
@@ -107,7 +107,7 @@ class Bm25IndexSpec extends SparkSuite {
     val idx = Files.createTempDirectory("bm25_crash").toString
     val keep = docs.filter($"doc_id" % 3 =!= 2)
     SearchIndex.buildBm25Index(docs, "doc_id", "text", idx, parts = 8)
-    SearchIndex.deleteFromBm25Index(spark, idx,
+    IndexStore.delete(spark, idx,
       docs.filter($"doc_id" % 3 === 2).select("doc_id"))
     val tombstoned = served(idx)
     // simulate the crash window: the fold committed (marker + folded
@@ -118,7 +118,7 @@ class Bm25IndexSpec extends SparkSuite {
     assert(served(idx) === tombstoned,
       "serve double-subtracted stats in the crashed-purge window")
     // the re-run purge skips the fold and completes
-    SearchIndex.purgeBm25Tombstones(spark, idx)
+    IndexStore.purge(spark, idx)
     assert(served(idx) === tombstoned, "re-run purge changed served rows")
     assert(!new java.io.File(s"$idx/tombstones").exists)
     // the end state is the never-appended twin, stats folded once
@@ -132,13 +132,13 @@ class Bm25IndexSpec extends SparkSuite {
     val idx = Files.createTempDirectory("bm25_redel").toString
     val victims = docs.filter($"doc_id" % 3 === 2)
     SearchIndex.buildBm25Index(docs, "doc_id", "text", idx, parts = 8)
-    SearchIndex.deleteFromBm25Index(spark, idx, victims.select("doc_id"))
-    SearchIndex.purgeBm25Tombstones(spark, idx)
+    IndexStore.delete(spark, idx, victims.select("doc_id"))
+    IndexStore.purge(spark, idx)
     // the docs come back (a corrected re-ingest), then get deleted
     // AGAIN: the second delete's tombstone set has the same ids as the
     // purged one — a stale fold marker must not shadow its correction
     SearchIndex.appendToBm25Index(spark, idx, victims, "doc_id", "text")
-    SearchIndex.deleteFromBm25Index(spark, idx, victims.select("doc_id"))
+    IndexStore.delete(spark, idx, victims.select("doc_id"))
     val twin = Files.createTempDirectory("bm25_redel_twin").toString
     SearchIndex.buildBm25Index(docs.filter($"doc_id" % 3 =!= 2),
       "doc_id", "text", twin, parts = 8)
@@ -146,7 +146,7 @@ class Bm25IndexSpec extends SparkSuite {
       "re-delete after purge served stale-marker stats (N overcounted)")
     // and the second purge folds the correction, not skipping on the
     // stale signature
-    SearchIndex.purgeBm25Tombstones(spark, idx)
+    IndexStore.purge(spark, idx)
     assert(served(idx) === served(twin),
       "second purge skipped its stats fold on the stale marker")
   }

@@ -194,4 +194,15 @@ class CachesSpec extends SparkSuite {
     }
     assert(e2.getMessage.contains("yardstick bound"))
   }
+
+  test("localize: an IVF centroid sample above its own bound fails at the call site") {
+    val sample = spark.range(5).select(col("id").as("neighbor_id"),
+      array(col("id").cast("double")).as("v"), lit(1.0).as("vn"))
+    assert(graft.operators.Similarity.ivfCentroids(sample, nCentroids = 5)
+      .count() === 5L)
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Similarity.ivfCentroids(sample, nCentroids = 4)
+    }
+    assert(e.getMessage.contains("more than 4 rows exceed the yardstick bound"))
+  }
 }

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Caches, Dedup}
+import graft.operators.{Caches, Dedup, IndexStore}
 
 /** Materialized MinHash dedup index: build / append / probe contracts.
   * The probe must agree exactly with the inline incremental operator,
@@ -130,7 +130,7 @@ class DedupIndexSpec extends SparkSuite {
     }
     val before = probe()
     val filesBefore = fileCount()
-    val (nb, na) = Dedup.compactMinhashIndex(spark, idx)
+    val (nb, na) = IndexStore.compact(spark, idx)
     assert(nb === filesBefore)
     assert(na < nb, s"no collapse: $nb -> $na")
     assert(fileCount() === na)

@@ -5,11 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{IndexStore, Similarity}
 
 /** Index compaction parity across the ANN index families: every append
   * piles files into the growable table (LSH `bucketed`, IVF `assigned`,
-  * PQ / IVF-PQ `codes`); `Similarity.compactIndex` must collapse the
+  * PQ / IVF-PQ `codes`); `IndexStore.compact` must collapse the
   * pile WITHOUT changing a single served row — compaction is a layout
   * concern, never a semantic one. (The MinHash family's twin lives in
   * DedupIndexSpec.) */
@@ -41,7 +41,7 @@ class IndexCompactionSpec extends SparkSuite {
       .map(_.toSeq).sortBy(_.toString).toSeq
     val before = served()
     val filesBefore = fileCount(idx)
-    val (nb, na) = Similarity.compactIndex(spark, idx)
+    val (nb, na) = IndexStore.compact(spark, idx)
     assert(na < nb, s"$tag: no collapse ($nb -> $na)")
     assert(fileCount(idx) === filesBefore - nb + na)
     assert(served() === before, s"$tag: compaction changed served results")
@@ -125,17 +125,19 @@ class IndexCompactionSpec extends SparkSuite {
       "vec_id", "embedding", k = 3).collect()
       .map(_.toSeq).sortBy(_.toString).toSeq
     val want = served()
-    // simulate the crash window: settled tree moved aside, staged tmp
-    // present, replacement never renamed in
+    // simulate the crash window of the one swap protocol
+    // (Tables.replaceAtomic): settled tree moved aside to its
+    // `.<name>__swap_old` sibling, staged tmp present, replacement
+    // never renamed in
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$idx/bucketed"),
-      new org.apache.hadoop.fs.Path(s"$idx/bucketed.old")))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/bucketed.compacting"))
-    Similarity.compactLshDeltas(spark, idx)
+      new org.apache.hadoop.fs.Path(s"$idx/.bucketed__swap_old")))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/.bucketed__swap_tmp"))
+    IndexStore.foldDeltas(spark, idx)
     assert(served() === want, "post-recovery serve moved rows")
     assert(!new java.io.File(s"$idx/deltas").exists)
-    assert(!new java.io.File(s"$idx/bucketed.old").exists)
+    assert(!new java.io.File(s"$idx/.bucketed__swap_old").exists)
   }
 
   test("delta compaction re-run after a crash past the swap is idempotent") {
@@ -151,8 +153,8 @@ class IndexCompactionSpec extends SparkSuite {
       "vec_id", "embedding", k = 3).collect()
       .map(_.toSeq).sortBy(_.toString).toSeq
     val want = served()
-    Similarity.compactLshDeltas(spark, idx)
-    // crash after the swap but before the delta delete: the folded base
+    IndexStore.foldDeltas(spark, idx)
+    // crash after the fold but before the delta delete: the folded base
     // is live and the consumed deltas reappear — a re-run must not
     // double-post them into the base
     Similarity.bucketWithFrozenMeta(spark, idx,
@@ -160,7 +162,7 @@ class IndexCompactionSpec extends SparkSuite {
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$idx/deltas/batch=0")
-    Similarity.compactLshDeltas(spark, idx)
+    IndexStore.foldDeltas(spark, idx)
     assert(served() === want, "re-folded deltas changed served rows")
     val base = spark.read.parquet(s"$idx/bucketed")
     assert(base.groupBy("neighbor_id").count()
@@ -180,9 +182,9 @@ class IndexCompactionSpec extends SparkSuite {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/token_stats"),
-      new org.apache.hadoop.fs.Path(s"$dir/token_stats.old")))
+      new org.apache.hadoop.fs.Path(s"$dir/.token_stats__swap_old")))
     TokenIndex.compact(spark, dir)
     assert(served() === want, "post-recovery token stats moved rows")
-    assert(!new java.io.File(s"$dir/token_stats.old").exists)
+    assert(!new java.io.File(s"$dir/.token_stats__swap_old").exists)
   }
 }

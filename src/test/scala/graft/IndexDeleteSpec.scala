@@ -5,10 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, IndexStore, Similarity}
 
 /** Tombstone deletes across the materialized index families — the
-  * right-to-be-forgotten contract: after `deleteFrom*`, a tombstoned
+  * right-to-be-forgotten contract: after `IndexStore.delete`, a tombstoned
   * index must serve EXACTLY like an index whose deleted rows were never
   * appended (exact for every family because the centroid / codebook /
   * hyperplane yardsticks are frozen at build time over the CORE slice,
@@ -40,12 +40,12 @@ class IndexDeleteSpec extends SparkSuite {
     def served(d: String) = serve(spark, d).collect()
       .map(_.toSeq).sortBy(_.toString).toSeq
     val before = served(full)
-    Similarity.deleteFromIndex(spark, full, sliceB.select(idCol))
+    IndexStore.delete(spark, full, sliceB.select(idCol))
     val tombstoned = served(full)
     assert(tombstoned === served(twin),
       s"$tag: tombstoned serve differs from the never-appended twin")
     assert(tombstoned !== before, s"$tag: delete was a vacuous no-op")
-    Similarity.purgeIndexTombstones(spark, full)
+    IndexStore.purge(spark, full)
     assert(served(full) === tombstoned, s"$tag: purge changed served rows")
     assert(!new java.io.File(s"$full/tombstones").exists,
       s"$tag: purge left the tombstone table behind")
@@ -111,12 +111,12 @@ class IndexDeleteSpec extends SparkSuite {
         "doc_id", "text", threshold = 0.4, maxBucket = 3).collect()
       .map(_.toSeq).sortBy(_.toString).toSeq
     val before = probed(full)
-    Dedup.deleteFromMinhashIndex(spark, full, sliceB.select("doc_id"))
+    IndexStore.delete(spark, full, sliceB.select("doc_id"))
     val tombstoned = probed(full)
     assert(tombstoned === probed(twin),
       "tombstoned probe differs from the never-appended twin")
     assert(tombstoned !== before, "delete was a vacuous no-op")
-    Dedup.purgeMinhashTombstones(spark, full)
+    IndexStore.purge(spark, full)
     assert(probed(full) === tombstoned, "purge changed probe rows")
     assert(!new java.io.File(s"$full/tombstones").exists,
       "purge left the tombstone table behind")
@@ -176,8 +176,8 @@ class IndexDeleteSpec extends SparkSuite {
       .filter(col("cid") === victimCid).select("neighbor_id")
     val mtimes = assignedDir.listFiles.filter(_.isDirectory)
       .map(d => d.getName -> d.listFiles.map(_.lastModified).max).toMap
-    Similarity.deleteFromIndex(spark, idx, victims)
-    Similarity.purgeIndexTombstones(spark, idx)
+    IndexStore.delete(spark, idx, victims)
+    IndexStore.purge(spark, idx)
     val after = assignedDir.listFiles.filter(_.isDirectory)
       .map(d => d.getName -> d.listFiles.map(_.lastModified).max).toMap
     val untouched = mtimes.keys.filter(_ != s"cid=$victimCid")
@@ -201,8 +201,8 @@ class IndexDeleteSpec extends SparkSuite {
       .parquet(s"$idx/deltas/batch=0")
     val victim = late.select("vec_id").limit(1)
     val victimId = victim.head.getLong(0)
-    Similarity.deleteFromIndex(spark, idx, victim)
-    Similarity.purgeIndexTombstones(spark, idx)
+    IndexStore.delete(spark, idx, victim)
+    IndexStore.purge(spark, idx)
     // after the purge the tombstones are gone — the delta row must be
     // physically gone too, or the "forgotten" vector serves again
     val served = Similarity.lshServeTopK(spark, idx,

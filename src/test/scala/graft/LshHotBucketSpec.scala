@@ -171,38 +171,6 @@ class LshHotBucketSpec extends SparkSuite {
     assert(kept.length === 8, "cap exact — 2 NULLs + 6 hash-lowest ids")
   }
 
-  test("inline no-dedup ≡ forced dedup on unique ids; duplicate ids collapse under the conf") {
-    // unique ids: a pair meets at most once (one bucket per corpus
-    // vector, distinct probe buckets), so skipping the (query, neighbor)
-    // max-agg — the inline default since the ~sf3 leg measured it as
-    // ~100M rows of zero-merge hash pressure — must be result-identical
-    // to running it
-    val rng = new scala.util.Random(3)
-    val vecs = (0L until 200L).map(i =>
-      i -> Seq.fill(8)(rng.nextFloat() * 2f - 1f)).toDF("vec_id", "embedding")
-    def run() = Similarity.lshTopK(vecs, vecs, "vec_id", "embedding",
-      k = 3, numPlanes = 3, dim = 8, numBuckets = 5L)
-      .collect().map(_.toSeq).toSet
-    val skipped = run()
-    spark.conf.set("spark.graft.lsh.dedupCandidates", "true")
-    val dedupped =
-      try run() finally spark.conf.unset("spark.graft.lsh.dedupCandidates")
-    assert(skipped === dedupped)
-    // duplicated id, conf on: the duplicate max-collapses to ONE
-    // neighbor row instead of occupying two ranks
-    val dup = vecs.unionByName(vecs.filter(col("vec_id") === 7L))
-    val q = vecs.filter(col("vec_id") === 8L)
-    def topOf(conf: Boolean) = {
-      if (conf) spark.conf.set("spark.graft.lsh.dedupCandidates", "true")
-      try Similarity.lshTopK(dup, q, "vec_id", "embedding", k = 5,
-          numPlanes = 1, dim = 8)
-        .collect().map(r => r.getLong(1)).toSeq
-      finally if (conf) spark.conf.unset("spark.graft.lsh.dedupCandidates")
-    }
-    assert(topOf(conf = true).count(_ == 7L) <= 1,
-      "conf=true must max-collapse the duplicated id")
-  }
-
   test("autoPlanes pins expected bucket population; lshTopKAuto ≡ lshTopK at the derived count") {
     import Similarity.autoPlanes
     // ceil(log2(corpus / target)), clamped: the plane count that keeps

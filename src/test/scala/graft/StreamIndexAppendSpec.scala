@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.Similarity
+import graft.operators.{IndexStore, Similarity}
 import graft.streaming.StreamIndexAppend
 
 case class ArrivingVec(vec_id: Long, embedding: Seq[Float])
@@ -73,7 +73,7 @@ class StreamIndexAppendSpec extends SparkSuite {
         .filter(_.isDirectory).filter(_.getName.startsWith("batch="))
       assert(epochs.length === 2)
 
-      Similarity.compactLshDeltas(spark, idx)
+      IndexStore.foldDeltas(spark, idx)
       assert(!new java.io.File(s"$idx/deltas").exists,
         "compaction left the delta tail behind")
       assert(rows(Similarity.lshServeTopK(spark, idx, queries,
@@ -97,7 +97,7 @@ class StreamIndexAppendSpec extends SparkSuite {
     assert(rows(Similarity.lshServeTopK(spark, idx, queries,
       "vec_id", "embedding", k = 3)) === want,
       "an uncommitted epoch changed or broke serving")
-    Similarity.compactLshDeltas(spark, idx)
+    IndexStore.foldDeltas(spark, idx)
     assert(rows(Similarity.lshServeTopK(spark, idx, queries,
       "vec_id", "embedding", k = 3)) === want,
       "compacting past an uncommitted epoch changed serving")

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexStore}
 import graft.streaming.StreamIndexProbe
 
 case class ArrivingDoc(doc_id: Long, text: String)
@@ -77,7 +77,7 @@ class StreamIndexProbeSpec extends SparkSuite {
       q.processAllAvailable()
       // the erasure request arrives BETWEEN micro-batches: docs 2 and 3
       // are forgotten from the index while the stream keeps running
-      Dedup.deleteFromMinhashIndex(spark, idx,
+      IndexStore.delete(spark, idx,
         Seq(2L, 3L).toDF("doc_id"))
       stream.addData(arrivals.drop(2).toIndexedSeq)
       q.processAllAvailable()
