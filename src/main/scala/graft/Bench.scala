@@ -84,15 +84,13 @@ object Bench {
       // their parallelism
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
-      // AQE coalesce floor, env-overridable for JOBLOG experiments.
-      // Keep Spark's 1 MB default: a 64k floor was measured (this
-      // session) to help nothing — the engine's small hot stages are
+      // AQE coalesce floor: Spark's 1 MB default. A 64k floor was
+      // measured to help nothing — the engine's small hot stages are
       // SKEW-bound (one hot bucket/key per stage), so extra tiny tasks
       // only add scheduling churn — and it regressed the iterative tier
       // badly (e12 4.5 s -> 33 s: the extra partitions defeat the
       // cached-plan coalescing the checkpoint loop relies on).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -278,6 +276,7 @@ object Bench {
         // storage-eviction debt the first measured queries pay for
         graft.operators.Caches.releaseAllPersistent(spark)
       val it = selected.iterator
+      // checked between queries: the last may overshoot by its own run time
       while (it.hasNext && (System.nanoTime() - w0) / 1e9 < warmBudget) {
         val fn = it.next()._2
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
@@ -368,8 +367,7 @@ object Bench {
     // The file pins the SF it was measured at; on any other SF it is
     // ignored and the fallback family rule below applies.
     val steady: Map[String, Double] = {
-      val path = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_STEADY", "plans/bench_steady.tsv"))
+      val path = java.nio.file.Paths.get("plans/bench_steady.tsv")
       try {
         import scala.jdk.CollectionConverters._
         BenchPolicy.parseSteady(
@@ -411,9 +409,7 @@ object Bench {
       val topStage = stgs.sortBy(-_._2).headOption.map { case (id, s, nt, run, nm) =>
         f"s$id%d:$s%.2fs/$nt%dt run=$run%.2f $nm%s" }.getOrElse("")
       if (verbose) {
-        val topN = sys.env.get("SPARK_GRAFT_JOBLOG_TOP")
-          .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(8)
-        val tops = jobs.sortBy(-_._2).take(topN).map { case (id, s, nt, cs) =>
+        val tops = jobs.sortBy(-_._2).take(8).map { case (id, s, nt, cs) =>
           f"j$id%d:$s%.2fs/$nt%dt[$cs%s]" }.mkString(" ")
         System.err.println(
           f"JOBLOG $name%-26s wall=$wall%6.2f jobs=${jobs.size}%3d " +

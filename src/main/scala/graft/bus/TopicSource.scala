@@ -21,7 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * surface, with the Kafka connector's 7-column schema — a consumer
   * written against `format("kafka")` ports by changing the format string
   * and options, nothing else (the reference's broker consumers,
-  * simple_kafka_setup.py:114-177).
+  * simple_kafka_setup.py:114-177). The reverse port, onto a real broker,
+  * is the same one-line edit; the build bundles no Kafka connector, so
+  * no kafka branch lives here.
   *
   * Mapping: one topic part-file = one (partition, offset-range) unit —
   * `partition` carries the file sequence, `offset` the line index.
@@ -59,38 +61,6 @@ object TopicSource {
   private[bus] def qualifyRoot(root: String): String =
     if (root.matches("^[A-Za-z][A-Za-z0-9+.-]*:/.*")) root
     else "file://" + java.nio.file.Paths.get(root).toAbsolutePath
-
-  /** True iff the real Kafka connector is on the classpath (it is NOT
-    * bundled with a stock Spark distribution). */
-  def kafkaAvailable: Boolean =
-    try { Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider"); true }
-    catch { case _: ClassNotFoundException => false }
-
-  /** Deployment-portable reader: the real `format("kafka")` when the
-    * connector is present AND a bootstrap server is configured,
-    * otherwise the graft-topic log. Both produce the same 7-column
-    * row shape, so every consumer downstream is identical — the
-    * reference's broker consumers (simple_kafka_setup.py:114-177) map
-    * onto either backend unchanged.
-    *
-    * TESTING CAVEAT: the `format("kafka")` branch is a thin option
-    * passthrough (format string + two options, no custom logic), but it
-    * can only EXECUTE where the spark-sql-kafka connector and a broker
-    * exist — neither ships with a stock Spark distribution, so in
-    * connector-less environments the branch is compile-checked and
-    * guard-tested (bootstrap configured + connector absent → fallback,
-    * TopicSourceSpec) yet never run. TopicSourceSpec carries an
-    * `assume(kafkaAvailable)`-gated case that exercises it automatically
-    * in any deployment that does bundle the connector. */
-  def readStreamAuto(spark: SparkSession, root: String, topic: String,
-      kafkaBootstrap: Option[String] = None): DataFrame =
-    kafkaBootstrap match {
-      case Some(servers) if kafkaAvailable =>
-        spark.readStream.format("kafka")
-          .option("kafka.bootstrap.servers", servers)
-          .option("subscribe", topic).load()
-      case _ => readStream(spark, root, topic)
-    }
 }
 
 class TopicSourceProvider extends TableProvider with DataSourceRegister {

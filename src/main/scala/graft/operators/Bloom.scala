@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * `bit_or` groupBy (the shuffle carries ≤ nWords rows), and the words
   * are collected — a broadcast-sized index artifact (8·nWords bytes),
   * the same driver-holds-the-sketch pattern as
-  * [[Similarity.ivfServeTopK]]'s probed-cid list. Probe: the word
+  * [[Similarity.lshServeTopK]]'s probed-bucket list. Probe: the word
   * array rides into the plan as one literal; each probe is
   * element_at + shift + mask — all inside whole-stage codegen.
   *

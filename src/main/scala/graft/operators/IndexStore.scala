@@ -5,11 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.Caches.EagerOps
 
 /** The one owner of a materialized index directory's lifecycle, shared
-  * by every index family — LSH, IVF, PQ and IVF-PQ ([[Similarity]]),
-  * MinHash ([[Dedup]]), BM25 ([[SearchIndex]]) and [[TokenIndex]].
+  * by every index family — LSH ([[Similarity]]), MinHash ([[Dedup]])
+  * and [[TokenIndex]], the indexes a stream reuses.
   * Layout under `indexDir`:
   *  - `meta` — ONE frozen row written at build ([[create]]): the
   *    family, its parameters (serve and append replay them) and its
@@ -36,12 +35,9 @@ object IndexStore {
   final case class Table(name: String, idCol: Option[String],
       partCol: Option[String])
 
-  /** The frozen meta row. `tombCols` are columns of the first id-keyed
-    * table that each tombstone row carries (BM25 keeps a deleted doc's
-    * length to correct N/avgdl); with any, [[delete]] tombstones only
-    * ids that are indexed and not yet tombstoned. */
+  /** The frozen meta row. */
   final case class Meta(family: String, params: Map[String, Long],
-      tables: Seq[Table], tombCols: Seq[String] = Nil) {
+      tables: Seq[Table]) {
     def int(key: String): Int = params(key).toInt
   }
 
@@ -121,62 +117,33 @@ object IndexStore {
   /** Tombstone ids: every serve drops them before scoring, so the index
     * serves exactly like one that never held them (the yardsticks are
     * frozen at build, never derived from the deleted rows). Terminal
-    * until [[purge]]. With `tombCols`, the tombstone rows carry those
-    * columns from the indexed rows, and ids that are not indexed or
-    * already tombstoned write nothing — a repeat request is a no-op and
-    * a purged index's tombstone dir stays gone. */
+    * until [[purge]]. */
   def delete(spark: SparkSession, indexDir: String, ids: DataFrame): Unit = {
     val m = meta(spark, indexDir)
-    val t = m.tables.find(_.idCol.nonEmpty).getOrElse(
-      throw new IllegalArgumentException(
-        s"$indexDir: ${m.family} index has no id-keyed table to delete from"))
-    val tomb = s"$indexDir/tombstones"
-    Tables.withMaintenanceLock(spark, indexDir) {
-      if (m.tombCols.isEmpty) Tables.appendTombstones(spark, tomb, ids)
-      else {
-        val idc = t.idCol.get
-        // materialized before the write: the rows feed an append INTO
-        // the tombstone table their anti-join reads
-        val victims = broadcast(Tables.antiTombstones(spark, tomb,
-          ids.select(col(ids.columns.head).cast("long").as(idc)).distinct(),
-          idc))
-        val carried = m.tombCols.map(c => first(c).as(c))
-        val rows = spark.read.parquet(s"$indexDir/${t.name}")
-          .join(victims, Seq(idc), "left_semi")
-          .groupBy(col(idc)).agg(carried.head, carried.tail: _*)
-          .select(col(idc).as("id") +: m.tombCols.map(col): _*)
-          .eagerCheckpoint()
-        if (!rows.isEmpty) rows.coalesce(1).write.mode("append").parquet(tomb)
-      }
-    }
+    require(m.tables.exists(_.idCol.nonEmpty),
+      s"$indexDir: ${m.family} index has no id-keyed table to delete from")
+    Tables.withMaintenanceLock(spark, indexDir)(
+      Tables.appendTombstones(spark, s"$indexDir/tombstones", ids))
   }
 
   /** Physically remove tombstoned rows, then clear the tombstones: fold
     * the delta epochs first (a deleted row still sitting in an epoch
-    * would otherwise resurrect once the tombstones are gone), run the
-    * family's own pre-purge step, purge every id-keyed table
-    * ([[Tables.purgeRows]]: cost ∝ the affected partition dirs), delete
-    * the tombstones. Serves are identical before and after; the purge
-    * buys back scan bytes. Every step is idempotent, so a re-run after a
-    * crash converges. */
+    * would otherwise resurrect once the tombstones are gone), purge
+    * every id-keyed table ([[Tables.purgeRows]]: cost ∝ the affected
+    * partition dirs), delete the tombstones. Serves are identical
+    * before and after; the purge buys back scan bytes. Every step is
+    * idempotent, so a re-run after a crash converges. */
   def purge(spark: SparkSession, indexDir: String): Unit = {
     val m = meta(spark, indexDir)
     val tomb = new Path(s"$indexDir/tombstones")
     Tables.withMaintenanceLock(spark, indexDir) {
       if (fs(spark, tomb).exists(tomb)) {
         fold(spark, indexDir, m)
-        if (m.family == SearchIndex.Family)
-          SearchIndex.foldTombstonesIntoStats(spark, indexDir)
         val ids = spark.read.parquet(tomb.toString).select("id")
         for (t <- m.tables; idc <- t.idCol)
           Tables.purgeRows(spark, s"$indexDir/${t.name}", idc, ids)
         fs(spark, tomb).delete(tomb, true)
       }
-      // BM25's fold marker must go with the tombstones (also the residue
-      // of a purge that crashed between the two deletes), or it shadows
-      // the next delete of a set with the same signature
-      if (m.family == SearchIndex.Family)
-        SearchIndex.dropFoldedMarker(spark, indexDir)
     }
   }
 

@@ -103,7 +103,7 @@ object Similarity {
     * broadcast back), and similarity is exact cosine in the DEQUANTIZED
     * domain. At corpus scale the int codes are what's materialized
     * (1 byte/dim = 4× less scan IO than float32; the same
-    * build-once/serve-many shape as [[buildPqIndex]]) and (lo, hi) ride
+    * build-once/serve-many shape as [[pqTopK]]'s codes) and (lo, hi) ride
     * in index metadata; this inline form quantizes on the fly so the
     * oracle can replay every arithmetic step. */
   def sqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -602,10 +602,10 @@ object Similarity {
     df.withColumn("__h", md5(col(idCol).cast("string")))
       .orderBy(col("__h"), col(idCol)).limit(n).drop("__h")
 
-  /** The IVF build pass shared by [[ivfTopK]] (inline) and
-    * [[buildIvfIndex]] (persisted): (centroid table, assignment lists).
-    * `attrCols` ride along into the assignment lists so a filtered
-    * serve can prune on them without touching the corpus. */
+  /** The IVF build pass shared by [[ivfTopK]], [[ivfFilteredTopK]] and
+    * [[semDedup]]: (centroid table, assignment lists). `attrCols` ride
+    * along into the assignment lists so [[ivfFilteredTopK]] can
+    * constrain probed candidates on them. */
   private def ivfBuild(corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, attrCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val c = Caches.spreadByKey(corpus, col(idCol))
@@ -631,8 +631,8 @@ object Similarity {
 
   /** Nearest-centroid (cosine, tie by cid) assignment of a prepared
     * (neighbor_id, v, vn) frame against a broadcast centroid table —
-    * the one |rows|·|C| pass [[ivfBuild]] and [[appendToIvfIndex]]
-    * share. */
+    * the one |rows|·|C| pass [[ivfBuild]], [[ivfPqBuild]] and the
+    * trained variants share. */
   private def assignToCentroids(c: DataFrame, centroids: DataFrame): DataFrame = {
     val wAssign = Window.partitionBy("neighbor_id")
       .orderBy(col("csim").desc, col("cid"))
@@ -667,7 +667,7 @@ object Similarity {
   }
 
   /** The probed-list scan + rank pass shared by [[ivfTopK]] and
-    * [[ivfServeTopK]]. */
+    * [[ivfTrainedTopK]]. */
   private def ivfSearch(probes: DataFrame, assigned: DataFrame,
       k: Int): DataFrame =
     cosineRank(
@@ -676,82 +676,6 @@ object Similarity {
         .withColumn("sim", dot(col("qv"), col("v")) /
           nullif(col("qn") * col("vn"), lit(0.0))),
       k)
-
-  /** The IVF index's growable table: the assignment lists. */
-  private val IvfAssigned = IndexStore.Table("assigned",
-    Some("neighbor_id"), Some("cid"))
-
-  /** Materialize the IVF index: the centroid table plus the assignment
-    * lists written PARTITIONED BY centroid id — build once per corpus
-    * version, serve many. The cid-directory layout is the on-disk form
-    * of the inverted file: a serving query's probed lists map to
-    * partition directories, so the scan touches nProbe/nCentroids of
-    * the index bytes (partition pruning), never the corpus. */
-  def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, nCentroids: Int = 16,
-      attrCols: Seq[String] = Nil): Unit = {
-    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("ivf",
-      Map("n_centroids" -> nCentroids.toLong), Seq(IvfAssigned)))
-    val (centroids, assigned) =
-      ivfBuild(corpus, idCol, vecCol, nCentroids, attrCols)
-    centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    IndexStore.write(assigned, indexDir, IvfAssigned, "overwrite")
-  }
-
-  /** Append NEW vectors to a materialized IVF index WITHOUT rebuilding —
-    * the [[graft.operators.Dedup.incrementalMinhashPairs]] shape for the
-    * ANN tier: the settled corpus's assignment lists and the centroid
-    * table are never touched or re-read; only the increment pays an
-    * assignment pass (|new|·|C| against the broadcast centroids) and is
-    * appended into its cid= partition directories (one writer task per
-    * touched list). Nightly index maintenance therefore costs ∝
-    * increment, not corpus — at a 100 TB corpus with a 0.1% daily feed
-    * that is the difference between an append job and a full rebuild.
-    *
-    * Centroids DRIFT as the corpus grows (they stay the build-time
-    * sample): serve results remain exactly "IVF with the original
-    * centroid table over the full corpus" — IvfIndexSpec asserts
-    * append ≡ one-shot build when the centroid sample coincides — and
-    * the operational signal for a rebuild is the v13 recall gate
-    * degrading, not the append itself. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, attrCols: Seq[String] = Nil): Unit = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val c = Caches.spreadByKey(newVecs, col(idCol))
-      .select(col(idCol).as("neighbor_id") +: attrCols.map(col) :+
-        asDouble(col(vecCol)).as("v") :+
-        l2Norm(asDouble(col(vecCol))).as("vn"): _*)
-    IndexStore.write(assignToCentroids(c, centroids), indexDir, IvfAssigned,
-      "append")
-  }
-
-  /** Serve ANN queries from a [[buildIvfIndex]]-materialized index —
-    * bit-identical results to the inline [[ivfTopK]] over the same
-    * corpus (IvfIndexSpec asserts it), without re-reading or
-    * re-assigning the corpus. The probed cids are collected (bounded by
-    * |queries|·nProbe) into a LITERAL partition filter, so the inverted
-    * file scan statically prunes to the probed cid= directories —
-    * IvfIndexSpec asserts the PartitionFilters show up in the plan. */
-  def ivfServeTopK(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 4, where: Option[Column] = None): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    // probes feed the cid collect AND the candidate join — materialize
-    // once (query-set sized)
-    val probes = ivfProbes(centroids, queries, idCol, vecCol, nProbe)
-      .eagerCheckpoint()
-    val cids = probes.select("cid").distinct().collect().map(_.get(0))
-    // `where` (over build-time attrCols) prunes the index scan itself:
-    // the predicate pushes into the parquet read NEXT TO the cid
-    // partition filter, so a filtered serve reads nProbe/nCentroids of
-    // the index bytes and row-group-skips off-attr rows — never
-    // post-filters a scored candidate set
-    val live = IndexStore.live(spark, indexDir, IvfAssigned, Some(cids.toSeq))
-    val assigned = where.fold(live)(live.filter)
-      .select(col("neighbor_id"), col("v"), col("vn"), col("cid"))
-    ivfSearch(probes, assigned, k)
-  }
 
   /** One k-means (Lloyd) iteration over the IVF assignment machinery:
     * assign every vector to its nearest (cosine) centroid, recompute the
@@ -1235,9 +1159,8 @@ object Similarity {
       element_at(col("lut"), col("codes").getItem(j) + lit(j * nCodes + 1))
     }.reduceLeft(_ + _)
 
-  /** The full-scan ADC pass shared by [[pqTopK]] (inline) and
-    * [[pqServeTopK]] (persisted index): every (query, corpus-code-row)
-    * pair pays one table walk. */
+  /** The full-scan ADC pass of [[pqTopK]]: every (query,
+    * corpus-code-row) pair pays one table walk. */
   private def pqAdcSearch(codes: DataFrame, luts: DataFrame, k: Int,
       m: Int, nCodes: Int): DataFrame =
     pqAdcRank(codes.crossJoin(broadcast(luts)), k, m, nCodes)
@@ -1339,60 +1262,9 @@ object Similarity {
     cosineRank(scored, k)
   }
 
-  /** The PQ index's growable table: flat codes, scanned whole. */
-  private val PqCodes = IndexStore.Table("codes", Some("id"), None)
-
-  /** Materialize the PQ index: codebook (m·nCodes subvector entries)
-    * plus the codes table — (id, m small ints) per corpus vector, the
-    * 32×-compressed scan target. Build once per corpus version, serve
-    * many; the build pays the one |N|·m·nCodes encode pass. */
-  def buildPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, m: Int = 8, dsub: Int = 8,
-      nCodes: Int = 16): Unit = {
-    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("pq",
-      Map("m" -> m.toLong, "dsub" -> dsub.toLong, "n_codes" -> nCodes.toLong),
-      Seq(PqCodes)))
-    val c = pqPrepare(requirePqDim(corpus, vecCol, m, dsub), idCol, vecCol)
-    val codebook = pqCodebook(c, m, dsub, nCodes)
-    codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
-    IndexStore.write(pqEncodeAgainst(c, codebook, m, dsub), indexDir, PqCodes,
-      "overwrite")
-  }
-
-  /** Append NEW vectors to a materialized PQ index without rebuilding —
-    * the [[appendToIvfIndex]] shape for the PQ tier: the settled codes
-    * are never re-read, only the increment pays an encode pass against
-    * the saved codebook. The codebook DRIFTS as the corpus grows (it
-    * stays the build-time sample) — serve results remain exactly "PQ
-    * with the original codebook over the full corpus"; the rebuild
-    * signal is the v15 recall gate degrading, not the append. */
-  def appendToPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newVecs: DataFrame, idCol: String,
-      vecCol: String): Unit = {
-    val codebook = spark.read.parquet(s"$indexDir/codebook")
-    val (m, dsub, _) = pqMeta(codebook)
-    IndexStore.write(pqEncodeAgainst(pqPrepare(
-        requirePqDim(newVecs, vecCol, m, dsub), idCol, vecCol),
-      codebook, m, dsub), indexDir, PqCodes, "append")
-  }
-
-  /** Serve ANN queries from a [[buildPqIndex]]-materialized index —
-    * bit-identical to the inline [[pqTopK]] over the same corpus
-    * (PqIndexSpec asserts it): the scan touches only the codes table
-    * (id + m bytes per vector), never the embeddings. */
-  def pqServeTopK(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
-    val codebook = spark.read.parquet(s"$indexDir/codebook")
-    val (m, dsub, nCodes) = pqMeta(codebook)
-    pqAdcSearch(IndexStore.live(spark, indexDir, PqCodes),
-      pqLuts(queries, codebook, idCol, vecCol, m, dsub, nCodes), k, m, nCodes)
-  }
-
-  /** (m, dsub, nCodes) recovered from a saved codebook — one bounded
-    * aggregate over m·nCodes rows (the ADC unroll needs m at plan-build
-    * time, so this is driver-side by necessity, like [[ivfServeTopK]]'s
-    * probed-cid collect). */
+  /** (m, dsub, nCodes) recovered from a codebook — one bounded
+    * aggregate over m·nCodes rows (the ADC unroll needs the dense
+    * stride at plan-build time, so this is driver-side by necessity). */
   private def pqMeta(codebook: DataFrame): (Int, Int, Int) = {
     val r = codebook.agg(max(col("j")), max(size(col("cs"))),
       max(col("cidx"))).head
@@ -1461,73 +1333,6 @@ object Similarity {
       codes.join(probes.select(col("query_id"), col("cid")), "cid")
         .join(broadcast(luts), "query_id"),
       k, m, nCodes)
-
-  /** The IVF-PQ index's growable table: the compressed inverted file. */
-  private val IvfPqCodes = IndexStore.Table("codes", Some("id"), Some("cid"))
-
-  /** Materialize the IVF-PQ index: centroids + codebook (both tiny) and
-    * the compressed inverted file, PARTITIONED BY cid — serving scans
-    * nProbe partition directories of m-byte codes, the smallest
-    * possible read for an ANN query over this corpus. */
-  def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, nCentroids: Int = 16,
-      m: Int = 8, dsub: Int = 8, nCodes: Int = 16): Unit = {
-    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("ivfpq",
-      Map("n_centroids" -> nCentroids.toLong, "m" -> m.toLong,
-        "dsub" -> dsub.toLong, "n_codes" -> nCodes.toLong), Seq(IvfPqCodes)))
-    val (centroids, codebook, codes) =
-      ivfPqBuild(requirePqDim(corpus, vecCol, m, dsub),
-        idCol, vecCol, nCentroids, m, dsub, nCodes)
-    centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
-    IndexStore.write(codes, indexDir, IvfPqCodes, "overwrite")
-  }
-
-  /** Append NEW vectors to a materialized IVF-PQ index without
-    * rebuilding — the increment pays one assignment pass against the
-    * saved centroids and one encode pass against the saved codebook,
-    * then lands in its cid= partitions. Both yardsticks DRIFT as the
-    * corpus grows (they stay the build-time samples); the rebuild
-    * signal is the recall gate degrading, as with the other two index
-    * families. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newVecs: DataFrame, idCol: String,
-      vecCol: String): Unit = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val codebook = spark.read.parquet(s"$indexDir/codebook")
-    val (m, dsub, _) = pqMeta(codebook)
-    val c = Caches.spreadByKey(
-      requirePqDim(newVecs, vecCol, m, dsub), col(idCol))
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"),
-        l2Norm(asDouble(col(vecCol))).as("vn"))
-    IndexStore.write(
-      pqEncodeAgainst(c.select(col("id"), col("v")), codebook, m, dsub)
-        .join(assignToCentroids(
-            c.select(col("id").as("neighbor_id"), col("v"), col("vn")),
-            centroids)
-          .select(col("neighbor_id").as("id"), col("cid")), "id"),
-      indexDir, IvfPqCodes, "append")
-  }
-
-  /** Serve from a [[buildIvfPqIndex]] index — bit-identical to the
-    * inline [[ivfPqTopK]] (IvfPqIndexSpec asserts it). The probed cids
-    * are collected into a LITERAL partition filter, so the scan
-    * statically prunes to nProbe cid= directories of codes. */
-  def ivfPqServeTopK(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val codebook = spark.read.parquet(s"$indexDir/codebook")
-    val (m, dsub, nCodes) = pqMeta(codebook)
-    val probes = ivfProbes(centroids, queries, idCol, vecCol, nProbe)
-      .eagerCheckpoint()
-    val cids = probes.select("cid").distinct().collect().map(_.get(0))
-    val codes = IndexStore.live(spark, indexDir, IvfPqCodes, Some(cids.toSeq))
-      .select(col("id"), col("codes"), col("cid"))
-    ivfPqSearch(codes, probes,
-      pqLuts(queries, codebook, idCol, vecCol, m, dsub, nCodes),
-      k, m, nCodes)
-  }
 
   /** SemDeDup (Abbas et al. '23, arXiv:2303.09540): semantic
     * deduplication via embedding clusters — cluster the corpus, compare
@@ -1711,8 +1516,8 @@ object Similarity {
     * embedding clusters (no k to choose, unlike k-means; hubs don't
     * absorb everything, unlike single-threshold near-dup). Input-
     * agnostic on purpose: at oracle scale feed [[bruteForceTopK]], at
-    * corpus scale the index-served lists ([[ivfServeTopK]] /
-    * [[lshServeTopK]] / [[pqServeTopK]]) — the mutuality join is one
+    * corpus scale an approximate list ([[ivfTopK]] / [[lshServeTopK]] /
+    * [[pqTopK]]) — the mutuality join is one
     * shuffle on the (query, neighbor) pair, never touching vectors. */
   def mutualKnnEdges(topk: DataFrame): DataFrame = {
     // scoped: the top-k lists feed BOTH sides of the mutuality join, and

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 
 /** Materialized corpus token statistics — the text-tier member of the
-  * build-once/serve-many index family ([[Similarity.buildIvfIndex]],
+  * build-once/serve-many index family ([[Similarity.buildLshIndex]],
   * [[Dedup]]'s MinHash index): ONE corpus tokenize pass reduces to a
   * persisted `(source, token, cnt)` table that then serves every
   * distribution-shaped query (per-source KL, top-token profiles,

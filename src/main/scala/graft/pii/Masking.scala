@@ -96,16 +96,14 @@ object Masking {
     * one call for every family — serves exclude them immediately; the
     * physical removal is the owner's next maintenance window,
     * [[graft.operators.IndexStore.purge]]). Erasure that stops at
-    * the base table is not erasure: the dedup postings and ANN lists
+    * the base table is not erasure: the dedup postings and LSH buckets
     * still carry the subject's fingerprints, and a probe would keep
     * surfacing the deleted ids. Returns a one-row audit report
     * (request size, corpus rows removed, indexes tombstoned) for the
     * caller's erasure ledger. */
   def forgetDocuments(spark: SparkSession, ids: DataFrame,
       idColName: String, corpusDir: Option[String],
-      minhashIndexDirs: Seq[String] = Nil,
-      annIndexDirs: Seq[String] = Nil,
-      bm25IndexDirs: Seq[String] = Nil): DataFrame = {
+      indexDirs: Seq[String] = Nil): DataFrame = {
     import spark.implicits._
     val victims = ids.select(col(ids.columns.head).as(idColName)).distinct()
     val nRequested = victims.count()
@@ -115,13 +113,9 @@ object Masking {
       graft.core.Tables.purgeRows(spark, d, idColName, ids)
       hit
     }.getOrElse(0L)
-    (minhashIndexDirs ++ annIndexDirs ++ bm25IndexDirs).foreach(d =>
-      graft.operators.IndexStore.delete(spark, d, ids))
-    Seq((nRequested, corpusRemoved, minhashIndexDirs.size.toLong,
-        annIndexDirs.size.toLong, bm25IndexDirs.size.toLong))
-      .toDF("n_requested", "corpus_rows_removed",
-        "minhash_indexes_tombstoned", "ann_indexes_tombstoned",
-        "bm25_indexes_tombstoned")
+    indexDirs.foreach(d => graft.operators.IndexStore.delete(spark, d, ids))
+    Seq((nRequested, corpusRemoved, indexDirs.size.toLong))
+      .toDF("n_requested", "corpus_rows_removed", "indexes_tombstoned")
   }
 
   /** Laplace-mechanism noisy counts (Dwork et al., TCC'06): grouped

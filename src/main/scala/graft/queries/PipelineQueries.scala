@@ -988,10 +988,7 @@ object PipelineQueries {
 
   /** Recall\@k gate for the IVF tier — v08's truth-join recall computed
     * over [[Similarity.ivfTopK]] instead of LSH, so BOTH approximate
-    * index families publish their quality metric in-engine and oracled.
-    * The materialized twin [[Similarity.ivfServeTopK]] is plan-identical
-    * by IvfIndexSpec's served ≡ inline assertion, so this gate covers
-    * the build/serve path too (asserted again directly in IvfIndexSpec). */
+    * index families publish their quality metric in-engine and oracled. */
   def v13IvfRecall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") < 5)

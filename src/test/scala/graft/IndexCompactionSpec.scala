@@ -7,12 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{IndexStore, Similarity}
 
-/** Index compaction parity across the ANN index families: every append
-  * piles files into the growable table (LSH `bucketed`, IVF `assigned`,
-  * PQ / IVF-PQ `codes`); `IndexStore.compact` must collapse the
-  * pile WITHOUT changing a single served row — compaction is a layout
-  * concern, never a semantic one. (The MinHash family's twin lives in
-  * DedupIndexSpec.) */
+/** Index compaction parity for the ANN index: every append piles files
+  * into the growable table (LSH `bucketed`); `IndexStore.compact` must
+  * collapse the pile WITHOUT changing a single served row — compaction
+  * is a layout concern, never a semantic one. (The MinHash family's twin
+  * lives in DedupIndexSpec.) */
 class IndexCompactionSpec extends SparkSuite {
 
   private def emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
@@ -58,22 +57,6 @@ class IndexCompactionSpec extends SparkSuite {
         k = 3))
   }
 
-  test("IVF index: compacted ≡ uncompacted serve, files collapse") {
-    checkFamily("ivf",
-      (c, d) => Similarity.buildIvfIndex(c, "vec_id", "embedding", d),
-      (s, d, n) => Similarity.appendToIvfIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.ivfServeTopK(s, d, queries, "vec_id", "embedding",
-        k = 3))
-  }
-
-  test("PQ index: compacted ≡ uncompacted serve, files collapse") {
-    checkFamily("pq",
-      (c, d) => Similarity.buildPqIndex(c, "vec_id", "embedding", d),
-      (s, d, n) => Similarity.appendToPqIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.pqServeTopK(s, d, queries, "vec_id", "embedding",
-        k = 3))
-  }
-
   test("maintenance lock: second maintainer fails fast, lock released " +
       "after body and after a crash-throwing body; breakLock clears stale") {
     import graft.core.Tables
@@ -101,15 +84,6 @@ class IndexCompactionSpec extends SparkSuite {
     assert(Tables.breakMaintenanceLock(spark, idx))
     assert(!lockFile.exists)
     assert(!Tables.breakMaintenanceLock(spark, idx)) // nothing to clear
-  }
-
-  test("IVF-PQ index: compacted ≡ uncompacted serve, files collapse") {
-    checkFamily("ivfpq",
-      (c, d) => Similarity.buildIvfPqIndex(c, "vec_id", "embedding", d),
-      (s, d, n) =>
-        Similarity.appendToIvfPqIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.ivfPqServeTopK(s, d, queries, "vec_id",
-        "embedding", k = 3))
   }
 
   test("delta compaction heals a crash between the two swap renames") {

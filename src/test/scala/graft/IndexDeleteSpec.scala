@@ -10,11 +10,11 @@ import graft.operators.{Dedup, IndexStore, Similarity}
 /** Tombstone deletes across the materialized index families — the
   * right-to-be-forgotten contract: after `IndexStore.delete`, a tombstoned
   * index must serve EXACTLY like an index whose deleted rows were never
-  * appended (exact for every family because the centroid / codebook /
-  * hyperplane yardsticks are frozen at build time over the CORE slice,
-  * which both scenarios share); a physical purge must not change a
-  * single served row, must clear the tombstone table, and must leave
-  * unaffected partitions' files untouched. */
+  * appended (exact for every family because the hyperplane / permutation
+  * yardsticks are frozen at build time, shared by both scenarios); a
+  * physical purge must not change a single served row, must clear the
+  * tombstone table, and must leave unaffected partitions' files
+  * untouched. */
 class IndexDeleteSpec extends SparkSuite {
   import spark.implicits._
 
@@ -61,31 +61,6 @@ class IndexDeleteSpec extends SparkSuite {
       (s, d, n) => Similarity.appendToLshIndex(s, d, n, "vec_id", "embedding"),
       (s, d) => Similarity.lshServeTopK(s, d, queries, "vec_id", "embedding",
         k = 3))
-  }
-
-  test("IVF index: delete ≡ never-appended; purge is serve-invariant") {
-    checkFamily("ivf", "vec_id", emb,
-      (c, d) => Similarity.buildIvfIndex(c, "vec_id", "embedding", d),
-      (s, d, n) => Similarity.appendToIvfIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.ivfServeTopK(s, d, queries, "vec_id", "embedding",
-        k = 3))
-  }
-
-  test("PQ index: delete ≡ never-appended; purge is serve-invariant") {
-    checkFamily("pq", "vec_id", emb,
-      (c, d) => Similarity.buildPqIndex(c, "vec_id", "embedding", d),
-      (s, d, n) => Similarity.appendToPqIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.pqServeTopK(s, d, queries, "vec_id", "embedding",
-        k = 3))
-  }
-
-  test("IVF-PQ index: delete ≡ never-appended; purge is serve-invariant") {
-    checkFamily("ivfpq", "vec_id", emb,
-      (c, d) => Similarity.buildIvfPqIndex(c, "vec_id", "embedding", d),
-      (s, d, n) =>
-        Similarity.appendToIvfPqIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.ivfPqServeTopK(s, d, queries, "vec_id",
-        "embedding", k = 3))
   }
 
   test("MinHash index: delete ≡ never-appended under hot-bucket " +
@@ -135,7 +110,7 @@ class IndexDeleteSpec extends SparkSuite {
     docs.write.mode("overwrite").parquet(corpusDir)
     Dedup.buildMinhashIndex(spark.read.parquet(corpusDir),
       "doc_id", "text", mhIdx, parts = 8)
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", annIdx)
+    Similarity.buildLshIndex(emb, "vec_id", "embedding", annIdx)
     // near-dup copies of the forgotten docs still probe the index —
     // before erasure they must hit, after they must not
     val victims = docs.filter($"doc_id" < 3)
@@ -145,7 +120,7 @@ class IndexDeleteSpec extends SparkSuite {
       threshold = 0.4).count() > 0, "planted dups must hit before erasure")
     val report = graft.pii.Masking.forgetDocuments(spark,
         victims.select("doc_id"), "doc_id", Some(corpusDir),
-        minhashIndexDirs = Seq(mhIdx)).head
+        indexDirs = Seq(mhIdx)).head
     assert(report.getLong(0) === 3 && report.getLong(1) === 3)
     assert(spark.read.parquet(corpusDir).filter($"doc_id" < 3).isEmpty,
       "corpus still holds forgotten rows")
@@ -157,8 +132,8 @@ class IndexDeleteSpec extends SparkSuite {
     val vq = emb.filter(col("vec_id") >= 5).limit(5)
     graft.pii.Masking.forgetDocuments(spark,
       emb.filter(col("vec_id") < 3).select("vec_id"), "vec_id", None,
-      annIndexDirs = Seq(annIdx))
-    assert(Similarity.ivfServeTopK(spark, annIdx, vq, "vec_id", "embedding",
+      indexDirs = Seq(annIdx))
+    assert(Similarity.lshServeTopK(spark, annIdx, vq, "vec_id", "embedding",
         k = 5)
       .filter(col("neighbor_id") < 3).isEmpty,
       "ANN index still serves forgotten vectors")
@@ -166,25 +141,25 @@ class IndexDeleteSpec extends SparkSuite {
 
   test("purge rewrites only the partitions that hold victim rows") {
     val idx = Files.createTempDirectory("del_prune").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx)
-    val assignedDir = new java.io.File(s"$idx/assigned")
-    // victims = one centroid list's members → exactly one cid= dir moves
-    val victimCid = spark.read.parquet(s"$idx/assigned")
-      .select("cid").distinct().orderBy("cid")
+    Similarity.buildLshIndex(emb, "vec_id", "embedding", idx)
+    val bucketedDir = new java.io.File(s"$idx/bucketed")
+    // victims = one bucket's members → exactly one bucket= dir moves
+    val victimBucket = spark.read.parquet(s"$idx/bucketed")
+      .select("bucket").distinct().orderBy("bucket")
       .head.getAs[Number](0).longValue // partition col re-inferred as Int
-    val victims = spark.read.parquet(s"$idx/assigned")
-      .filter(col("cid") === victimCid).select("neighbor_id")
-    val mtimes = assignedDir.listFiles.filter(_.isDirectory)
+    val victims = spark.read.parquet(s"$idx/bucketed")
+      .filter(col("bucket") === victimBucket).select("neighbor_id")
+    val mtimes = bucketedDir.listFiles.filter(_.isDirectory)
       .map(d => d.getName -> d.listFiles.map(_.lastModified).max).toMap
     IndexStore.delete(spark, idx, victims)
     IndexStore.purge(spark, idx)
-    val after = assignedDir.listFiles.filter(_.isDirectory)
+    val after = bucketedDir.listFiles.filter(_.isDirectory)
       .map(d => d.getName -> d.listFiles.map(_.lastModified).max).toMap
-    val untouched = mtimes.keys.filter(_ != s"cid=$victimCid")
+    val untouched = mtimes.keys.filter(_ != s"bucket=$victimBucket")
     assert(untouched.nonEmpty)
     untouched.foreach(p =>
       assert(after(p) === mtimes(p), s"purge rewrote unaffected $p"))
-    assert(after(s"cid=$victimCid") > mtimes(s"cid=$victimCid"),
+    assert(after(s"bucket=$victimBucket") > mtimes(s"bucket=$victimBucket"),
       "affected partition was not rewritten")
   }
 

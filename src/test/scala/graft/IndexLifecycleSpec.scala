@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, IndexStore, SearchIndex, Similarity}
+import graft.operators.{Dedup, IndexStore, Similarity}
 
 /** One index lifecycle for every family: build → append → delete →
   * purge → compact, with maintenance called through [[IndexStore]] on
@@ -27,48 +27,25 @@ class IndexLifecycleSpec extends SparkSuite {
     .withColumn("text", concat($"text", lit(" tail")))
 
   /** A family: how to build, append and serve it, and the id column of
-    * its corpus. `oneShotTwin`: the index has no data-dependent
-    * yardstick, so the never-held twin is a one-shot build over the
-    * kept rows; otherwise the twin replays the same core build and
-    * appends the kept slice (the centroid / codebook yardsticks are
-    * frozen at the core build). */
+    * its corpus. Neither family has a data-dependent yardstick, so the
+    * never-held twin is a one-shot build over the kept rows. */
   private final case class Family(tag: String, corpus: () => DataFrame,
-      idCol: String, oneShotTwin: Boolean,
+      idCol: String,
       build: (DataFrame, String) => Unit,
       append: (SparkSession, String, DataFrame) => Unit,
       serve: (SparkSession, String) => DataFrame)
 
   private val families = Seq(
-    Family("lsh", () => emb, "vec_id", oneShotTwin = true,
+    Family("lsh", () => emb, "vec_id",
       (c, d) => Similarity.buildLshIndex(c, "vec_id", "embedding", d),
       (s, d, n) => Similarity.appendToLshIndex(s, d, n, "vec_id", "embedding"),
       (s, d) => Similarity.lshServeTopK(s, d, vecQueries, "vec_id",
         "embedding", k = 3)),
-    Family("ivf", () => emb, "vec_id", oneShotTwin = false,
-      (c, d) => Similarity.buildIvfIndex(c, "vec_id", "embedding", d),
-      (s, d, n) => Similarity.appendToIvfIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.ivfServeTopK(s, d, vecQueries, "vec_id",
-        "embedding", k = 3)),
-    Family("pq", () => emb, "vec_id", oneShotTwin = false,
-      (c, d) => Similarity.buildPqIndex(c, "vec_id", "embedding", d),
-      (s, d, n) => Similarity.appendToPqIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.pqServeTopK(s, d, vecQueries, "vec_id",
-        "embedding", k = 3)),
-    Family("ivfpq", () => emb, "vec_id", oneShotTwin = false,
-      (c, d) => Similarity.buildIvfPqIndex(c, "vec_id", "embedding", d),
-      (s, d, n) =>
-        Similarity.appendToIvfPqIndex(s, d, n, "vec_id", "embedding"),
-      (s, d) => Similarity.ivfPqServeTopK(s, d, vecQueries, "vec_id",
-        "embedding", k = 3)),
-    Family("minhash", () => docs, "doc_id", oneShotTwin = true,
+    Family("minhash", () => docs, "doc_id",
       (c, d) => Dedup.buildMinhashIndex(c, "doc_id", "text", d, parts = 8),
       (s, d, n) => Dedup.appendToMinhashIndex(s, d, n, "doc_id", "text"),
       (s, d) => Dedup.probeMinhashIndex(s, d, planted, "doc_id", "text",
-        threshold = 0.4, maxBucket = 3)),
-    Family("bm25", () => docs, "doc_id", oneShotTwin = true,
-      (c, d) => SearchIndex.buildBm25Index(c, "doc_id", "text", d, parts = 8),
-      (s, d, n) => SearchIndex.appendToBm25Index(s, d, n, "doc_id", "text"),
-      (s, d) => SearchIndex.bm25Serve(s, d, Seq("spark", "vector"), k = 10)))
+        threshold = 0.4, maxBucket = 3)))
 
   private def rows(df: DataFrame) =
     df.collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -94,8 +71,7 @@ class IndexLifecycleSpec extends SparkSuite {
       f.build(core, dir)
       f.append(spark, dir, kept)
       f.append(spark, dir, f.corpus().filter(id % 3 === 2))
-      if (f.oneShotTwin) f.build(core.unionByName(kept), twin)
-      else { f.build(core, twin); f.append(spark, twin, kept) }
+      f.build(core.unionByName(kept), twin)
       val want = rows(f.serve(spark, twin))
       assert(want.nonEmpty, s"${f.tag}: vacuous check")
       assert(rows(f.serve(spark, dir)) !== want,
@@ -124,10 +100,7 @@ class IndexLifecycleSpec extends SparkSuite {
       f -> d
     }
     graft.pii.Masking.forgetDocuments(spark, victims, "id", None,
-      minhashIndexDirs = dirs.filter(_._1.tag == "minhash").map(_._2),
-      annIndexDirs = dirs.filter(p => Seq("lsh", "ivf", "pq", "ivfpq")
-        .contains(p._1.tag)).map(_._2),
-      bm25IndexDirs = dirs.filter(_._1.tag == "bm25").map(_._2))
+      indexDirs = dirs.map(_._2))
     val hidden = dirs.map { case (f, d) => f.tag -> rows(f.serve(spark, d)) }
     dirs.foreach { case (_, d) => IndexStore.purge(spark, d) }
     dirs.zip(hidden).foreach { case ((f, d), (_, want)) =>

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSuite {
   import spark.implicits._
+
+  private val sfDir = sf0001
 
   private def vecs(rows: (Long, Seq[Float])*) =
     rows.toDF("vec_id", "embedding")
@@ -610,5 +613,33 @@ class SimilaritySpec extends SparkSuite {
         "label", k = 3, numPlanes = 1, dim = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
     assert(k3.forall { case (_, n, p) => n === 3L && p === 0.3333 })
+  }
+
+  test("inline ivfFilteredTopK: slices airtight, ≡ label-restricted candidates") {
+    val emb = Tables.table(spark, sfDir, "embeddings")
+    val queries = emb.filter(col("vec_id") < 5)
+    val got = Similarity.ivfFilteredTopK(emb, queries, "vec_id", "embedding",
+      "label", k = 3, nCentroids = 16, nProbe = 4)
+    val labels = emb.select(col("vec_id").as("neighbor_id"), col("label"))
+    val qLabels = emb.select(col("vec_id").as("query_id"),
+      col("label").as("q_label"))
+    val crossed = got.join(labels, "neighbor_id").join(qLabels, "query_id")
+      .filter(col("label") =!= col("q_label"))
+    assert(crossed.isEmpty, "filtered IVF returned an off-label neighbor")
+    assert(got.count() > 0)
+  }
+
+  test("ivfPqTopK: an identical vector is found at rank 1 through the probed lists") {
+    val emb = Tables.table(spark, sfDir, "embeddings")
+      .select("vec_id", "embedding")
+    // the dup assigns to the same centroid the query probes first, so
+    // list pruning cannot lose it, and it is the ADC argmin (the pq
+    // dup-argmin argument, per subspace)
+    val dup = emb.filter(col("vec_id") === 3)
+      .select(lit(9000L).as("vec_id"), col("embedding"))
+    val out = Similarity.ivfPqTopK(emb.unionByName(dup),
+        emb.filter(col("vec_id") === 3), "vec_id", "embedding", k = 1)
+      .collect()(0)
+    assert(out.getLong(1) === 9000L)
   }
 }

@@ -90,35 +90,6 @@ class TopicSourceSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("readStreamAuto falls back to the topic log when kafka is absent") {
-    // this distribution ships no kafka connector; the shim must detect
-    // that and bind the graft-topic backend with the same row shape
-    assert(!TopicSource.kafkaAvailable)
-    val root = Files.createTempDirectory("topic_auto").toString
-    new FileTopic(root).publish("t", Seq("x"))
-    val df = TopicSource.readStreamAuto(spark, root, "t",
-      kafkaBootstrap = Some("broker:9092"))
-    assert(df.isStreaming)
-    assert(df.schema.fieldNames.toSeq ===
-      Seq("key", "value", "topic", "partition", "offset", "timestamp", "timestampType"))
-  }
-
-  test("readStreamAuto kafka branch binds the real connector when bundled") {
-    // the format("kafka") branch cannot EXECUTE in this distribution (no
-    // spark-sql-kafka connector, no broker, zero egress) — this case is
-    // auto-canceled here and runs wherever the connector is bundled,
-    // keeping the branch exercised in connector-bearing deployments
-    // instead of silently dead everywhere (see readStreamAuto scaladoc)
-    assume(TopicSource.kafkaAvailable,
-      "spark-sql-kafka connector not on the classpath — branch fenced by " +
-        "the fallback guard test above")
-    val df = TopicSource.readStreamAuto(spark, root = "/unused", "t",
-      kafkaBootstrap = Some("localhost:9092"))
-    assert(df.isStreaming)
-    assert(df.schema.fieldNames.toSeq ===
-      Seq("key", "value", "topic", "partition", "offset", "timestamp", "timestampType"))
-  }
-
   test("short name resolves via DataSourceRegister") {
     val root = Files.createTempDirectory("topic_sn").toString
     new FileTopic(root).publish("t", Seq("a"))
