@@ -52,8 +52,7 @@ object Tables {
     * producer (CTAS, COPY INTO, the PII retention tier) derives it the
     * same way so every consumer — partition-pruned scans,
     * [[graft.pii.Masking.retentionDropPartitions]]' directory-level
-    * retention, [[purgeRows]]' partition-filtered rewrite — composes
-    * over any of their outputs. */
+    * retention — composes over any of their outputs. */
   val DatePartitionCol = "p_date"
 
   def withDatePartition(df: DataFrame, tsCol: String): DataFrame =
@@ -145,14 +144,16 @@ object Tables {
       .format("parquet")
       .saveAsTable(tableName)
 
-  /** Small-file compaction: rewrite a parquet table into
-    * ~`targetBytes`-sized files. Streaming sinks and row-at-a-time
-    * appends accrete thousands of KB-scale files; at 100 TB the scan's
-    * task-scheduling and footer-reading overhead then dominates I/O.
-    * Sizing comes from the actual on-disk bytes (not a row-count
-    * guess); the rewrite is an atomic swap via a temp dir so a reader
-    * never sees a half-compacted table. Returns (filesBefore,
-    * filesAfter). */
+  /** Swap-sibling naming: DOT-prefixed so that when `p` is a
+    * `key=value` partition directory, crash residue (`.key=a__swap_old`)
+    * is invisible to Spark partition discovery — a bare
+    * `key=a__swap_old` sibling would be read back as a real partition
+    * with a corrupted key, duplicating the backup's rows into the
+    * table. */
+  private def swapSibling(p: org.apache.hadoop.fs.Path,
+      suffix: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}$suffix")
+
   /** Atomically replace the parquet table at `dir` with `next`'s
     * contents: write to a temp dir, then a checked two-rename swap.
     * Crash recovery on entry: a stale tmp is discardable (the swap
@@ -162,28 +163,19 @@ object Tables {
     * rolls back) rather than falling through to deleting the only
     * surviving copy. `next` MAY read lazily from `dir` itself: it is
     * fully written to the temp dir while the original files are still
-    * in place, before any rename. */
-  /** `marker` (name → contents) is written INSIDE the staged directory
+    * in place, before any rename.
+    *
+    * `marker` (name → contents) is written INSIDE the staged directory
     * before the swap, so it commits atomically with the data — an
     * underscore-prefixed name is invisible to parquet readers. Callers
     * use it to make a swap idempotent (e.g. [[graft.streaming
     * .StreamRollup]] records the applied micro-batch id: a crash-replayed
     * batch sees its own id already committed and skips). */
-  /** Swap-sibling naming: DOT-prefixed so that when `p` is a
-    * `key=value` partition directory, crash residue (`.key=a__swap_old`)
-    * is invisible to Spark partition discovery and to the partition
-    * filters in [[compactTable]]/[[purgeRows]] — a bare `key=a__swap_old`
-    * sibling would be read back as a real partition with a corrupted
-    * key, duplicating the backup's rows into the table. */
-  private def swapSibling(p: org.apache.hadoop.fs.Path,
-      suffix: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}$suffix")
-
   def replaceAtomic(spark: SparkSession, dir: String,
       next: DataFrame, marker: Option[(String, String)] = None): Unit = {
     // Path.getFileSystem, not FileSystem.get(new URI(dir)): a raw URI
     // parse rejects legal path characters (a space in a Hive partition
-    // value reaches here via purgeRows) that Path's own parsing accepts
+    // value) that Path's own parsing accepts
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = swapSibling(path, "__swap_tmp")
@@ -210,49 +202,22 @@ object Tables {
     fs.delete(bak, true)
   }
 
-  /** Recover from a temp-and-swap crash that landed between the two
-    * renames (settled dir missing, backup present): restore the backup,
-    * so a crashed maintenance op heals on its next run instead of
-    * failing unrecoverably on the missing settled table. */
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      backup: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.exists(target) && fs.exists(backup) && !fs.rename(backup, target))
-      throw new java.io.IOException(
-        s"swap recovery failed: could not restore $backup to $target")
-
-  /** [[recoverSwap]] for a [[replaceAtomic]]-managed directory, by
-    * path: restores `dir` from its swap backup if a crash landed
-    * between the two renames. Call BEFORE reading `dir` in any code
-    * path that may run again after such a crash (the streaming
-    * maintainers [[graft.streaming.StreamRollup]] /
-    * [[graft.streaming.StreamApply]] read the snapshot before their
-    * replaceAtomic would get the chance to self-heal — without this
-    * they crash-loop on the missing directory forever). */
+  /** Restore `dir` from its [[replaceAtomic]] swap backup if a crash
+    * landed between the two renames (settled dir missing, backup
+    * present). Call BEFORE reading `dir` in any code path that may run
+    * again after such a crash (the streaming maintainers
+    * [[graft.streaming.StreamRollup]] / [[graft.streaming.StreamApply]]
+    * read the snapshot before their replaceAtomic would get the chance
+    * to self-heal — without this they crash-loop on the missing
+    * directory forever). */
   def recoverReplaceAtomic(spark: SparkSession, dir: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, path, swapSibling(path, "__swap_old"))
+    val backup = swapSibling(path, "__swap_old")
+    if (!fs.exists(path) && fs.exists(backup) && !fs.rename(backup, path))
+      throw new java.io.IOException(
+        s"swap recovery failed: could not restore $backup to $path")
   }
-
-  /** Restore every partition directory under `dir` whose swap crashed
-    * between the two renames (backup residue `.k=v__swap_old` present,
-    * settled dir missing) — the table-level heal [[compactTable]] and
-    * [[purgeRows]] run at entry, so a crashed per-partition swap is
-    * repaired by the next maintenance pass instead of silently serving
-    * the table without that partition's rows. */
-  private def healSwapResidue(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(path))
-      fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(".") &&
-          s.getPath.getName.endsWith("__swap_old"))
-        .foreach { s =>
-          val target = new org.apache.hadoop.fs.Path(path,
-            s.getPath.getName.stripPrefix(".").stripSuffix("__swap_old"))
-          recoverSwap(fs, target, s.getPath)
-        }
 
   /** Stage `next` (and an optional marker file) into `tmp` — the shared
     * pre-swap step of [[replaceAtomic]] and the summary-table first
@@ -268,217 +233,6 @@ object Tables {
     }
   }
 
-  def compact(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetFiles = fs.listStatus(path)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    // partitioned layouts (subdirectories) would be flattened by a blind
-    // rewrite — refuse loudly rather than destroy the layout
-    if (fs.listStatus(path).exists(s => s.isDirectory &&
-        !s.getPath.getName.startsWith("_")))
-      throw new IllegalArgumentException(
-        s"compact: $dir contains partition subdirectories; compact each " +
-          "partition directory individually to preserve the layout")
-    val before = parquetFiles
-    val totalBytes = before.map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    replaceAtomic(spark, dir, spark.read.parquet(dir).repartition(nFiles))
-    (before.length, parquetFiles.length)
-  }
-
-  /** [[compact]] for a possibly-partitioned parquet table: each
-    * `key=value` partition directory is compacted individually (the
-    * layout-preserving discipline [[compact]] itself enforces); a flat
-    * directory is compacted directly. Pure layout change — append-mode
-    * writers pile files per partition, this folds the pile. Returns
-    * (files before, files after) summed over partitions. Same
-    * concurrency contract as [[compact]]: one compactor, not
-    * concurrent with readers of the same partition. */
-  def compactTable(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a TABLE-level crashed swap first: with the settled dir gone
-    // and only the backup sibling present, the missing-dir early return
-    // below would report success over a vanished table forever
-    recoverSwap(fs, path, swapSibling(path, "__swap_old"))
-    if (!fs.exists(path)) return (0, 0)
-    healSwapResidue(fs, path)
-    val partDirs = fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("=") &&
-        !s.getPath.getName.startsWith(".") &&
-        !s.getPath.getName.startsWith("_"))
-    if (partDirs.isEmpty) compact(spark, dir, targetBytes)
-    else partDirs.map(d => compact(spark, d.getPath.toString, targetBytes))
-      .foldLeft((0, 0)) { case ((b, a), (pb, pa)) => (b + pb, a + pa) }
-  }
-
-  /** Physically delete the rows of a parquet table whose `idColName`
-    * appears in `ids` — the purge half of a tombstone-delete protocol
-    * (the read half is [[antiTombstones]]). Cost ∝ AFFECTED partitions:
-    * for a `key=value`-partitioned layout one column-pruned semi-join
-    * scan finds the partitions that actually hold victim rows, and only
-    * those directories are rewritten (each via [[replaceAtomic]]'s
-    * staged-write-then-rename swap — a crash never loses a partition);
-    * untouched partitions keep their files byte-identical. A flat
-    * directory is rewritten whole, but only if it holds victims at all.
-    * At 100 TB with rare deletes (the GDPR/right-to-be-forgotten shape)
-    * this touches a handful of directories, never the corpus.
-    * Concurrency contract: one purger, not concurrent with readers of
-    * the affected partitions ([[replaceAtomic]]'s contract). */
-  def purgeRows(spark: SparkSession, dir: String, idColName: String,
-      ids: DataFrame): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same table-level heal as compactTable: purge must restore a
-    // crashed swap, not skip the "missing" table
-    recoverSwap(fs, path, swapSibling(path, "__swap_old"))
-    if (!fs.exists(path)) return
-    healSwapResidue(fs, path)
-    val victims = broadcast(
-      ids.select(col(ids.columns.head).as(idColName)).distinct())
-    val partDirs = fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("=") &&
-        !s.getPath.getName.startsWith(".") &&
-        !s.getPath.getName.startsWith("_"))
-    if (partDirs.isEmpty) {
-      if (!spark.read.parquet(dir)
-          .join(victims, Seq(idColName), "left_semi").isEmpty)
-        replaceAtomic(spark, dir,
-          spark.read.parquet(dir).join(victims, Seq(idColName), "left_anti"))
-    } else {
-      // a SECOND partition level would be flattened by the per-directory
-      // rewrite below (the anti-join result carries the nested key as a
-      // data column and replaceAtomic's staged write does not partition
-      // it back out) — after which partition discovery on the table root
-      // hits "Conflicting directory structures" and the WHOLE table is
-      // unreadable. Refuse loudly, like compact() does for its layout.
-      partDirs.foreach { d =>
-        val nested = fs.listStatus(d.getPath).exists(s =>
-          s.isDirectory && s.getPath.getName.contains("=") &&
-            !s.getPath.getName.startsWith(".") &&
-            !s.getPath.getName.startsWith("_"))
-        require(!nested,
-          s"purgeRows: ${d.getPath} holds nested partition directories; " +
-            "multi-level partitioned tables need a purge per leaf " +
-            "directory to preserve the layout")
-      }
-      val partCol = partDirs.head.getPath.getName.split("=", 2)(0)
-      // partition type inference OFF for the discovery read: an
-      // inferred numeric type re-renders the value ("01" reads back as
-      // 1), so the rebuilt leaf would miss the writer's directory —
-      // with inference disabled the value is the path's literal string
-      val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-      val inferWas = spark.conf.get(inferKey)
-      val affected =
-        try {
-          spark.conf.set(inferKey, "false")
-          spark.read.parquet(dir)
-            .join(victims, Seq(idColName), "left_semi")
-            .select(col(partCol).cast("string")).distinct()
-            .collect().map(r => Option(r.getString(0)))
-            .toSeq // bounded by the partition count
-        } finally spark.conf.set(inferKey, inferWas)
-      affected.foreach { vOpt =>
-        // rebuild the directory name the way the WRITER did: special
-        // characters are Hive-escaped in partition paths and a null
-        // partition value lands in the default-partition dir — a raw
-        // "$partCol=$v" would miss (or crash on) both
-        val leaf = vOpt match {
-          case Some(v) => s"$partCol=" + org.apache.spark.sql.catalyst
-            .catalog.ExternalCatalogUtils.escapePathName(v)
-          case None => s"$partCol=__HIVE_DEFAULT_PARTITION__"
-        }
-        val pd = s"$dir/$leaf"
-        // the partition column lives in the path, not the files — the
-        // anti-join below only touches real file columns
-        replaceAtomic(spark, pd,
-          spark.read.parquet(pd).join(victims, Seq(idColName), "left_anti"))
-      }
-    }
-  }
-
-  /** Enforce the one-maintainer-at-a-time contract that compaction and
-    * purge document: an atomic-create lock file BESIDE `dir` (sibling
-    * suffix like the `__swap_*` dirs — never inside, where a
-    * [[replaceAtomic]] swap would move it). A second maintainer fails
-    * fast with remediation instead of silently racing the rename dance.
-    * The lock guards MAINTAINERS against each other; readers are not
-    * blocked (maintainer-vs-reader safety comes from the per-partition
-    * atomic swaps plus the caller's own not-while-serving discipline).
-    * A maintainer that crashes leaves the lock behind — deliberate:
-    * an operator inspects (the file carries the acquire time) and
-    * clears it with [[breakMaintenanceLock]]; auto-expiry would let a
-    * slow-but-alive compactor be stomped. */
-  def withMaintenanceLock[T](spark: SparkSession, dir: String)(body: => T): T = {
-    val lock = new org.apache.hadoop.fs.Path(dir + "__maintenance_lock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out =
-      try fs.create(lock, false)
-      catch { case _: java.io.IOException =>
-        throw new IllegalStateException(
-          s"maintenance lock held at $lock — another compact/purge is " +
-            "running (or crashed; inspect the lock's timestamp and clear " +
-            "it with Tables.breakMaintenanceLock)")
-      }
-    // the timestamp write is INSIDE the delete-protected region: if it
-    // throws (disk full, transient FS error) the lock must not survive —
-    // the body never ran, and an orphaned lock blocks every future
-    // maintainer until an operator hand-clears it
-    try {
-      try out.write(System.currentTimeMillis().toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      body
-    } finally fs.delete(lock, false)
-  }
-
-  /** Clear a maintenance lock left by a CRASHED maintainer — an
-    * operator decision, never automatic (see [[withMaintenanceLock]]).
-    * Returns whether a lock was actually cleared. */
-  def breakMaintenanceLock(spark: SparkSession, dir: String): Boolean = {
-    val lock = new org.apache.hadoop.fs.Path(dir + "__maintenance_lock")
-    lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(lock, false)
-  }
-
-  /** The read half of the tombstone-delete protocol: drop the rows of
-    * `df` whose `idColName` is tombstoned in `tombDir` (a one-column
-    * parquet table of deleted ids). No tombstone table → `df`
-    * unchanged, zero plan overhead — the common case pays one
-    * existence probe. Tombstones broadcast: deletes are rare relative
-    * to the corpus by construction (bulk removal is a rebuild, not a
-    * delete stream). */
-  def antiTombstones(spark: SparkSession, tombDir: String,
-      df: DataFrame, idColName: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(tombDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) df
-    else df.join(
-      broadcast(spark.read.parquet(tombDir)
-        .select(col("id").as(idColName)).distinct()),
-      Seq(idColName), "left_anti")
-  }
-
-  /** Append deleted ids to `tombDir` — the write half of the tombstone
-    * protocol. One small file per delete batch; [[purgeRows]]-based
-    * purge clears the directory once the rows are physically gone.
-    * Rejects non-numeric id columns loudly: the silent long cast would
-    * turn string ids into nulls (or an ANSI cast crash), after which
-    * the anti-join drops nothing and the "deleted" rows keep serving. */
-  def appendTombstones(spark: SparkSession, tombDir: String,
-      ids: DataFrame): Unit = {
-    val f = ids.schema.fields.head
-    require(f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"appendTombstones: id column '${f.name}' is " +
-        s"${f.dataType.simpleString}; the tombstone protocol keys on " +
-        "numeric ids — surrogate-key string ids first")
-    ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(tombDir)
-  }
-
   /** Marker file carrying a summary table's last refresh epoch-millis —
     * underscore-prefixed so parquet readers skip it; written inside
     * [[replaceAtomic]]'s pre-swap tmp dir so it commits atomically WITH
@@ -488,8 +242,7 @@ object Tables {
   /** Read a marker file committed atomically with its table by
     * [[replaceAtomic]]'s staged write — the ONE copy of the read half
     * of the marker protocol ([[summaryTable]]'s TTL stamp,
-    * [[graft.streaming.StreamRollup]]'s applied-batch id, the BM25
-    * index's folded-tombstones signature). */
+    * [[graft.streaming.StreamRollup]]'s applied-batch id). */
   def readMarker(spark: SparkSession, dir: String,
       name: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(dir, name)

@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * value's `nProbes` positions come from seeded `xxhash64` re-hashes;
   * positions fold into per-word masks with a map-side-combined
   * `bit_or` groupBy (the shuffle carries ≤ nWords rows), and the words
-  * are collected — a broadcast-sized index artifact (8·nWords bytes),
-  * the same driver-holds-the-sketch pattern as
-  * [[Similarity.lshServeTopK]]'s probed-bucket list. Probe: the word
+  * are collected to the driver — a broadcast-sized index artifact
+  * (8·nWords bytes). Probe: the word
   * array rides into the plan as one literal; each probe is
   * element_at + shift + mask — all inside whole-stage codegen.
   *

@@ -62,52 +62,13 @@ private[graft] object Caches {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"ckpt $caller")
     try {
-      val out =
-        if (reliable) {
-          require(sc.getCheckpointDir.isDefined,
-            "spark.graft.checkpoint.mode=reliable needs " +
-              "sparkContext.setCheckpointDir(<fault-tolerant path>)")
-          df.checkpoint()
-        } else df.localCheckpoint()
-      Option(sweepScope.get).foreach(_ += out)
-      out
+      if (reliable) {
+        require(sc.getCheckpointDir.isDefined,
+          "spark.graft.checkpoint.mode=reliable needs " +
+            "sparkContext.setCheckpointDir(<fault-tolerant path>)")
+        df.checkpoint()
+      } else df.localCheckpoint()
     } finally sc.setJobDescription(prev)
-  }
-
-  private val sweepScope = new ThreadLocal[mutable.Buffer[DataFrame]]
-
-  /** Track every checkpoint [[eager]] creates inside `body` (on this
-    * thread) and RELEASE them all at exit — blocks unpersisted, and in
-    * reliable mode the checkpoint FILES deleted.
-    *
-    * This is the per-micro-batch discipline for streaming operators
-    * whose batch bodies run eager-checkpointing engine operators
-    * (e.g. [[graft.streaming.StreamIndexProbe]] → probeMinhashIndex):
-    * each batch otherwise leaks its interior checkpoints — executor
-    * storage blocks in local mode (freed only when GC + the async
-    * ContextCleaner catch up), FILES on the checkpoint store in
-    * reliable mode (freed NEVER: Spark only cleans checkpoint files
-    * under referenceTracking.cleanCheckpoints, off by default) — and a
-    * long-lived stream grows without bound. Batch harnesses get the
-    * same hygiene from the between-queries [[releaseAllPersistent]]
-    * sweep; a stream has no between-queries, so the sweep rides the
-    * batch body. ReliableCheckpointSpec pins file-boundedness across a
-    * kill-and-restart.
-    *
-    * CONTRACT: everything `body` returns or writes must be FULLY
-    * materialized (sunk) before exit — released checkpoints cannot be
-    * recomputed. Nested scopes release only their own frames; frames
-    * the body already released (iterative supersession) release
-    * idempotently. */
-  def sweepAfter[A](body: => A): A = {
-    val buf = mutable.Buffer.empty[DataFrame]
-    val outer = sweepScope.get
-    sweepScope.set(buf)
-    try body
-    finally {
-      sweepScope.set(outer)
-      buf.foreach(df => release(df))
-    }
   }
 
   /** Postfix sugar for [[eager]]: `df.eagerCheckpoint()` — keeps

@@ -1148,164 +1148,4 @@ object Dedup {
           first(col("sz_a")).as("__sa"), first(col("sz_b")).as("__sb")))
     }
   }
-
-  // ---- materialized MinHash dedup index (build once / probe many) ----
-
-  /** Materialize the MinHash text-dedup index — the dedup tier's
-    * build-once/serve-many counterpart of [[Similarity.buildLshIndex]]:
-    * a `postings` table (band, bucket, id) PARTITIONED BY
-    * `bucket_p = pmod(bucket, parts)` (the probe's partition-pruning
-    * key), a `shingles` table (id, hs) for exact-Jaccard verification —
-    * partitioned by `id_p = pmod(xxhash64(id), parts)` so the
-    * verification join prunes too —
-    * and a 1-row `meta` table freezing (k, num_hashes, bands, parts) —
-    * probe and append must replay the IDENTICAL signature arithmetic.
-    * [[incrementalMinhashPairs]] makes the nightly increment cheap but
-    * still re-signs the settled corpus every run; this persists that
-    * work, so "is this document a near-dup of anything we have EVER
-    * ingested" costs one signature pass over the probe batch plus a
-    * partition-pruned postings scan.
-    *
-    * Postings rows are a PURE per-document function of the frozen
-    * parameters — no bucket statistics are stored — so
-    * [[appendToMinhashIndex]] is ALWAYS exactly equivalent to a
-    * one-shot rebuild (DedupIndexSpec asserts it); hot-bucket capping
-    * happens at probe time over the probed buckets only. */
-  def buildMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
-      indexDir: String, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, parts: Int = 64): Unit = {
-    require(numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    require(parts >= 1, s"parts ($parts) must be >= 1")
-    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("minhash",
-      Map("k" -> k.toLong, "num_hashes" -> numHashes.toLong,
-        "bands" -> bands.toLong, "parts" -> parts.toLong),
-      Seq(MinhashPostings, MinhashShingles)))
-    writeMinhashIndexRows(corpus, idCol, textCol,
-      k, numHashes, bands, parts, indexDir, "overwrite")
-  }
-
-  /** Append new documents to a materialized MinHash index without
-    * touching the settled postings — maintenance cost ∝ increment (the
-    * [[incrementalMinhashPairs]] economics, persisted). Unlike the
-    * IVF/PQ indices there is no data-dependent yardstick to drift:
-    * append ≡ rebuild, always. */
-  def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newDocs: DataFrame, idCol: String,
-      textCol: String): Unit = {
-    val m = IndexStore.meta(spark, indexDir)
-    writeMinhashIndexRows(newDocs, idCol, textCol, m.int("k"),
-      m.int("num_hashes"), m.int("bands"), m.int("parts"), indexDir, "append")
-  }
-
-  /** The MinHash index's growable tables: band postings and the
-    * exact-Jaccard verification shingles, both id-keyed. */
-  private val MinhashPostings = IndexStore.Table("postings", Some("id"),
-    Some("bucket_p"))
-  private val MinhashShingles = IndexStore.Table("shingles", Some("id"),
-    Some("id_p"))
-
-  private def writeMinhashIndexRows(docs: DataFrame, idCol: String,
-      textCol: String, k: Int, numHashes: Int, bands: Int, parts: Int,
-      indexDir: String, mode: String): Unit = {
-    val hs = Caches.spreadByKey(docs, col(idCol))
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), k).as("hs"))
-    hs.persist()
-    try {
-      // shingles partitioned by an id-hash directory key so the probe's
-      // verification join prunes to the candidate ids' partitions
-      // instead of scanning the corpus-wide shingle table
-      IndexStore.write(
-        hs.withColumn("id_p", pmod(xxhash64(col("id")), lit(parts.toLong))),
-        indexDir, MinhashShingles, mode)
-      IndexStore.write(signaturesFromHashes(hs, numHashes)
-          .select(col("id"),
-            posexplode(bandKeys(col("sig"), bands, numHashes / bands))
-              .as(Seq("band", "bucket")))
-          .withColumn("bucket_p", pmod(col("bucket"), lit(parts.toLong))),
-        indexDir, MinhashPostings, mode)
-    } finally hs.unpersist()
-  }
-
-  /** Probe a materialized MinHash index: near-dup pairs between the
-    * probe batch and EVERYTHING ever indexed, as
-    * (probe_id, index_id, jaccard) — exact-Jaccard verified at
-    * `threshold`, like every dedup in this file. Per-document pure
-    * against a frozen index, so chunking the probe stream any way
-    * (micro-batches included — the foreachBatch serving path) yields
-    * exactly the one-shot result; DedupIndexSpec asserts both that and
-    * equality with [[incrementalMinhashPairs]]'s new×old pairs.
-    *
-    * Scale shape: the probe batch pays one signature pass; its distinct
-    * `bucket_p` values become a LITERAL partition filter on the
-    * postings scan, and the candidates' `id_p` values one on the
-    * shingle scan (for serving-sized probes that is a handful of
-    * directories on each, never the corpus — both collects are bounded
-    * by `parts`); the band join is bucket-keyed; and buckets whose
-    * INDEX population exceeds `maxBucket` degrade to the bucket's
-    * min-id representative star (the [[withBucketStats]] discipline,
-    * computed at probe time over the probed buckets only, so append
-    * never has to restate stored statistics). */
-  def probeMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, probeDocs: DataFrame, idCol: String,
-      textCol: String, threshold: Double = 0.7,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(maxBucket >= 1, s"maxBucket ($maxBucket) must be >= 1")
-    val m = IndexStore.meta(spark, indexDir)
-    val (k, numHashes, bands, parts) = (m.int("k"), m.int("num_hashes"),
-      m.int("bands"), m.int("parts"))
-    val phs = Caches.spreadByKey(probeDocs, col(idCol))
-      .select(col(idCol).as("probe_id"),
-        hashedShingles(col(textCol), k).as("phs"))
-    Caches.scoped(phs) {
-      // feeds the bucket_p collect AND the candidate join — one compute
-      val probeBands = signaturesFromHashes(
-          phs.select(col("probe_id").as("id"), col("phs").as("hs")),
-          numHashes)
-        .select(col("id").as("probe_id"),
-          posexplode(bandKeys(col("sig"), bands, numHashes / bands))
-            .as(Seq("band", "bucket")))
-        .withColumn("bucket_p", pmod(col("bucket"), lit(parts.toLong)))
-        .eagerCheckpoint()
-      val ps = probeBands.select("bucket_p").distinct().collect()
-        .map(_.get(0)) // bounded by `parts`
-      // bucket → bucket_p is functional, so the pruned scan still holds
-      // EVERY index row of each probed bucket: the per-bucket population
-      // below is exact, not clipped by the pruning
-      // tombstoned docs drop BEFORE the bucket-size window, so the
-      // hot-bucket population and representative are computed over the
-      // live index only — a tombstoned probe is exactly a probe of the
-      // index rebuilt without the deleted docs (IndexDeleteSpec)
-      val postings = IndexStore.live(spark, indexDir, MinhashPostings,
-        Some(ps.toSeq))
-      val w = Window.partitionBy("band", "bucket")
-      val sized = postings
-        .withColumn("__bsz", count(lit(1)).over(w))
-        .withColumn("__rep", min(col("id")).over(w))
-      // candidates feed the shingle-partition collect AND the verify
-      // join — small (probe hits), persisted (NOT checkpointed: the
-      // plan probes must still see the postings scan and its partition
-      // filter through the cached lineage)
-      val cands = probeBands
-        .join(sized, Seq("bucket_p", "band", "bucket"))
-        .filter(col("probe_id") =!= col("id") &&
-          (col("__bsz") <= maxBucket || col("id") === col("__rep")))
-        .select(col("probe_id"), col("id").as("index_id")).distinct()
-      Caches.scoped(cands) {
-        val idPs = cands
-          .select(pmod(xxhash64(col("index_id")), lit(parts.toLong)))
-          .distinct().collect().map(_.get(0)) // bounded by `parts`
-        val ihs = IndexStore.live(spark, indexDir, MinhashShingles,
-            Some(idPs.toSeq))
-          .select(col("id").as("index_id"), col("hs").as("ihs"))
-        cands.join(phs, "probe_id").join(ihs, "index_id")
-          .withColumn("__i", size(array_intersect(col("phs"), col("ihs"))))
-          .withColumn("__j", col("__i").cast("double") /
-            (size(col("phs")) + size(col("ihs")) - col("__i")))
-          .filter(col("__j") >= threshold)
-          .select(col("probe_id"), col("index_id"),
-            round(col("__j"), 4).as("jaccard"))
-      }
-    }
-  }
 }

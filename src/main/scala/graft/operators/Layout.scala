@@ -17,7 +17,7 @@ import graft.functions.ZValue
   * primitives: scale → interleave → range-repartition → sort-within).
   *
   * At 100 TB this is a layout-maintenance job (one shuffle + sorted
-  * write, same cost class as [[graft.core.Tables.compact]]); the payoff
+  * write, same cost class as a small-file compaction); the payoff
   * is every subsequent multi-dimensional range scan reading
   * O(query-box / file-box) of the bytes. ZOrderSpec quantifies it: the
   * summed per-file bounding-box area is ~n_files× smaller than a

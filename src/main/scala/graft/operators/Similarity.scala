@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.operators.Caches.EagerOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -187,13 +186,10 @@ object Similarity {
     * re-ranks within candidates. Recall tunable by numPlanes (fewer
     * planes → bigger buckets → higher recall, more compute).
     *
-    * ID CONTRACT: `idCol` must be UNIQUE per row in both frames — the
-    * same one-row-per-id contract every index build enforces
-    * (requireIntegralId). Under it each (query, neighbor) pair meets
-    * at most once, so this inline path skips the (query, neighbor)
-    * max-dedup the served path performs (append epochs can re-add an
-    * id there). A frame with duplicated ids therefore ranks each copy
-    * separately. */
+    * ID CONTRACT: `idCol` must be UNIQUE per row in both frames. Under
+    * it each (query, neighbor) pair meets at most once, so no
+    * (query, neighbor) dedup runs; a frame with duplicated ids ranks
+    * each copy separately. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
@@ -241,7 +237,7 @@ object Similarity {
     * pure-2^p candidate pair survives folding (the fold merges cells,
     * never splits them), and the 1-bit multi-probe flips fold the same
     * way on both sides. Pass as `numBuckets` to the LSH entry points
-    * (0 keeps the pure 2^p space — the pinned-contract/index tier). */
+    * (0 keeps the pure 2^p space — the pinned-plane contract). */
   def autoBuckets(corpusRows: Long, targetBucket: Int = 128): Long = {
     require(targetBucket >= 1, s"targetBucket ($targetBucket) must be >= 1")
     math.max(1L, (corpusRows + targetBucket - 1) / targetBucket)
@@ -249,7 +245,7 @@ object Similarity {
 
   /** [[lshTopK]] with the plane count derived from the CORPUS SIZE
     * ([[autoPlanes]]) — the scale-safe default when no pinned-plane
-    * contract (an oracled replay, a frozen index) forces a constant.
+    * contract (an oracled replay) forces a constant.
     * Costs one count job over the corpus; pass `corpusRows` if the
     * caller already has it. */
   def lshTopKAuto(corpus: DataFrame, queries: DataFrame,
@@ -263,8 +259,7 @@ object Similarity {
   }
 
   /** The bucketed-corpus side of the LSH tier: (neighbor_id, v, vn,
-    * bucket) — what [[buildLshIndex]] persists and [[lshTopK]] computes
-    * inline. */
+    * bucket). */
   private def lshBucketed(corpus: DataFrame, idCol: String, vecCol: String,
       numPlanes: Int, dim: Int, seed: Long,
       numBuckets: Long = 0L): DataFrame =
@@ -354,9 +349,8 @@ object Similarity {
     *
     * Id preconditions, exactly: the cap is EXACT (kept == maxBucket)
     * when ids are unique within a bucket — true on every engine path
-    * (requireIntegralId at index build; a corpus vector is bucketed
-    * exactly once per id). Duplicated ids (reachable only from the
-    * inline tier on arbitrary user frames) widen the kept set to "all
+    * (a corpus vector is bucketed exactly once per id). Duplicated ids
+    * (reachable only on arbitrary user frames) widen the kept set to "all
     * rows whose cap key <= the k-th lowest key" — every duplicate of
     * a kept id survives, so the bound loosens to maxBucket x the max
     * duplicate multiplicity: still bounded, never the uncapped
@@ -371,10 +365,9 @@ object Similarity {
     // skip the threshold scan entirely instead of paying a provably
     // no-op aggregation
     if (maxBucket == Int.MaxValue) return bucketed
-    // every ENGINE path carries integral ids (requireIntegralId at
-    // index build, long vec_ids inline) and ranks by the id itself —
-    // the lowest-id members are exactly the ones cosineRank's tie-break
-    // would pick. The inline tier accepts ANY id type: those rank by
+    // every ENGINE path carries integral ids (long vec_ids) and ranks
+    // by the id itself — the lowest-id members are exactly the ones
+    // cosineRank's tie-break would pick. Any other id type ranks by
     // xxhash64 of the string form — a deterministic total order over
     // arbitrary ids (which members of an overflowed bucket survive is
     // a recall heuristic, not a contract) that keeps the bounded-heap
@@ -405,22 +398,14 @@ object Similarity {
       .select(bucketed.columns.map(col): _*)
   }
 
-  /** Candidate join + exact-cosine re-rank shared by the inline and
-    * served LSH paths — one definition so serve ≡ inline can't fork
-    * (and so the [[capServeBuckets]] hot-bucket guard covers both). */
+  /** Candidate join + exact-cosine re-rank behind [[lshTopK]], with the
+    * [[capServeBuckets]] hot-bucket guard in front. */
   private def lshSearch(rawBucketed: DataFrame, probes: DataFrame,
-      k: Int, excludeSelf: Boolean = true,
-      forceDedup: Boolean = false): DataFrame = {
+      k: Int, excludeSelf: Boolean): DataFrame = {
     val maxBucket = scala.util.Try(rawBucketed.sparkSession.conf
       .get("spark.graft.lsh.maxServeBucket", DefaultMaxServeBucket.toString)
       .toInt).getOrElse(DefaultMaxServeBucket)
     val bucketed = capServeBuckets(rawBucketed, maxBucket)
-    // sim BEFORE the multi-probe dedup: a candidate reached through two
-    // probe buckets pays one redundant 64-mult dot (rare, cheap) so the
-    // dedup exchange carries (query, neighbor, sim) — 24 bytes — instead
-    // of both raw vectors (~1 KB; measured 12.3 s → 7.6 s cold / 4.9 s
-    // steady on the sf0.1 all-vectors self-kNN). sim is a pure function
-    // of the pair, so max() over duplicates is exact, not a tie-break.
     // excludeSelf=false is the CROSS-corpus mode ([[marginMining]]):
     // when query and corpus ids come from different namespaces, an
     // equal-id pair is a coincidence, not a self-match — dropping it
@@ -429,116 +414,14 @@ object Similarity {
     val candidates =
       if (excludeSelf) met.filter(col("query_id") =!= col("neighbor_id"))
       else met
-    val scoredRaw = candidates
+    // no (query, neighbor) dedup: with unique ids a corpus vector is
+    // bucketed exactly once and the probe buckets are distinct
+    // (array_distinct AFTER the fold), so each pair meets at most once
+    val scored = candidates
       .withColumn("sim", dot(col("qv"), col("v")) /
         nullif(col("qn") * col("vn"), lit(0.0)))
       .select("query_id", "neighbor_id", "sim")
-    // the (query, neighbor) max-dedup exists ONLY for frames that can
-    // surface a pair twice. The inline tier with unique ids can't: a
-    // corpus vector is bucketed exactly once and the probe buckets are
-    // distinct (array_distinct AFTER the fold), so each pair meets at
-    // most once — there the agg is a full exchange + two hash passes
-    // over the candidate set that combine NOTHING (measured at the
-    // generated ~sf3 leg: 29.8 s -> 16.7 s for the v23 self-kNN when
-    // dropped — ~100M rows of hash-table pressure for zero merges).
-    // So: the SERVED path forces it (append epochs can re-add an id,
-    // and the merge-on-read union then carries that id twice — the
-    // serve doc relies on this collapse); the inline tier skips it
-    // under the same id contract every index build enforces
-    // (requireIntegralId / one-row-per-id).
-    val scored =
-      if (forceDedup)
-        scoredRaw.groupBy("query_id", "neighbor_id").agg(max("sim").as("sim"))
-      else scoredRaw
     cosineRank(scored, k)
-  }
-
-  /** The LSH index's growable table: the bucketed corpus PARTITIONED
-    * BY bucket, so serving scans only the probed bucket= directories. */
-  private val LshBucketed = IndexStore.Table("bucketed",
-    Some("neighbor_id"), Some("bucket"))
-
-  /** Materialize the LSH index: meta freezing (num_planes, dim, seed) —
-    * serve and append must replay the IDENTICAL hyperplanes — plus the
-    * bucketed corpus. Partition count is ≤ 2^numPlanes; keep numPlanes
-    * modest (≤ ~12) or the directory fan-out outgrows the filesystem's
-    * comfort. Unlike IVF/PQ there is no data-dependent yardstick: the
-    * hyperplanes are seed-determined, so [[appendToLshIndex]] is ALWAYS
-    * exactly equivalent to a one-shot build (LshIndexSpec asserts it). */
-  def buildLshIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, numPlanes: Int = 8, dim: Int = 64,
-      seed: Long = 42L): Unit = {
-    requireIntegralId(corpus, idCol, "buildLshIndex")
-    IndexStore.create(corpus.sparkSession, indexDir, IndexStore.Meta("lsh",
-      Map("num_planes" -> numPlanes.toLong, "dim" -> dim.toLong,
-        "seed" -> seed), Seq(LshBucketed)))
-    IndexStore.write(lshBucketed(corpus, idCol, vecCol, numPlanes, dim, seed)
-        .withColumn("neighbor_id", col("neighbor_id").cast("long")),
-      indexDir, LshBucketed, "overwrite")
-  }
-
-  /** The materialized index tiers store ids as LONG (the delta epochs
-    * are read back with that explicit schema, and the tombstone
-    * protocol keys on numeric ids) — refuse non-integral id columns at
-    * build/append time instead of corrupting the first delta read. */
-  private def requireIntegralId(df: DataFrame, idCol: String,
-      op: String): Unit = {
-    val dt = df.schema(idCol).dataType
-    require(dt == org.apache.spark.sql.types.LongType ||
-        dt == org.apache.spark.sql.types.IntegerType ||
-        dt == org.apache.spark.sql.types.ShortType,
-      s"$op: id column '$idCol' is ${dt.simpleString}; the materialized " +
-        "index stores LONG ids — surrogate-key string ids first")
-  }
-
-  /** Append NEW vectors to a materialized LSH index: bucket them with
-    * the frozen hyperplanes and land them in their bucket= partitions.
-    * No drift caveat — the index state equals a one-shot build over the
-    * union, always. */
-  def appendToLshIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newVecs: DataFrame, idCol: String,
-      vecCol: String): Unit =
-    IndexStore.write(bucketWithFrozenMeta(spark, indexDir, newVecs, idCol,
-      vecCol), indexDir, LshBucketed, "append")
-
-  /** Bucket vectors with an EXISTING index's frozen (num_planes, dim,
-    * seed) — the shared step behind [[appendToLshIndex]] and the
-    * streaming delta writer ([[graft.streaming.StreamIndexAppend]]). */
-  private[graft] def bucketWithFrozenMeta(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      newVecs: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    requireIntegralId(newVecs, idCol, "appendToLshIndex")
-    val m = IndexStore.meta(spark, indexDir)
-    lshBucketed(newVecs, idCol, vecCol,
-        m.int("num_planes"), m.int("dim"), m.params("seed"))
-      .withColumn("neighbor_id", col("neighbor_id").cast("long"))
-  }
-
-  /** Serve ANN queries from a [[buildLshIndex]]-materialized index —
-    * identical results to the inline [[lshTopK]] over the same corpus
-    * (LshIndexSpec asserts it). The probed buckets are collected
-    * (bounded by |Q|·(numPlanes+1)) into a LITERAL partition filter, so
-    * the scan statically prunes to the probed bucket= directories.
-    * [[IndexStore.live]] merges the streaming delta tail
-    * ([[graft.streaming.StreamIndexAppend]]'s epochs): delta rows are
-    * the same pure per-vector function as the base, so the union serves
-    * exactly like a one-shot build over everything ingested. */
-  def lshServeTopK(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
-    val m = IndexStore.meta(spark, indexDir)
-    val probes = lshProbes(queries, idCol, vecCol,
-        m.int("num_planes"), m.int("dim"), m.params("seed"))
-      .eagerCheckpoint()
-    val buckets = probes.select("bucket").distinct().collect().map(_.get(0))
-    val bucketed = IndexStore.live(spark, indexDir, LshBucketed,
-        Some(buckets.toSeq))
-      // partition-column inference may narrow the written long; restore
-      // the join key's type
-      .select(col("neighbor_id"), col("v"), col("vn"),
-        col("bucket").cast("long").as("bucket"))
-    // forceDedup: an id present in base AND a delta epoch must collapse
-    lshSearch(bucketed, probes, k, forceDedup = true)
   }
 
   /** IVF (inverted-file) ANN — the other classic scale path beside LSH.
@@ -1516,7 +1399,7 @@ object Similarity {
     * embedding clusters (no k to choose, unlike k-means; hubs don't
     * absorb everything, unlike single-threshold near-dup). Input-
     * agnostic on purpose: at oracle scale feed [[bruteForceTopK]], at
-    * corpus scale an approximate list ([[ivfTopK]] / [[lshServeTopK]] /
+    * corpus scale an approximate list ([[ivfTopK]] / [[lshTopK]] /
     * [[pqTopK]]) — the mutuality join is one
     * shuffle on the (query, neighbor) pair, never touching vectors. */
   def mutualKnnEdges(topk: DataFrame): DataFrame = {

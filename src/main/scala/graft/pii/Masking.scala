@@ -55,19 +55,12 @@ object Masking {
       days: Int): DataFrame =
     df.filter(col(tsCol) >= asOf - expr(s"INTERVAL $days DAY"))
 
-  /** G13 at scale: write date-partitioned so retention can DROP whole
-    * partition directories instead of rewriting 100 TB of rows. The
-    * warehouse-wide convention ([[graft.core.Tables.ctas]] with
-    * `partitionDateCol`, same `p_date` derivation) — retention below
-    * works on any of its outputs. */
-  def writeDatePartitioned(df: DataFrame, tsCol: String, dir: String): Unit =
-    graft.core.Tables.ctas(df, dir, partitionDateCol = Some(tsCol))
-
-  /** G13 partition-prune deletion: remove partitions strictly older than
-    * the cutoff — a metadata-scale operation (one directory delete per
-    * expired day), the 100 TB form of the reference's row-level
-    * `DELETE WHERE ts < dateadd(day, -90, now)` (A4:1033-1034). Returns
-    * the dropped partition names. */
+  /** G13 partition-prune deletion over a date-partitioned table
+    * ([[graft.core.Tables.ctas]] with `partitionDateCol`): remove
+    * partitions strictly older than the cutoff — a metadata-scale
+    * operation (one directory delete per expired day), the 100 TB form
+    * of the reference's row-level `DELETE WHERE ts < dateadd(day, -90,
+    * now)` (A4:1033-1034). Returns the dropped partition names. */
   def retentionDropPartitions(spark: SparkSession, dir: String,
       asOf: java.time.LocalDate, days: Int): Seq[String] = {
     val cutoff = asOf.minusDays(days)
@@ -78,7 +71,7 @@ object Masking {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("p_date="))
       .filter { s =>
         // rows with a null timestamp land in p_date=__HIVE_DEFAULT_PARTITION__
-        // (written by writeDatePartitioned itself) — their age is unknowable,
+        // (the ctas date partitioning writes them) — their age is unknowable,
         // so retention KEEPS them rather than crashing the whole run on the
         // unparseable directory name; flag them via nullProfile instead
         scala.util.Try(java.time.LocalDate.parse(
@@ -86,36 +79,6 @@ object Masking {
           .exists(_.isBefore(cutoff))
       }
       .map { s => fs.delete(s.getPath, true); s.getPath.getName }
-  }
-
-  /** G13 subject erasure (right to be forgotten) END TO END: one
-    * request physically removes the subject's rows from the corpus
-    * table ([[graft.core.Tables.purgeRows]] — only the affected
-    * partition directories rewrite) and tombstones the same ids in
-    * every DERIVED index handed in ([[graft.operators.IndexStore.delete]],
-    * one call for every family — serves exclude them immediately; the
-    * physical removal is the owner's next maintenance window,
-    * [[graft.operators.IndexStore.purge]]). Erasure that stops at
-    * the base table is not erasure: the dedup postings and LSH buckets
-    * still carry the subject's fingerprints, and a probe would keep
-    * surfacing the deleted ids. Returns a one-row audit report
-    * (request size, corpus rows removed, indexes tombstoned) for the
-    * caller's erasure ledger. */
-  def forgetDocuments(spark: SparkSession, ids: DataFrame,
-      idColName: String, corpusDir: Option[String],
-      indexDirs: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    val victims = ids.select(col(ids.columns.head).as(idColName)).distinct()
-    val nRequested = victims.count()
-    val corpusRemoved = corpusDir.map { d =>
-      val hit = spark.read.parquet(d)
-        .join(broadcast(victims), Seq(idColName), "left_semi").count()
-      graft.core.Tables.purgeRows(spark, d, idColName, ids)
-      hit
-    }.getOrElse(0L)
-    indexDirs.foreach(d => graft.operators.IndexStore.delete(spark, d, ids))
-    Seq((nRequested, corpusRemoved, indexDirs.size.toLong))
-      .toDF("n_requested", "corpus_rows_removed", "indexes_tombstoned")
   }
 
   /** Laplace-mechanism noisy counts (Dwork et al., TCC'06): grouped

@@ -800,9 +800,8 @@ object PipelineQueries {
       .filter(col("token").isin(terms: _*))
     val tf = d.groupBy("doc_id", "token")
       .agg(count(lit(1)).cast("double").as("tf"), first("len").as("len"))
-    // count("text") (non-null), matching the materialized index's
-    // membership definition: a null-text row has no postings and is not
-    // a collection member — avg_len already skips it (AVG ignores nulls)
+    // count("text") (non-null): a null-text row has no terms and is
+    // not a collection member — avg_len already skips it (AVG ignores nulls)
     val stats = docs(s, dir).agg(
       count(col("text")).cast("double").as("n_docs"),
       avg(size(TextFns.tokens(col("text")))).as("avg_len"))

@@ -28,8 +28,7 @@ object PipeStream {
     * at-least-once — a crash between the sink write and the checkpoint
     * commit replays the batch — and a flat-directory append would land
     * those rows twice; the per-epoch overwrite makes the replay rewrite
-    * its own directory instead (the [[StreamIndexProbe]] /
-    * [[StreamTokenStats]] discipline), keeping the exactly-once-per-file
+    * its own directory instead, keeping the exactly-once-per-file
     * contract the scaladoc promises end to end, not just at the source. */
   private def build(spark: SparkSession, landingDir: String,
       schema: StructType, targetDir: String, checkpointDir: String,

@@ -20,9 +20,9 @@ import graft.operators.Cdc
   * change batch against the snapshot, and a full snapshot rewrite.
   * The rewrite is the honest cost of a format without transaction-log
   * row-level updates — bounded by snapshot size, amortized by batching
-  * (trigger interval = rewrite budget). A table too large for that
-  * trades this sink for date-partitioned swaps
-  * ([[graft.pii.Masking.writeDatePartitioned]] + per-partition apply).
+  * (trigger interval = rewrite budget). There is no per-partition
+  * apply: every batch rewrites the whole snapshot, so a larger table
+  * needs a longer trigger interval.
   */
 object StreamApply {
 

@@ -154,27 +154,6 @@ class CachesSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
   }
 
-  test("sweepAfter releases exactly its own scope's checkpoints; nesting is scoped") {
-    Caches.releaseAllPersistent(spark)
-    val outside = Caches.eager(Seq((1L, "keep")).toDF("id", "v"))
-    val before = persistedIds.size
-    Caches.sweepAfter {
-      val inner = Caches.eager(Seq((2L, "drop")).toDF("id", "v"))
-      assert(inner.count() === 1)
-      Caches.sweepAfter {
-        val nested = Caches.eager(Seq((3L, "drop2")).toDF("id", "v"))
-        assert(nested.count() === 1)
-      }
-      // the nested scope released ITS frame only; inner is still live
-      assert(inner.count() === 1)
-    }
-    // both swept frames' blocks are gone; the outside frame survives
-    assert(persistedIds.size === before,
-      s"sweepAfter leaked or over-released: ${persistedIds.size} vs $before")
-    assert(outside.count() === 1, "sweepAfter released a frame outside its scope")
-    Caches.releaseAllPersistent(spark)
-  }
-
   test("localize: maxRows rows pass, maxRows + 1 fail before a full collect") {
     val ok = Caches.localize(spark.range(5).toDF("id"), maxRows = 5)
     assert(ok.count() === 5L)

@@ -70,20 +70,6 @@ class IngestSpec extends SparkSuite {
     assert(q.forall(_.getAs[String]("source_file").contains("batch.json")))
   }
 
-  test("compact rewrites a many-file table into few files, data intact") {
-    val dir = tmp("graft_compact") + "/t"
-    // 40 single-row appends → 40+ tiny files
-    (1L to 40L).foreach(i =>
-      Seq((i, s"row$i")).toDF("id", "v").write.mode("append").parquet(dir))
-    val beforeData = spark.read.parquet(dir).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (before, after) = graft.core.Tables.compact(spark, dir)
-    assert(before >= 40 && after < 5)
-    val afterData = spark.read.parquet(dir).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(afterData === beforeData)
-  }
-
   test("copyInto is exactly-once per file, pattern-filtered, ledgered") {
     val landing = tmp("graft_landing")
     val target = tmp("graft_target") + "/t"

@@ -88,7 +88,7 @@ class MaskingSpec extends SparkSuite {
       "2024-05-30 10:00:00")
       .zipWithIndex.map { case (s, i) => (i, s) }.toDF("id", "s")
       .select(col("id"), col("s").cast("timestamp").as("ts"))
-    Masking.writeDatePartitioned(d, "ts", dir)
+    graft.core.Tables.ctas(d, dir, partitionDateCol = Some("ts"))
     val dropped = Masking.retentionDropPartitions(spark, dir,
       java.time.LocalDate.parse("2024-06-01"), days = 90)
     assert(dropped.sorted === Seq("p_date=2024-01-01", "p_date=2024-02-15"))
@@ -108,7 +108,7 @@ class MaskingSpec extends SparkSuite {
     // the writer itself produces p_date=__HIVE_DEFAULT_PARTITION__ for
     // the null-ts row — retention must neither crash on the unparseable
     // name nor delete rows of unknowable age
-    Masking.writeDatePartitioned(d, "ts", dir)
+    graft.core.Tables.ctas(d, dir, partitionDateCol = Some("ts"))
     val dropped = Masking.retentionDropPartitions(spark, dir,
       java.time.LocalDate.parse("2024-06-01"), days = 90)
     assert(dropped === Seq("p_date=2024-01-01"))

@@ -163,141 +163,4 @@ class ReliableCheckpointSpec extends SparkSuite {
     assert(snapshots <= 12,
       s"$snapshots checkpoint snapshots left after t19")
   }
-
-  test("streaming index probe in reliable mode: kill, restart, exactly-once, " +
-      "checkpoint files bounded") {
-    import java.nio.file.Files
-    import graft.operators.Dedup
-    import graft.streaming.StreamIndexProbe
-    val corpus = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select("doc_id", "text")
-    val idx = Files.createTempDirectory("rel_sipr_idx").toString
-    Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx, parts = 16)
-    val arrivals = corpus.filter(col("doc_id") < 6)
-      .withColumn("doc_id", col("doc_id") + 100000L)
-      .withColumn("text", concat(col("text"), lit(" tail")))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    def stage(landing: String, name: String, docs: Seq[(Long, String)]): Unit =
-      docs.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").json(s"$landing/$name")
-    val landing = Files.createTempDirectory("rel_sipr_landing").toString
-    val out = Files.createTempDirectory("rel_sipr_out").toString
-    val ckpt = Files.createTempDirectory("rel_sipr_ckpt").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    def startStream() = StreamIndexProbe.start(
-      spark.readStream.schema(schema).json(s"$landing/*/"),
-      idx, out, ckpt, "doc_id", "text", threshold = 0.5)
-
-    val (rows, snapshots) = withReliableDir {
-      // ---- run 1: one committed epoch, then "crash" between the epoch
-      // write and its commit marker (the StreamIndexProbeSpec kill shape,
-      // here with every interior checkpoint living as reliable FILES)
-      stage(landing, "b0", arrivals.take(3))
-      val q1 = startStream()
-      try q1.processAllAvailable() finally q1.stop()
-      val commit0 = java.nio.file.Paths.get(ckpt, "commits", "0")
-      assert(Files.exists(commit0), "expected a committed epoch 0")
-      Files.delete(commit0)
-      Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".0.crc"))
-      Seq((999999L, 999999L, 0.999)).toDF("probe_id", "index_id", "jaccard")
-        .write.mode("append").parquet(s"$out/batch=0")
-      // ---- run 2 (restart): epoch 0 replays and overwrites itself,
-      // epoch 1 processes the new arrivals
-      stage(landing, "b1", arrivals.drop(3))
-      val q2 = startStream()
-      try q2.processAllAvailable() finally q2.stop()
-      spark.read.parquet(out)
-        .select("probe_id", "index_id", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    }
-    // exactly-once across the kill: no dup rows, no partial survivors,
-    // and the ledger equals a one-shot batch probe of everything
-    assert(rows.size === rows.distinct.size, "duplicate ledger rows")
-    assert(!rows.exists(_._1 == 999999L),
-      "the crashed attempt's partial output survived the replay")
-    val oneShot = Dedup.probeMinhashIndex(spark, idx,
-        arrivals.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows.toSet === oneShot)
-    // BOUNDED: the per-batch sweepAfter released every interior
-    // checkpoint's files — across 3 processed epochs and a restart,
-    // nothing may accumulate in the reliable store (without the sweep
-    // this is ~3 rdd-* snapshots PER BATCH, forever)
-    assert(snapshots === 0,
-      s"$snapshots reliable checkpoint snapshots left by the stream")
-  }
-
-  test("streaming token stats in reliable mode: kill mid-batch, restart, " +
-      "exactly-once, checkpoint files bounded across 3 epochs") {
-    import java.nio.file.Files
-    import graft.streaming.StreamTokenStats
-    val docs = Seq(
-      (1L, "alpha beta alpha", "web"), (2L, "beta gamma", "web"),
-      (3L, "delta delta", "books"), (4L, "alpha epsilon", "books"),
-      (5L, "epsilon beta zeta", "web"), (6L, "zeta zeta gamma", "books"))
-    val landing = Files.createTempDirectory("rel_sts_landing").toString
-    val statsDir = Files.createTempDirectory("rel_sts_stats").toString
-    val ckpt = Files.createTempDirectory("rel_sts_ckpt").toString
-    def stage(name: String, part: Seq[(Long, String, String)]): Unit =
-      part.toDF("doc_id", "text", "source").coalesce(1)
-        .write.mode("overwrite").json(s"$landing/$name")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType)))
-    def startStream() = StreamTokenStats.start(
-      spark.readStream.schema(schema).json(s"$landing/*/"),
-      statsDir, ckpt, "text", "source")
-
-    val (served, snapshots) = withReliableDir {
-      // ---- epoch 0, then "crash" between the delta write and the
-      // commit marker; a partial/poison file lands in the epoch dir
-      // exactly as an interrupted task attempt would leave it
-      stage("b0", docs.take(2))
-      val q1 = startStream()
-      try q1.processAllAvailable() finally q1.stop()
-      val commit0 = java.nio.file.Paths.get(ckpt, "commits", "0")
-      assert(Files.exists(commit0), "expected a committed epoch 0")
-      Files.delete(commit0)
-      Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".0.crc"))
-      Seq(("poison", "poison_token", 999L)).toDF("source", "token", "cnt")
-        .write.mode("append").parquet(s"$statsDir/deltas/batch=0")
-      // ---- restart: epoch 0 replays and OVERWRITES its own delta dir
-      // (EpochGuard allows replay of the newest epoch), then epochs 1-2
-      stage("b1", docs.slice(2, 4))
-      val q2 = startStream()
-      try q2.processAllAvailable() finally q2.stop()
-      stage("b2", docs.drop(4))
-      val q3 = startStream()
-      try q3.processAllAvailable() finally q3.stop()
-      StreamTokenStats.servedStats(spark, statsDir).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-    }
-    // exactly-once across the kill: the served table equals a one-shot
-    // batch tokenize of everything ingested, and the crashed attempt's
-    // partial rows are gone (the replayed epoch overwrote them)
-    assert(!served.exists(_._2 == "poison_token"),
-      "the crashed attempt's partial delta rows survived the replay")
-    val oneShot = graft.operators.TokenIndex.counts(
-      docs.toDF("doc_id", "text", "source"), "doc_id", "text", "source")
-    assert(served.toSet === oneShot.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet)
-    // one delta directory per non-empty epoch — replay rewrote batch=0
-    // in place rather than forking a second copy of the epoch
-    val deltaDirs = new java.io.File(s"$statsDir/deltas").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(deltaDirs === Seq("batch=0", "batch=1", "batch=2"))
-    // BOUNDED: no reliable checkpoint snapshots may accumulate across
-    // the three epochs and the restart
-    assert(snapshots === 0,
-      s"$snapshots reliable checkpoint snapshots left by the stream")
-  }
-
 }

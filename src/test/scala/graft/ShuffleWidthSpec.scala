@@ -197,14 +197,4 @@ class ShuffleWidthSpec extends SparkSuite {
         a.name == "v" || a.name == "embedding")))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
-
-  test("minhash index probe shuffles hashes and ids, never document text") {
-    val idx = java.nio.file.Files.createTempDirectory("mhidx_sw").toString
-    Dedup.buildMinhashIndex(docsDf, "doc_id", "text", idx, parts = 16)
-    assertOnlySpreadIsText(probeExchanges {
-      Dedup.probeMinhashIndex(spark, idx,
-        docsDf.filter(col("doc_id") < 10), "doc_id", "text",
-        threshold = 0.5).count()
-    })
-  }
 }

@@ -33,9 +33,8 @@ class StreamDedupSpec extends SparkSuite {
   }
 
   test("mid-batch kill: engine-managed dedup state survives two restarts, output == batch distinct") {
-    // the reliable-mode chain the other stateful twins already have
-    // (StreamNearDupSpec:158, StreamIndexProbeSpec, StreamTokenStatsSpec)
-    // — but here the state at risk is SPARK'S OWN state store behind
+    // the reliable-mode chain StreamNearDupSpec and StreamApplySpec also
+    // run — but here the state at risk is SPARK'S OWN state store behind
     // dropDuplicatesWithinWatermark, not hand-built bucket state: a
     // checkpoint-format replay must restore the engine's key set, or a
     // redelivery after the crash re-emits a key the dead run already

@@ -156,13 +156,12 @@ class StreamNearDupSpec extends SparkSuite {
   }
 
   test("mid-batch kill: uncommitted epoch replays, sink log dedups, pairs == batch twin across two restarts") {
-    // the reliable-mode chain its two siblings already have
-    // (StreamIndexProbeSpec, StreamTokenStatsSpec): file source + real
-    // checkpoint + parquet sink, killed between the sink write and the
-    // epoch commit, restarted twice. The LSH bucket state is the part
-    // with real state to lose — the replayed epoch must recompute from
-    // the checkpointed state version and the sink's transaction log
-    // must keep the output exactly-once.
+    // the reliable-mode chain StreamDedupSpec and StreamApplySpec also
+    // run: file source + real checkpoint + parquet sink, killed between
+    // the sink write and the epoch commit, restarted twice. The LSH
+    // bucket state is the part with real state to lose — the replayed
+    // epoch must recompute from the checkpointed state version and the
+    // sink's transaction log must keep the output exactly-once.
     import java.nio.file.{Files, Paths}
     val landing = Files.createTempDirectory("neardup_landing").toString
     val out = Files.createTempDirectory("neardup_out").toString
