@@ -1,12 +1,25 @@
 #!/usr/bin/env python3
-"""List the top-level Scala objects in src/main that nothing else reaches.
+"""List the top-level Scala objects, and their members, in src/main that
+nothing else reaches.
 
-An object counts as reached when its name appears, as a whole word, in
-the code (comments removed, string literals kept) of ANOTHER src/main
-file or of any file under perfbench/harness. Everything else is printed,
-one line each, as `path:line  Name`, with ` [main]` appended when the
-object defines `def main(` (an entry point, reached from the command
-line rather than from code).
+"Code" below means a file's text with comments removed and string
+literals kept, over every src/main file and every file under
+perfbench/harness. Output is two blocks, separated by one blank line.
+
+Objects: an object counts as reached when its name appears, as a whole
+word, in the code of ANOTHER file. Everything else is printed, one line
+each, as `path:line  Name`, with ` [main]` appended when the object
+defines `def main(` (an entry point, reached from the command line
+rather than from code).
+
+Members: for each direct `def`/`val` member of a top-level object (one
+indentation step in), skipping `private`/`protected` members (qualified
+ones too), `override` and `implicit` members (reached through a type,
+not by name) and `def main`, the member is printed as
+`path:line  Object.name` when its name appears, as a whole word, in the
+code of no other file and only once in the code of its own file (at its
+definition). Overloads share a name, so one used overload hides the
+others.
 
 Usage: python3 scripts/unreached.py [repo_root]   (default: the parent
 of this script's directory). Exit status is 0 whatever it prints.
@@ -17,6 +30,9 @@ import sys
 
 OBJECT_RE = re.compile(
     r"^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|case\s+)*object\s+(\w+)")
+MEMBER_RE = re.compile(
+    r"^  ((?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|override\s+|"
+    r"implicit\s+|lazy\s+)*)(?:def|val)\s+(\w+)")
 
 
 def strip_comments(src):
@@ -79,27 +95,43 @@ def main():
             with open(path, encoding="utf-8") as f:
                 code[path] = strip_comments(f.read())
 
-    unreached = []
+    def word(name):
+        return re.compile(r"\b%s\b" % re.escape(name))
+
+    def used_elsewhere(name, path):
+        w = word(name)
+        return any(w.search(text) for other, text in code.items()
+                   if other != path)
+
+    unreached, members = [], []
     for path in sorted(p for p in code if p.startswith(main_root + os.sep)):
+        rel = os.path.relpath(path, repo)
         lines = code[path].split("\n")
         for lineno, line in enumerate(lines, 1):
             m = OBJECT_RE.match(line)
             if not m:
                 continue
             name = m.group(1)
-            word = re.compile(r"\b%s\b" % re.escape(name))
-            if any(word.search(text) for other, text in code.items()
-                   if other != path):
-                continue
             # the object's body: up to the next top-level declaration
             end = next((j for j in range(lineno, len(lines))
                         if re.match(r"[^\s}]", lines[j])), len(lines))
+            for j in range(lineno, end):
+                mm = MEMBER_RE.match(lines[j])
+                if (not mm or re.search(r"private|protected|override|implicit",
+                                        mm.group(1)) or mm.group(2) == "main"):
+                    continue
+                member = mm.group(2)
+                if (len(word(member).findall(code[path])) == 1
+                        and not used_elsewhere(member, path)):
+                    members.append("%s:%d  %s.%s" % (rel, j + 1, name, member))
+            if used_elsewhere(name, path):
+                continue
             body = "\n".join(lines[lineno - 1:end])
             tag = " [main]" if re.search(r"\bdef\s+main\s*\(", body) else ""
-            unreached.append("%s:%d  %s%s" % (
-                os.path.relpath(path, repo), lineno, name, tag))
-    for entry in unreached:
-        print(entry)
+            unreached.append("%s:%d  %s%s" % (rel, lineno, name, tag))
+    print("\n".join(unreached))
+    print()
+    print("\n".join(members))
 
 
 if __name__ == "__main__":

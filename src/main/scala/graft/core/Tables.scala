@@ -130,20 +130,6 @@ object Tables {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       src.schema).write.mode("ignore").parquet(dir)
 
-  /** Bucketed table write: co-locates rows by join key so repeated
-    * big-big joins/aggregations on that key run WITHOUT a shuffle (both
-    * sides pre-partitioned the same way). At 100 TB this converts every
-    * fact⋈fact join on the bucket key from a full-network exchange into
-    * a local zip of bucket files. Requires the session catalog
-    * (`saveAsTable`); bucket count should match target parallelism. */
-  def writeBucketed(df: DataFrame, tableName: String, bucketCols: Seq[String],
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(tableName)
-
   /** Swap-sibling naming: DOT-prefixed so that when `p` is a
     * `key=value` partition directory, crash residue (`.key=a__swap_old`)
     * is invisible to Spark partition discovery — a bare
@@ -167,10 +153,9 @@ object Tables {
     *
     * `marker` (name → contents) is written INSIDE the staged directory
     * before the swap, so it commits atomically with the data — an
-    * underscore-prefixed name is invisible to parquet readers. Callers
-    * use it to make a swap idempotent (e.g. [[graft.streaming
-    * .StreamRollup]] records the applied micro-batch id: a crash-replayed
-    * batch sees its own id already committed and skips). */
+    * underscore-prefixed name is invisible to parquet readers.
+    * [[summaryTable]] stamps its refresh time this way, so the stamp
+    * and the data it describes commit together. */
   def replaceAtomic(spark: SparkSession, dir: String,
       next: DataFrame, marker: Option[(String, String)] = None): Unit = {
     // Path.getFileSystem, not FileSystem.get(new URI(dir)): a raw URI
@@ -205,11 +190,10 @@ object Tables {
   /** Restore `dir` from its [[replaceAtomic]] swap backup if a crash
     * landed between the two renames (settled dir missing, backup
     * present). Call BEFORE reading `dir` in any code path that may run
-    * again after such a crash (the streaming maintainers
-    * [[graft.streaming.StreamRollup]] / [[graft.streaming.StreamApply]]
-    * read the snapshot before their replaceAtomic would get the chance
-    * to self-heal — without this they crash-loop on the missing
-    * directory forever). */
+    * again after such a crash ([[graft.streaming.StreamApply]] reads
+    * the snapshot before its replaceAtomic would get the chance to
+    * self-heal — without this it crash-loops on the missing directory
+    * forever). */
   def recoverReplaceAtomic(spark: SparkSession, dir: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -241,8 +225,7 @@ object Tables {
 
   /** Read a marker file committed atomically with its table by
     * [[replaceAtomic]]'s staged write — the ONE copy of the read half
-    * of the marker protocol ([[summaryTable]]'s TTL stamp,
-    * [[graft.streaming.StreamRollup]]'s applied-batch id). */
+    * of the marker protocol ([[summaryTable]]'s TTL stamp). */
   def readMarker(spark: SparkSession, dir: String,
       name: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(dir, name)

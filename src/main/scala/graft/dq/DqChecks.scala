@@ -226,10 +226,8 @@ object DqChecks {
     * splits inside/outside instead: v = lo stays in bin 0, anything
     * else lands in the last bin, so a group that starts moving after a
     * constant baseline carries PSI mass rather than silently reading
-    * as "no drift" (all-bin-0 would). Shared by [[psiDrift]] and the
-    * streaming monitor ([[graft.streaming.StreamDrift]]) so both sides
-    * bin identically. */
-  private[graft] def psiBin(v: Column, lo: Column, hi: Column,
+    * as "no drift" (all-bin-0 would). */
+  private def psiBin(v: Column, lo: Column, hi: Column,
       nBins: Int): Column = {
     val w = (hi - lo) / nBins
     // clamp on the LONG before the int cast: a wildly drifted value can
@@ -253,9 +251,9 @@ object DqChecks {
     * type (int bins for the numeric screen, category strings for the
     * categorical one — slot count per group is taken from the data, so
     * variable-width groups work). The one place the smoothing and the
-    * ordered-fold sum live, so the batch screens and the streaming
-    * monitor compute the SAME number from the same counts. */
-  private[graft] def psiFromSlots(slots: DataFrame,
+    * ordered-fold sum live, so the numeric and categorical screens
+    * compute PSI the same way. */
+  private def psiFromSlots(slots: DataFrame,
       groupCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(groupCol)
     val contrib = slots

@@ -17,9 +17,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * signature aggregate ([[MinHashSigAgg]]); `shingle_hashes(text, k)` —
   * the native k-gram shingle hasher ([[ShingleHashes]]);
   * `rand_project(vec, dim_in, dim_out[, tag])` — the codegen'd
-  * Rademacher JL projection ([[RandProjectExpr]]); `z_value(a, b)` —
-  * the two-dimension Z-order (Morton) bit interleave for layout
-  * clustering ([[ZValue]], NOT a statistical z-score);
+  * Rademacher JL projection ([[RandProjectExpr]]);
   * `freq_sketch(col, capacity)` — the Misra-Gries heavy-hitter
   * aggregate ([[FreqSketchAgg]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -34,11 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[ShingleHashes].getCanonicalName, null,
         "shingle_hashes", GraftFunctions.shingleHashesUsage, ""),
       GraftFunctions.shingleHashesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("z_value"),
-      new ExpressionInfo(classOf[ZValue].getCanonicalName, null,
-        "z_value", GraftFunctions.zValueUsage, ""),
-      GraftFunctions.zValueBuilder))
     ext.injectFunction((
       FunctionIdentifier("freq_sketch"),
       new ExpressionInfo(classOf[FreqSketchAgg].getCanonicalName, null,
@@ -70,15 +63,6 @@ object GraftFunctions {
     case Seq(child, Literal(k: Int, _)) => ShingleHashes(child, k)
     case args => throw new IllegalArgumentException(
       s"shingle_hashes expects (text, int literal k), got ${args.size} args")
-  }
-
-  private[functions] val zValueUsage =
-    "z_value(a, b) - Morton (Z-order) interleave of two unsigned 32-bit bigint keys"
-
-  private[functions] val zValueBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => ZValue(a, b)
-    case args => throw new IllegalArgumentException(
-      s"z_value expects (a, b), got ${args.size} args")
   }
 
   private[functions] val freqSketchUsage =
@@ -125,8 +109,6 @@ object GraftFunctions {
       minhashSigBuilder)
     ColumnBridge.registerFunction(spark, "shingle_hashes", shingleHashesUsage,
       shingleHashesBuilder)
-    ColumnBridge.registerFunction(spark, "z_value", zValueUsage,
-      zValueBuilder)
     ColumnBridge.registerFunction(spark, "freq_sketch", freqSketchUsage,
       freqSketchBuilder)
     ColumnBridge.registerFunction(spark, "rand_project", randProjectUsage,

@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * Scale posture: both sides are projected to (id, md5, meta...)
   * BEFORE the full-outer join, so the one shuffle carries fixed-width
   * hash rows — never document bodies. The md5 runs map-side on the
-  * scan; the join key is the id, so co-partitioned/bucketed snapshots
-  * (see [[graft.core.Tables.writeBucketed]]) diff with no shuffle at
-  * all. */
+  * scan; the join key is the id, so snapshots already bucketed on it
+  * diff with no shuffle at all. */
 object CorpusDiff {
 
   /** Per-id change classification between two corpus versions.

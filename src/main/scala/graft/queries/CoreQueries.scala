@@ -301,10 +301,10 @@ object CoreQueries {
       .orderBy("k_bucket")
   }
 
-  /** Batch gap sessionization (the static twin of the streaming
-    * Sessionize operator): 30-minute gaps over the events table. */
+  /** Batch gap sessionization ([[graft.operators.Sessionize]]):
+    * 30-minute gaps over the events table. */
   def e01Sessions(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Sessionize.batchSessions(
+    graft.operators.Sessionize.batchSessions(
         t(s, dir, "events"), "user_id", "ts", "event_id", gapMinutes = 30)
       .orderBy("user_id", "session_idx")
 
@@ -670,7 +670,7 @@ object CoreQueries {
     * (user, session) as the funnel key; every stage stays partitioned
     * on the user key. */
   def e10SessionFunnel(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.streaming.Sessionize.withSessionIds(
+    val e = graft.operators.Sessionize.withSessionIds(
         t(s, dir, "events").select("user_id", "event_id", "ts", "event_type"),
         "user_id", "ts", "event_id", gapMinutes = 30)
       .withColumnRenamed("__sid", "sid")

@@ -2,8 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.AsofJoin
-import graft.streaming.Sessionize
+import graft.operators.{AsofJoin, Sessionize}
 
 class AsofJoinSpec extends SparkSuite {
   import spark.implicits._
@@ -86,8 +85,8 @@ class AsofJoinSpec extends SparkSuite {
   }
 
   test("a 30-minute-exact gap SPLITS (>= close rule, matching the streaming twin)") {
-    // a session is a run with no gap >= gapMinutes — the streaming
-    // operator closes at exactly the gap, so the batch twin must too
+    // a session is a run with no gap >= gapMinutes, as in Spark's
+    // session_window, so exactly the gap splits
     val events = Seq(
       (1L, 1L, ts("2024-01-01 10:00:00")),
       (2L, 1L, ts("2024-01-01 10:30:00")))

@@ -37,12 +37,6 @@ class GraftExtensionsSpec extends SparkSuite {
     assert(sql === api)
   }
 
-  test("z_value is callable from spark.sql after registration") {
-    GraftFunctions.register(spark)
-    val sql = spark.sql("SELECT z_value(3, 5) AS z").collect()(0).getLong(0)
-    assert(sql === graft.functions.ZOrderOps.interleave(3L, 5L))
-  }
-
   test("freq_sketch is callable from spark.sql after registration") {
     GraftFunctions.register(spark)
     import spark.implicits._

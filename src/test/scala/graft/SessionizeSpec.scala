@@ -1,77 +1,8 @@
 package graft
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{Session, Sessionize, UserEvent}
+import graft.operators.Sessionize
 
 class SessionizeSpec extends SparkSuite {
-  import spark.implicits._
-
-  private def ev(u: Long, s: String) = UserEvent(u, Timestamp.valueOf(s))
-
-  test("gap sessionization: in-function close and watermark-timeout close") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[UserEvent]
-    val q = Sessionize.sessions(input.toDS(), gapMinutes = 10)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    try {
-      // one burst for user 1, one event for user 2
-      input.addData(ev(1, "2024-01-01 10:00:00"), ev(1, "2024-01-01 10:02:00"),
-        ev(2, "2024-01-01 10:00:00"))
-      q.processAllAvailable()
-      assert(spark.table("sess_out").count() === 0) // sessions still open
-
-      // user 1 returns past the gap → their previous session closes
-      // in-function; the advanced watermark (11:00 - 10min = 10:50) also
-      // fires user 2's 10:10 timeout in the same batch
-      input.addData(ev(1, "2024-01-01 11:00:00"))
-      q.processAllAvailable()
-      val s1 = spark.table("sess_out").as[Session].collect().sortBy(_.user_id)
-      assert(s1.toSeq === Seq(
-        Session(1, Timestamp.valueOf("2024-01-01 10:00:00"),
-          Timestamp.valueOf("2024-01-01 10:02:00"), 2),
-        Session(2, Timestamp.valueOf("2024-01-01 10:00:00"),
-          Timestamp.valueOf("2024-01-01 10:00:00"), 1)))
-
-      // a far-future event advances the watermark past user 1's new
-      // session timeout (11:10) → the 11:00 singleton closes
-      input.addData(ev(3, "2024-01-01 12:00:00"))
-      q.processAllAvailable()
-      input.addData(ev(3, "2024-01-01 12:00:01")) // extra batch fires timeouts
-      q.processAllAvailable()
-      val closed = spark.table("sess_out").as[Session].collect()
-        .map(s => (s.user_id, s.n_events)).toSet
-      assert(closed.contains((1L, 1L))) // the 11:00 singleton
-    } finally q.stop()
-  }
-
-  test("late in-watermark event extends a session BACKWARD") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[UserEvent]
-    val q = Sessionize.sessions(input.toDS(), gapMinutes = 10)
-      .writeStream.format("memory").queryName("sess_late")
-      .outputMode("append").start()
-    try {
-      input.addData(ev(1, "2024-01-01 10:00:00"))
-      q.processAllAvailable()
-      // watermark = 09:50; a 09:55 arrival is admissible and belongs to
-      // the SAME session — its start must move back to 09:55
-      input.addData(ev(1, "2024-01-01 09:55:00"))
-      q.processAllAvailable()
-      // push the watermark far past the session's close
-      input.addData(ev(9, "2024-01-01 12:00:00"))
-      q.processAllAvailable()
-      input.addData(ev(9, "2024-01-01 12:00:01"))
-      q.processAllAvailable()
-      val s1 = spark.table("sess_late").as[Session].collect()
-        .filter(_.user_id == 1L)
-      assert(s1.toSeq === Seq(
-        Session(1, Timestamp.valueOf("2024-01-01 09:55:00"),
-          Timestamp.valueOf("2024-01-01 10:00:00"), 2)))
-    } finally q.stop()
-  }
 
   test("batch twin breaks a session at EXACTLY the gap (>= close rule)") {
     import spark.implicits._

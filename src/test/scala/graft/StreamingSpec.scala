@@ -40,4 +40,20 @@ class StreamingSpec extends SparkSuite {
     // CDC metadata: append-only source → every row INSERT (ST2)
     assert(rows.filter("_action != 'INSERT'").count() === 0)
   }
+
+  test("PipeStream continuous form starts, drains, and stops (ST4/ST10)") {
+    val landing = Files.createTempDirectory("ps_cont").toString
+    val target = Files.createTempDirectory("ps_cont_t").toString + "/t"
+    val cp = Files.createTempDirectory("ps_cont_cp").toString + "/cp"
+    val sch = StructType(Seq(StructField("id", LongType)))
+    Files.write(Paths.get(landing, "a.json"), """{"id":1}""".getBytes)
+    val q = PipeStream.start(spark, landing, sch, target, cp, "1 second")
+    try {
+      q.processAllAvailable()
+      assert(spark.read.parquet(target).count() === 1)
+      Files.write(Paths.get(landing, "b.json"), """{"id":2}""".getBytes)
+      q.processAllAvailable()
+      assert(spark.read.parquet(target).count() === 2)
+    } finally q.stop() // ST10: suspend ≡ stop; checkpoint resumes later
+  }
 }

@@ -77,9 +77,11 @@ class TopicSourceSpec extends SparkSuite {
           .cast("timestamp").as("ts"),
         get_json_object(col("value").cast("string"), "$.v")
           .cast("double").as("v"))
-    val agg = graft.streaming.EventTimeAgg.tumbling(parsed, "ts",
-      "5 minutes", "10 minutes", Seq("k"),
-      Seq(count(lit(1)).as("n"), sum("v").as("sv")))
+    val agg = parsed.withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "5 minutes"), col("k"))
+      .agg(count(lit(1)).as("n"), sum("v").as("sv"))
+      .select(col("window.start").as("window_start"),
+        col("window.end").as("window_end"), col("k"), col("n"), col("sv"))
     val q = agg.writeStream.format("memory").queryName("topic_agg")
       .outputMode("complete").start()
     try {
