@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
-"""List the top-level Scala objects, and their members, in src/main that
+"""List the top-level Scala objects, members and types in src/main that
 nothing else reaches.
 
 "Code" below means a file's text with comments removed and string
 literals kept, over every src/main file and every file under
-perfbench/harness. Output is two blocks, separated by one blank line.
+perfbench/harness. Output is three blocks, separated by one blank line
+each.
 
 Objects: an object counts as reached when its name appears, as a whole
 word, in the code of ANOTHER file. Everything else is printed, one line
@@ -12,14 +13,22 @@ each, as `path:line  Name`, with ` [main]` appended when the object
 defines `def main(` (an entry point, reached from the command line
 rather than from code).
 
-Members: for each direct `def`/`val` member of a top-level object (one
-indentation step in), skipping `private`/`protected` members (qualified
-ones too), `override` and `implicit` members (reached through a type,
-not by name) and `def main`, the member is printed as
-`path:line  Object.name` when its name appears, as a whole word, in the
+Members: for each direct `def`/`val` member of a top-level object or
+class (one indentation step in), skipping `private`/`protected` members
+(qualified ones too), `override` and `implicit` members (reached through
+a type, not by name) and `def main`, the member is printed as
+`path:line  Owner.name` when its name appears, as a whole word, in the
 code of no other file and only once in the code of its own file (at its
 definition). Overloads share a name, so one used overload hides the
 others.
+
+Types: a top-level `class` or `trait` (case classes included) is printed
+as `path:line  Name` when its name appears, as a whole word, only once
+in all the code: at its definition. Such a type is built by reflection
+(a service loader, a config string) or not at all.
+
+scripts/unreached_allow.tsv lists every name this script may print and
+why each stays; ReachabilitySpec fails when the two differ.
 
 Usage: python3 scripts/unreached.py [repo_root]   (default: the parent
 of this script's directory). Exit status is 0 whatever it prints.
@@ -28,8 +37,9 @@ import os
 import re
 import sys
 
-OBJECT_RE = re.compile(
-    r"^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|case\s+)*object\s+(\w+)")
+MODS = r"(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|abstract\s+|case\s+)*"
+OBJECT_RE = re.compile(r"^" + MODS + r"object\s+(\w+)")
+TYPE_RE = re.compile(r"^" + MODS + r"(?:class|trait)\s+(\w+)")
 MEMBER_RE = re.compile(
     r"^  ((?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|override\s+|"
     r"implicit\s+|lazy\s+)*)(?:def|val)\s+(\w+)")
@@ -103,16 +113,16 @@ def main():
         return any(w.search(text) for other, text in code.items()
                    if other != path)
 
-    unreached, members = [], []
+    unreached, members, types = [], [], []
     for path in sorted(p for p in code if p.startswith(main_root + os.sep)):
         rel = os.path.relpath(path, repo)
         lines = code[path].split("\n")
         for lineno, line in enumerate(lines, 1):
-            m = OBJECT_RE.match(line)
-            if not m:
+            obj, typ = OBJECT_RE.match(line), TYPE_RE.match(line)
+            if not (obj or typ):
                 continue
-            name = m.group(1)
-            # the object's body: up to the next top-level declaration
+            name = (obj or typ).group(1)
+            # the body: up to the next top-level declaration
             end = next((j for j in range(lineno, len(lines))
                         if re.match(r"[^\s}]", lines[j])), len(lines))
             for j in range(lineno, end):
@@ -124,6 +134,11 @@ def main():
                 if (len(word(member).findall(code[path])) == 1
                         and not used_elsewhere(member, path)):
                     members.append("%s:%d  %s.%s" % (rel, j + 1, name, member))
+            if typ:
+                if (len(word(name).findall(code[path])) == 1
+                        and not used_elsewhere(name, path)):
+                    types.append("%s:%d  %s" % (rel, lineno, name))
+                continue
             if used_elsewhere(name, path):
                 continue
             body = "\n".join(lines[lineno - 1:end])
@@ -132,6 +147,8 @@ def main():
     print("\n".join(unreached))
     print()
     print("\n".join(members))
+    print()
+    print("\n".join(types))
 
 
 if __name__ == "__main__":

@@ -58,6 +58,14 @@ private final class JobLog extends org.apache.spark.scheduler.SparkListener {
 }
 
 object Bench {
+  // the fixed small SF the warm pass falls back to
+  private val SmallSfDir = "/root/testdata/sf0.001"
+  // the warm pass uses a GenScale twin only for measured dirs up to this
+  private val WarmTwinMaxMb = 256L
+  // warm-pass wall budgets, twin then fallback slice
+  private val WarmBudgetSec = 300.0
+  private val WarmFallbackBudgetSec = 120.0
+
   private def esc(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -186,9 +194,9 @@ object Bench {
     // every row is char-bijected / sign-permuted / id-shifted and the
     // measured data's values and pages are never touched. Built once
     // under target/ and reused (marker-gated); only for measured dirs
-    // up to SPARK_GRAFT_WARM_TWIN_MAX_MB raw (default 256 — the
-    // generated scaling legs keep the old cheap warm-up), and
-    // SPARK_GRAFT_WARM_SF_DIR still overrides everything.
+    // up to WarmTwinMaxMb raw (the generated scaling legs keep the old
+    // cheap warm-up), and SPARK_GRAFT_WARM_SF_DIR still overrides
+    // everything.
     var twinSec = -1.0
     def dirBytes(p: String): Long =
       try scala.util.Using.resource(
@@ -197,11 +205,8 @@ object Bench {
           .mapToLong(java.nio.file.Files.size(_)).sum()
       } catch { case _: Throwable => Long.MaxValue }
     val warmDir = sys.env.get("SPARK_GRAFT_WARM_SF_DIR").getOrElse {
-      val capMb = sys.env.get("SPARK_GRAFT_WARM_TWIN_MAX_MB")
-        .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(256L)
-      val fallback = "/root/testdata/sf0.001"
       if (sys.env.contains("SPARK_GRAFT_NO_WARM") ||
-          dirBytes(sfDir) > (capMb << 20)) fallback
+          dirBytes(sfDir) > (WarmTwinMaxMb << 20)) SmallSfDir
       else {
         // twin key = basename + hash of the CANONICAL path (BenchPolicy.
         // twinDirName): two corpora sharing a basename must not reuse
@@ -219,7 +224,7 @@ object Bench {
           java.nio.file.Files.createFile(marker)
           twinSec = (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => () }
-        if (java.nio.file.Files.exists(marker)) twin else fallback
+        if (java.nio.file.Files.exists(marker)) twin else SmallSfDir
       }
     }
     // canonical-path compare, not string compare: a trailing slash or a
@@ -245,10 +250,9 @@ object Bench {
     // walks the query list in bench order (the deterministic tier
     // interleave above, so a truncated pass still covers a representative
     // mix and the shared primitives) and stops when the budget expires.
-    // Default 300 s: a full twin pass fits with margin on an unthrottled
-    // host (~200 s measured), while a throttled host is capped at 5 min
-    // instead of 22. Override with SPARK_GRAFT_WARM_BUDGET_SEC;
-    // SPARK_GRAFT_NO_WARM still disables everything.
+    // 300 s: a full twin pass fits with margin on an unthrottled host
+    // (~200 s measured), while a throttled host is capped at 5 min
+    // instead of 22. SPARK_GRAFT_NO_WARM still disables everything.
     //
     // FALLBACK SLICE: a query the twin budget never reached would hit
     // the timed region fully cold — measured on a throttled window: the
@@ -257,13 +261,10 @@ object Bench {
     // warmed against the cheap fixed small SF instead (the pre-r13 warm
     // corpus: same generated classes for every size-INdependent plan,
     // shared JIT primitives for the rest), under its own disclosed
-    // budget (default 120 s, SPARK_GRAFT_WARM_FALLBACK_BUDGET_SEC).
-    // Worst case the whole warm machinery is bounded at
-    // budget + fallbackBudget + the touch, regardless of host speed.
-    val warmBudget = sys.env.get("SPARK_GRAFT_WARM_BUDGET_SEC")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(300.0)
-    val warmFallbackBudget = sys.env.get("SPARK_GRAFT_WARM_FALLBACK_BUDGET_SEC")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(120.0)
+    // 120 s budget. Both budgets are checked BETWEEN queries, so each
+    // slice may overshoot by the one query running when it expires: the
+    // warm machinery is bounded at 300 + 120 s, plus at most two
+    // queries' run time, plus the touch.
     var warmN = 0
     var warmFallbackN = 0
     var warmFallbackSec = -1.0
@@ -277,20 +278,19 @@ object Bench {
         graft.operators.Caches.releaseAllPersistent(spark)
       val it = selected.iterator
       // checked between queries: the last may overshoot by its own run time
-      while (it.hasNext && (System.nanoTime() - w0) / 1e9 < warmBudget) {
+      while (it.hasNext && (System.nanoTime() - w0) / 1e9 < WarmBudgetSec) {
         val fn = it.next()._2
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
         sweep()
         warmN += 1
       }
-      val smallDir = "/root/testdata/sf0.001"
-      if (it.hasNext && new java.io.File(smallDir).isDirectory &&
-          canon(smallDir) != canon(sfDir) && canon(smallDir) != canon(warmDir)) {
+      if (it.hasNext && new java.io.File(SmallSfDir).isDirectory &&
+          canon(SmallSfDir) != canon(sfDir) && canon(SmallSfDir) != canon(warmDir)) {
         val f0 = System.nanoTime()
-        while (it.hasNext && (System.nanoTime() - f0) / 1e9 < warmFallbackBudget) {
+        while (it.hasNext && (System.nanoTime() - f0) / 1e9 < WarmFallbackBudgetSec) {
           val fn = it.next()._2
-          try fn(spark, smallDir).write.format("noop").mode("overwrite").save()
+          try fn(spark, SmallSfDir).write.format("noop").mode("overwrite").save()
           catch { case _: Throwable => () }
           sweep()
           warmFallbackN += 1
@@ -298,7 +298,7 @@ object Bench {
         warmFallbackSec = (System.nanoTime() - f0) / 1e9
       }
       spark.catalog.clearCache()
-      if (!sys.env.contains("SPARK_GRAFT_NO_GC")) System.gc()
+      System.gc()
       warmSec = (System.nanoTime() - w0) / 1e9
     }
     // UNTIMED raw-byte touch of the measured SF dir: stream every file
@@ -354,7 +354,7 @@ object Bench {
       val leaked = spark.sparkContext.getPersistentRDDs
       require(leaked.isEmpty,
         s"persistent-RDD leak after inter-query sweep: ids ${leaked.keys.toSeq.sorted.take(8).mkString(",")} (${leaked.size} total)")
-      if (!sys.env.contains("SPARK_GRAFT_NO_GC")) System.gc()
+      System.gc()
     }
     // Per-query steady-state reference times (seconds), checked in at
     // plans/bench_steady.tsv (regenerated by scripts/steady_baseline.py
@@ -521,8 +521,7 @@ object Bench {
       // explicit collection retires each query's garbage between
       // measurements — otherwise a long concurrent-GC window taxes
       // whoever runs next (measured: up to 10x on innocent bystander
-      // queries). Disable with SPARK_GRAFT_NO_GC to measure
-      // steady-state throughput.
+      // queries).
       // releaseAllPersistent drops RDD-level blocks (localCheckpoint's
       // home) that clearCache cannot see — deterministic, instead of
       // waiting for GC + the async ContextCleaner; on a loaded box the
@@ -564,7 +563,7 @@ object Bench {
       if (v < 0) "null"
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val warmJson =
-      s"""{"warm_sec":${num(warmSec)},"warm_dir":"${esc(warmDir)}","twin_build_sec":${num(twinSec)},"warm_budget_sec":${num(warmBudget)},"warm_queries":$warmN,"warm_fallback_queries":$warmFallbackN,"warm_fallback_sec":${num(warmFallbackSec)},"warm_complete":${warmN + warmFallbackN == selected.size},"touch_files":${if (touchFiles < 0) "null" else touchFiles.toString},"touch_mb":${num(touchMb)},"touch_sec":${num(touchSec)}}"""
+      s"""{"warm_sec":${num(warmSec)},"warm_dir":"${esc(warmDir)}","twin_build_sec":${num(twinSec)},"warm_budget_sec":${num(WarmBudgetSec)},"warm_queries":$warmN,"warm_fallback_queries":$warmFallbackN,"warm_fallback_sec":${num(warmFallbackSec)},"warm_complete":${warmN + warmFallbackN == selected.size},"touch_files":${if (touchFiles < 0) "null" else touchFiles.toString},"touch_mb":${num(touchMb)},"touch_sec":${num(touchSec)}}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_ok":${results.size},"n_err":${errors.size},"errors":$errJson,"retries":$retryJson,"retry_diag":$retryDiagJson,"retry_errors":$retryErrJson,"warm":$warmJson,"canary_sec":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(canarySec))},"sf":"${esc(sfDir)}"}"""
     println(line)
     // the full line above exceeds tail-window captures at ~90 queries

@@ -122,32 +122,6 @@ object DqChecks {
       .drop("__m", "__sd")
   }
 
-  /** Robust (MAD-based) outlier SCREEN — the heavy-tail-safe sibling of
-    * [[sigmaOutliers]]: |x − median| > nMad·1.4826·MAD, with sketch-tier
-    * percentiles (GK `percentile_approx`, fixed mergeable state — no
-    * full-value buffer, runnable at any scale). Returns the one-row
-    * report (n_outliers, n_total, median, mad) a screen publishes; the
-    * declared g12 query is the deterministic RANK-GATE over the same
-    * estimates (sketch values have no cross-engine oracle twin), and
-    * DqChecksSpec asserts this screen's count matches the
-    * exact-percentile twin at spec scale. */
-  def madOutliers(df: DataFrame, valueCol: String, nMad: Double = 3.0,
-      accuracy: Int = 2000): DataFrame = {
-    val x = col(valueCol)
-    val v = df.select(x)
-    val med = v.agg(percentile_approx(x, lit(0.5), lit(accuracy)).as("__med"))
-    val dev = v.crossJoin(broadcast(med))
-      .agg(percentile_approx(abs(x - col("__med")), lit(0.5), lit(accuracy))
-        .as("__mad"), first(col("__med")).as("__med"))
-    v.crossJoin(broadcast(dev))
-      .agg(
-        count(when(abs(x - col("__med")) >
-          lit(nMad) * lit(1.4826) * col("__mad"), lit(1))).as("n_outliers"),
-        count(lit(1)).as("n_total"),
-        round(first(col("__med")), 4).as("median"),
-        round(first(col("__mad")), 4).as("mad"))
-  }
-
   /** G6 completeness/validity metric batch (A4:786-823): named ratio
     * metrics — `avg(iff(pred,1,0))` per metric — computed in ONE
     * aggregation pass and unpivoted to

@@ -139,47 +139,6 @@ object Dedup {
         min(struct((col("id") +: repCols.map(col)): _*)).over(w))
   }
 
-  /** Candidate pairs via LSH over a (id, sig) frame: explode band keys,
-    * self-join per (band, bucket), dedupe pairs. The join is a shuffle on
-    * the band-key hash — bounded by bucket sizes, never |docs|², with
-    * buckets above `maxBucket` degraded to representative stars
-    * ([[withBucketStats]]). The exploded+sized side is cached for the
-    * self-join (a self-join would otherwise recompute the whole signature
-    * lineage once per side) and released before returning
-    * ([[Caches.scoped]]). */
-  def lshCandidatePairs(sig: DataFrame, bands: Int = 16,
-      rowsPerBand: Int = 4, maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(maxBucket >= 1, s"maxBucket ($maxBucket) must be >= 1")
-    val sized = withBucketStats(sig.select(col("id"),
-      posexplode(bandKeys(col("sig"), bands, rowsPerBand))
-        .as(Seq("band", "bucket"))))
-    Caches.scoped(sized) {
-      cappedCliqueAndStar(sized, maxBucket)
-    }
-  }
-
-  /** The count-and-report side of the hot-bucket guard: every
-    * (band, bucket) whose population is at least `minSize`, with its
-    * representative (min id) as the template-family exemplar — the
-    * diagnostic a corpus owner runs to SEE the boilerplate clusters the
-    * cap is absorbing and to tune `maxBucket`. One signature pass plus
-    * one map-side-combined count; no self-join at all, so it is safe to
-    * run on any corpus at any scale. */
-  def lshHotBuckets(docs: DataFrame, idCol: String, textCol: String,
-      minSize: Long = DefaultMaxBucket.toLong, k: Int = 3,
-      numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    require(numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    signaturesFromHashes(docs.select(col(idCol).as("id"),
-        hashedShingles(col(textCol), k).as("hs")), numHashes)
-      .select(col("id"),
-        posexplode(bandKeys(col("sig"), bands, numHashes / bands))
-          .as(Seq("band", "bucket")))
-      .groupBy("band", "bucket")
-      .agg(count(lit(1)).as("n_docs"), min(col("id")).as("exemplar_id"))
-      .filter(col("n_docs") >= minSize)
-  }
-
   /** The clique ∪ star candidate union over a [[withBucketStats]] frame:
     * exact pair clique for buckets ≤ `maxBucket`, representative star
     * above it. Emits (id_a < id_b), distinct. */
@@ -215,8 +174,7 @@ object Dedup {
     require(maxBucket >= 1, s"maxBucket ($maxBucket) must be >= 1")
     val hs = Caches.spreadByKey(docs, col(idCol)).select(col(idCol).as("id"),
       hashedShingles(col(textCol), k).as("hs"))
-    // candidate generation inlined (vs calling lshCandidatePairs) so the
-    // shingle frame AND the sized band rows share ONE cache scope —
+    // the shingle frame AND the sized band rows share ONE cache scope —
     // a single eager materialization instead of nested ones
     val sized = withBucketStats(signaturesFromHashes(hs, numHashes)
       .select(col("id"),

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Point-in-interval join WITHOUT an equi key — the missing member of
-  * the join family next to [[AsofJoin]] (point to latest-before) and
-  * the e03 range join (equi key + residual band).
+/** Point-in-interval counting WITHOUT an equi key — the member of the
+  * join family next to [[AsofJoin]] (point to latest-before) and the
+  * e03 range join (equi key + residual band); e17 runs it.
   *
   * When neither side is broadcastable and no key co-partitions them, a
   * naive `ts BETWEEN start AND end` condition plans a cartesian. The
@@ -51,27 +51,10 @@ object IntervalJoin {
         expr(s"INTERVAL 1 $bucket")))
       .otherwise(array().cast("array<timestamp>"))
 
-  /** Inner point-in-interval matches: one row per (point, covering
-    * interval), `[startCol, endCol)` half-open. Output: all point
-    * columns + all interval columns. `bucket` is any [[BucketUnits]]
-    * unit (hour, day, ...). */
-  def pointInInterval(points: DataFrame, pTsCol: String,
-      intervals: DataFrame, startCol: String, endCol: String,
-      bucket: String = "hour"): DataFrame = {
-    require(BucketUnits(bucket.toLowerCase),
-      s"bucket '$bucket' is not a supported unit " +
-        s"(${BucketUnits.toSeq.sorted.mkString(", ")})")
-    val exploded = intervals.withColumn("__bucket",
-      explode(coveredBuckets(startCol, endCol, bucket)))
-    points.withColumn("__bucket", date_trunc(bucket, col(pTsCol)))
-      .join(exploded, Seq("__bucket"))
-      .filter(col(pTsCol) >= col(startCol) && col(pTsCol) < col(endCol))
-      .drop("__bucket")
-  }
-
   /** Per-interval aggregation over contained points, KEEPING empty
     * intervals (count 0) — the report shape a window-load/outage-impact
-    * question wants. `agg` runs over the point side's columns. */
+    * question wants. `countCol` runs over the point side's columns;
+    * `bucket` is any [[BucketUnits]] unit (hour, day, ...). */
   def countPerInterval(points: DataFrame, pTsCol: String,
       intervals: DataFrame, startCol: String, endCol: String,
       countCol: Column, bucket: String = "hour"): DataFrame = {

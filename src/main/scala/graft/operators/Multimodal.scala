@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column handling.
   *
@@ -24,19 +23,6 @@ import org.apache.spark.sql.types._
   * shape, frame sampling — is identical for every codec.
   */
 object Multimodal {
-
-  val metaType: StructType = StructType(Seq(
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("duration_s", DoubleType),
-    StructField("codec", StringType)))
-
-  val assetType: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("kind", StringType),
-    StructField("data", BinaryType),
-    StructField("meta", metaType)))
 
   /** Synthesize an asset table from any (id, text) table — deterministic
     * fake payloads so the pipeline is testable without real media. */

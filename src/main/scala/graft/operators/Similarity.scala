@@ -4,6 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** Packed-centroid element for the driver-side 1-row packed table in
+  * `Similarity.kmeansAssign` — field names must stay cid/cv/cn (the fold
+  * reads them by name, and they mirror the former collect_list struct).
+  * Top level: as a private class nested in the object, Spark's
+  * generated encoder for it failed to compile and every pass fell back
+  * to the interpreter (SimilaritySpec's v19 codegen case guards it). */
+private[operators] case class PackedCent(cid: Long, cv: Seq[Double], cn: Double)
+
 /** Approximate-nearest-neighbor search over embedding columns
   * (`array<float>`).
   *
@@ -708,11 +716,6 @@ object Similarity {
     * centroid table — the k centroids ride as one array-of-structs row,
     * so the corpus never row-multiplies by k. Zero-norm vectors (cosine
     * undefined everywhere) get cid −1. */
-  /** Packed-centroid element for the driver-side 1-row packed table in
-    * [[kmeansAssign]] — field names must stay cid/cv/cn (the fold reads
-    * them by name, and they mirror the former collect_list struct). */
-  private case class PackedCent(cid: Long, cv: Seq[Double], cn: Double)
-
   private def kmeansAssign(c: DataFrame, cents: DataFrame): DataFrame = {
     // pack the k-row centroid table into a 1-row LOCAL packed table on
     // the driver: cents is a LocalRelation (the kmeansCentroids

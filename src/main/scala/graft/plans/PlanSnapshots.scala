@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.CartesianProductExec
 
 /** Physical-plan snapshot helpers: normalize a plan string so that
   * run-to-run noise (expression ids, plan ids, absolute paths, stats)
@@ -52,9 +51,6 @@ object PlanSnapshots {
     plan.linesIterator.count(l =>
       l.contains("Exchange ") && !l.contains("BroadcastExchange"))
 
-  def hasCartesian(plan: String): Boolean =
-    plan.contains("CartesianProduct")
-
   // ---- interior-plan audit (the probed plans of eager operators) ----
   //
   // The eager dedup/similarity tier (Caches.scoped) materializes during
@@ -85,9 +81,6 @@ object PlanSnapshots {
 
   def interiorShuffleCount(plans: Seq[SparkPlan]): Int =
     distinctNodes(plans).count(_.isInstanceOf[ShuffleExchangeExec])
-
-  def interiorHasCartesian(plans: Seq[SparkPlan]): Boolean =
-    distinctNodes(plans).exists(_.isInstanceOf[CartesianProductExec])
 
   /** Reviewable text of an eager query's interior: each probed plan
     * tree, then every distinct cached lineage (toString stops at the

@@ -132,10 +132,9 @@ object GovernanceQueries {
     *
     * The declared columns are the engine-invariant ones — n_total,
     * ok_med, ok_mad (sketch estimates themselves have no cross-engine
-    * twin); the full screen REPORT (n_outliers/median/mad at the same
-    * sketch thresholds) is the [[graft.dq.DqChecks.madOutliers]]
-    * operator, and DqChecksSpec asserts its count matches the
-    * exact-percentile twin at spec scale. */
+    * twin); DqChecksSpec asserts that the screen at the same sketch
+    * thresholds counts what the exact-percentile twin counts at spec
+    * scale. */
   def g12MadOutliers(s: SparkSession, dir: String): DataFrame = {
     val eps = 0.005
     val x = col("l_extendedprice")

@@ -11,15 +11,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a function builder on a LIVE session's registry (the
-    * runtime twin of SparkSessionExtensions.injectFunction — for
-    * sessions that were built without the extensions config). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      usage: String, builder: Seq[Expression] => Expression): Unit = {
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-    val info = new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      builder.getClass.getCanonicalName, null, name, usage, "")
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-  }
 }

@@ -302,12 +302,16 @@ class DedupSpec extends SparkSuite {
     assert(clusters === Map(1L -> n, (n + 1L) -> 1L, (n + 2L) -> 1L))
   }
 
-  test("hot-bucket cap: lshCandidatePairs star is bounded and ordered") {
-    val sig = (1L to 100L).map(i => i -> Seq.fill(8)(42L)).toDF("id", "sig")
-    val cands = Dedup.lshCandidatePairs(sig, bands = 4, rowsPerBand = 2,
-        maxBucket = 10)
+  test("hot-bucket cap: minhashDedupPairs star is bounded and ordered") {
+    val d = (1L to 100L)
+      .map(_ -> "one boilerplate template repeated verbatim on every page")
+      .toDF("doc_id", "text")
+    // 100 identical docs share every band bucket: far over the cap, so
+    // only the star around the min id is enumerated, each (1, i) ordered
+    val pairs = Dedup.minhashDedupPairs(d, "doc_id", "text",
+        threshold = 0.9, maxBucket = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cands === (2L to 100L).map(i => (1L, i)).toSet)
+    assert(pairs === (2L to 100L).map(i => (1L, i)).toSet)
   }
 
   test("hot-bucket cap: below-cap buckets keep the exact clique") {
@@ -410,18 +414,6 @@ class DedupSpec extends SparkSuite {
     val got = forceDistributed(clusters(d, chain, maxRounds = 15))
     assert(got.length === n.toInt)
     assert(got.forall(_._2 == 1L))
-  }
-
-  test("lshHotBuckets reports template families without any self-join") {
-    val d = ((1L to 200L).map(i => i -> "the same boilerplate template text repeated verbatim on every page") ++
-      Seq(201L -> "a genuinely unique document about catalyst plans"))
-      .toDF("doc_id", "text")
-    val hot = Dedup.lshHotBuckets(d, "doc_id", "text", minSize = 100L)
-      .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(3)))
-    // identical docs share every band bucket: 16 bands, 200 members,
-    // exemplar = min id; the singleton never reaches minSize
-    assert(hot.length === 16)
-    assert(hot.forall { case (_, n, ex) => n == 200L && ex == 1L })
   }
 
   test("collapsedDupClusters ≡ uncollapsed dupClusters(minhashDedupPairs)") {

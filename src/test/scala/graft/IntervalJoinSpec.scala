@@ -2,18 +2,35 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.IntervalJoin
 
-/** Bucketed point-in-interval join: exact matches (no dup, no loss)
-  * against a brute-force containment join, boundary semantics, empty
-  * intervals, and the no-cartesian plan promise. */
+/** Bucketed point-in-interval counts: exact per-interval counts (no
+  * dup, no loss) against a brute-force containment join, boundary
+  * semantics, empty intervals, and the no-cartesian plan promise. */
 class IntervalJoinSpec extends SparkSuite {
   import spark.implicits._
 
   private def ts(h: Int, m: Int) =
     Timestamp.valueOf(f"2024-03-01 $h%02d:$m%02d:00")
+
+  private def counts(df: DataFrame): Map[(Timestamp, Timestamp), Long] =
+    df.collect().map(r => ((r.getTimestamp(0), r.getTimestamp(1)),
+      r.getLong(2))).toMap
+
+  private def bucketed(points: DataFrame, intervals: DataFrame,
+      bucket: String = "hour") =
+    IntervalJoin.countPerInterval(points, "ts", intervals, "ws", "we",
+      col("event_id"), bucket)
+
+  /** Per-interval counts from the plain containment predicate (a nested
+    * loop join); intervals must be distinct (ws, we) rows. */
+  private def brute(points: DataFrame, intervals: DataFrame) =
+    counts(intervals.join(points,
+        col("ts") >= col("ws") && col("ts") < col("we"), "left")
+      .groupBy("ws", "we").agg(count(col("event_id"))))
 
   test("matches == brute force; half-open boundaries; multi-bucket spans") {
     val points = Seq(
@@ -30,20 +47,13 @@ class IntervalJoinSpec extends SparkSuite {
       (ts(15, 0), ts(16, 0))   // empty
     ).toDF("ws", "we")
 
-    val got = IntervalJoin.pointInInterval(points, "ts", intervals,
-        "ws", "we").select("event_id", "ws")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSet
-    val brute = points.join(intervals,
-        col("ts") >= col("ws") && col("ts") < col("we"))
-      .select("event_id", "ws")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSet
-    assert(got === brute)
-    assert(got === Set((1L, ts(9, 0)), (5L, ts(9, 0)), (5L, ts(9, 30)),
-      (3L, ts(9, 0)), (3L, ts(9, 30)), (2L, ts(9, 30))))
+    val got = counts(bucketed(points, intervals))
+    assert(got === brute(points, intervals))
+    assert(got === Map((ts(9, 0), ts(10, 30)) -> 3L,
+      (ts(9, 30), ts(11, 0)) -> 3L, (ts(15, 0), ts(16, 0)) -> 0L))
 
     // the plan is an equi join on the bucket — never a cartesian
-    val plan = IntervalJoin.pointInInterval(points, "ts", intervals,
-      "ws", "we").queryExecution.executedPlan.toString()
+    val plan = bucketed(points, intervals).queryExecution.executedPlan.toString()
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"interval join degenerated:\n${plan.take(1500)}")
@@ -77,16 +87,7 @@ class IntervalJoinSpec extends SparkSuite {
         val end = new Timestamp(start.getTime + lenMin * 60000L)
         (start, end)
       }.toDF("ws", "we").distinct()
-      val got = IntervalJoin.pointInInterval(points, "ts", intervals,
-          "ws", "we").select("event_id", "ws", "we")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-          r.getTimestamp(2))).toSet
-      val brute = points.join(intervals,
-          col("ts") >= col("ws") && col("ts") < col("we"))
-        .select("event_id", "ws", "we")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-          r.getTimestamp(2))).toSet
-      assert(got === brute)
+      assert(counts(bucketed(points, intervals)) === brute(points, intervals))
     }
   }
 
@@ -97,8 +98,7 @@ class IntervalJoinSpec extends SparkSuite {
     val points = Seq((1L, ts(9, 30))).toDF("event_id", "ts")
     val intervals = Seq((ts(9, 0), ts(10, 0))).toDF("ws", "we")
     val e = intercept[IllegalArgumentException] {
-      IntervalJoin.pointInInterval(points, "ts", intervals, "ws", "we",
-        bucket = "quarter")
+      bucketed(points, intervals, bucket = "quarter")
     }
     assert(e.getMessage.contains("not a supported unit"))
   }
@@ -112,16 +112,10 @@ class IntervalJoinSpec extends SparkSuite {
     ).toDF("ws", "we")
     // [start, end) with end <= start covers nothing — the sequence()
     // guard must turn these into empty bucket arrays, not throw
-    // "Illegal sequence boundaries"
-    val got = IntervalJoin.pointInInterval(points, "ts", intervals,
-      "ws", "we").select("event_id", "ws")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSet
-    assert(got === Set((1L, ts(9, 0))))
-    // and countPerInterval still REPORTS the degenerate intervals (0)
-    val counts = IntervalJoin.countPerInterval(points, "ts", intervals,
-        "ws", "we", col("event_id"))
-      .collect().map(r => ((r.getTimestamp(0), r.getTimestamp(1)), r.getLong(2))).toMap
-    assert(counts === Map(
+    // "Illegal sequence boundaries" — and the report still lists them
+    val got = counts(bucketed(points, intervals))
+    assert(got === brute(points, intervals))
+    assert(got === Map(
       (ts(9, 0), ts(9, 0)) -> 0L,
       (ts(10, 0), ts(9, 0)) -> 0L,
       (ts(9, 0), ts(10, 0)) -> 1L))
@@ -130,10 +124,9 @@ class IntervalJoinSpec extends SparkSuite {
   test("interval ending exactly on a bucket boundary doesn't leak a bucket") {
     val points = Seq((1L, ts(11, 0))).toDF("event_id", "ts")
     val intervals = Seq((ts(10, 0), ts(11, 0))).toDF("ws", "we")
-    // [10:00, 11:00) must not match a point at exactly 11:00 — and must
-    // not even explode into the 11:00 bucket
-    assert(IntervalJoin.pointInInterval(points, "ts", intervals,
-      "ws", "we").isEmpty)
+    // [10:00, 11:00) must not count a point at exactly 11:00
+    assert(counts(bucketed(points, intervals)) ===
+      Map((ts(10, 0), ts(11, 0)) -> 0L))
   }
 
   test("duplicate interval rows each report their own (un-doubled) count") {

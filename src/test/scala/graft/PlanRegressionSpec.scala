@@ -4,6 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+
 import graft.plans.PlanSnapshots
 
 /** Plan-shape regression gate over EVERY declared query at sf0.001:
@@ -53,6 +56,12 @@ class PlanRegressionSpec extends SparkSuite {
       .map(_.durationMs).sum
   }
 
+  private def hasCartesian(plan: String): Boolean =
+    plan.contains("CartesianProduct")
+
+  private def interiorHasCartesian(plans: Seq[SparkPlan]): Boolean =
+    PlanSnapshots.distinctNodes(plans).exists(_.isInstanceOf[CartesianProductExec])
+
   private lazy val budgets: Map[String, Int] = {
     val p = Paths.get("plans/exchange_budget.tsv")
     assert(Files.exists(p),
@@ -92,7 +101,7 @@ class PlanRegressionSpec extends SparkSuite {
           offenders += s"$name: planning took ${planMs}ms then ${retryMs}ms" +
             s" > ${planBudgetMs}ms"
       }
-      if (PlanSnapshots.hasCartesian(plan))
+      if (hasCartesian(plan))
         offenders += s"$name: CartesianProduct in plan"
       val shuffles = PlanSnapshots.shuffleCount(plan)
       budgets.get(name).foreach { budget =>
@@ -104,7 +113,7 @@ class PlanRegressionSpec extends SparkSuite {
       // within that budget — this is the check the checkpoint scan at
       // the top level would otherwise hide
       if (probed.nonEmpty) {
-        if (PlanSnapshots.interiorHasCartesian(probed.toSeq))
+        if (interiorHasCartesian(probed.toSeq))
           offenders += s"$name: CartesianProduct in interior (probed) plan"
         val interior = PlanSnapshots.interiorShuffleCount(probed.toSeq)
         budgets.get(s"$name#interior") match {

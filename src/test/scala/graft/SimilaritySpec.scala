@@ -306,6 +306,17 @@ class SimilaritySpec extends SparkSuite {
     }
   }
 
+  test("kmeansFit (v19) compiles every generated class: no interpreted fallback") {
+    // CODEGEN_ONLY makes a projection or encoder that fails to compile
+    // throw instead of quietly switching to interpreted evaluation;
+    // codegen.fallback=false does the same for whole-stage codegen
+    val strict = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    strict.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(SparkEntry.queries("v19_kmeans_fit")(spark, sfDir).collect().nonEmpty)
+    finally strict.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("kmeansFit == exact driver-side Lloyd reference, iteration for iteration") {
     import java.math.{BigDecimal => JBD, RoundingMode}
     val data: Seq[(Long, Seq[Float])] = (0L until 10L).map { i =>
