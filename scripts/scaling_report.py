@@ -6,7 +6,7 @@ For each query the scaling exponent is log(t_hi / t_lo) / log(sf_ratio):
 1.0 = perfectly linear in input size, < 1 = fixed per-query overhead
 (planning/codegen, constant-size sketches) still dominates at the small
 end, > 1 = super-linear growth worth a look. Exponents are measured with
-SPARK_GRAFT_REPEAT=2 (last run kept) so first-plan codegen does not
+SPARK_GRAFT_REPEAT=2 (minimum kept) so first-plan codegen does not
 masquerade as data-dependent cost.
 
 Usage:

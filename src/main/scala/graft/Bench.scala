@@ -1,72 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only job profiler behind SPARK_GRAFT_JOBLOG=1: accumulates every
-  * Spark job's wall duration and task count, so a per-query drain can
-  * show WHERE a heavy query's seconds go (how many jobs, how much of
-  * the elapsed time is inside jobs vs planning/codegen between them,
-  * and which jobs dominate). Listener events arrive on the bus thread,
-  * hence the synchronized buffer; `drain()` is called between queries
-  * when the bus is quiet. */
-private final class JobLog extends org.apache.spark.scheduler.SparkListener {
-  private val starts = new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Long]
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Int, String)]
-  private val tasks = new java.util.concurrent.ConcurrentHashMap[Integer, Integer]
-  private val sites = new java.util.concurrent.ConcurrentHashMap[Integer, String]
-  override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-    starts.put(e.jobId, e.time)
-    tasks.put(e.jobId, e.stageInfos.map(_.numTasks).sum)
-    // SparkListenerJobStart.properties is nullable (jobs submitted
-    // without local properties) — a bare dereference would NPE on the
-    // bus thread and lose the call-site tag
-    val p = Option(e.properties)
-    val cs = Seq("spark.job.description", "callSite.short",
-        "spark.sql.execution.root.id", "spark.sql.execution.id")
-      .iterator.map(k => p.flatMap(x => Option(x.getProperty(k))).getOrElse(""))
-      .find(_.nonEmpty).getOrElse("?")
-    sites.put(e.jobId, cs.replaceAll("\\s+", " ").take(48))
-  }
-  override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-    val t0 = starts.remove(Integer.valueOf(e.jobId))
-    val nt = Option(tasks.remove(Integer.valueOf(e.jobId))).fold(0)(_.intValue)
-    val cs = Option(sites.remove(Integer.valueOf(e.jobId))).getOrElse("?")
-    if (t0 != null && t0.longValue != 0L) buf.synchronized {
-      buf += ((e.jobId, (e.time - t0.longValue) / 1e3, nt, cs))
-    }
-  }
-  private val stages = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Int, Double, String)]
-  override def onStageCompleted(
-      e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-    val si = e.stageInfo
-    val dur = (for (a <- si.submissionTime; b <- si.completionTime)
-      yield (b - a) / 1e3).getOrElse(0.0)
-    // sum of executor run time across tasks: wall ≈ sum → one task
-    // carried the stage (skew or serialization); sum ≈ wall×numTasks →
-    // genuinely parallel compute
-    val run = si.taskMetrics.executorRunTime / 1e3
-    stages.synchronized {
-      stages += ((si.stageId, dur, si.numTasks, run,
-        si.name.replaceAll("\\s+", " ").take(64)))
-    }
-  }
-  def drain(): Seq[(Int, Double, Int, String)] = buf.synchronized {
-    val out = buf.toVector; buf.clear(); out
-  }
-  def drainStages(): Seq[(Int, Double, Int, Double, String)] = stages.synchronized {
-    val out = stages.toVector; stages.clear(); out
-  }
-}
-
 object Bench {
   // the fixed small SF the warm pass falls back to
   private val SmallSfDir = "/root/testdata/sf0.001"
   // the warm pass uses a GenScale twin only for measured dirs up to this
   private val WarmTwinMaxMb = 256L
-  // warm-pass wall budgets, twin then fallback slice
-  private val WarmBudgetSec = 300.0
-  private val WarmFallbackBudgetSec = 120.0
 
-  private def esc(s: String): String = s.flatMap {
+  /** JSON string-body escape (no surrounding quotes): backslash, quote
+    * and every control char below 0x20. Shared by Bench and Verify — a
+    * tab or CR left raw in a key, an error message, an SF path or
+    * builder-authored SQL makes the consumer's JSON parse fail and lose
+    * the whole artifact. */
+  private[graft] def esc(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -75,6 +21,25 @@ object Bench {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
+
+  /** Warm-twin directory name for a measured SF dir: the basename for
+    * human readability PLUS the first 8 hex chars of md5 over the
+    * CANONICAL path — two different corpora that happen to share a
+    * basename (two dirs both named `sf0.1`) must never reuse each
+    * other's twin (a stale `_TWIN_COMPLETE` marker would warm on
+    * wrong-shape data: a warm-quality bug, never a correctness one,
+    * but silent). */
+  private[graft] def twinDirName(canonicalSfPath: String): String = {
+    val base = canonicalSfPath.reverse.takeWhile(_ != '/').reverse match {
+      case "" => "x"
+      case b => b
+    }
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(canonicalSfPath.getBytes("UTF-8"))
+    val hex = md.take(4).map(b => f"${b & 0xff}%02x").mkString
+    s"sfwarm_${base}_$hex"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -105,14 +70,9 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // HOST-SPEED CANARY (untimed, before any warm work): one fixed
     // single-threaded CPU probe — 2e8 iterations of a long mix — emitted
-    // as `canary_sec` in the artifact. Round-over-round driver totals
-    // have twice been dominated by host-window speed (r13: the untimed
-    // warm pass ran 6.4x slower on the driver host than on the builder's
-    // for identical work), and without a fixed-work probe every
-    // comparison burns a round of signal arguing window vs engine. The
-    // probe is pure JVM arithmetic (no Spark, no I/O, compiles in the
-    // first loop iterations), so its seconds are a direct single-core
-    // speed reading for THIS run's environment.
+    // as `canary_sec`, so a comparison between two runs can tell a slow
+    // host window from a slow engine. Pure JVM arithmetic: no Spark, no
+    // I/O.
     val canarySec = {
       val t0 = System.nanoTime()
       var h = 0x9e3779b97f4a7c15L
@@ -148,21 +108,16 @@ object Bench {
         .groupBy("rn").agg(count(lit(1)))
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
-    // dev aid: SPARK_GRAFT_REPEAT=3 times each query thrice and keeps the
-    // LAST measurement — separates first-plan codegen cost from
-    // steady-state throughput when hunting a slow query
+    // SPARK_GRAFT_REPEAT=N times each query N times back to back and
+    // keeps the MINIMUM: the per-run minimum is the comparison statistic
+    // (a transient host stall inflates one run, never all of them)
     val repeat = math.max(1, sys.env.get("SPARK_GRAFT_REPEAT")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1))
-    // BENCH ORDER: deterministic tier interleave, not name order. Name
-    // order runs each tier as one contiguous block with the heavy v-tier
-    // last — so a host throttle window late in the run (the observed
-    // failure mode two rounds running) lands ENTIRELY on one tier, and
-    // cross-round per-query comparisons inherit that position bias. The
-    // interleave below round-robins across the tier prefixes (d, e, g,
-    // m, p, q, s, t, v) in sorted order — fully deterministic (same
-    // order every run, disclosed by the `queries` map which is emitted
-    // in measurement order), with heavy and light queries spread evenly
-    // so any stall window taxes a representative mix instead of a tier.
+    // BENCH ORDER: deterministic round-robin across the tier prefixes (d,
+    // e, g, m, p, q, s, t, v) in sorted order, not name order — name
+    // order runs each tier as one block with the heavy v-tier last, so a
+    // host throttle window late in the run lands entirely on one tier.
+    // The `queries` map is emitted in this measurement order.
     val selected = {
       val base = SparkEntry.selectedQueries
       val tiers = base.groupBy(_._1.takeWhile(_.isLetter))
@@ -170,33 +125,17 @@ object Bench {
       val maxLen = tiers.map(_.size).max
       (0 until maxLen).flatMap(i => tiers.flatMap(_.lift(i)))
     }
-    // WARM PASS (untimed): run every selected query once against the
-    // smallest SF before the timed region. Generated operator code is
-    // keyed by plan shape, not data, so this moves the Janino compile +
-    // JIT cost of each query's codegen classes out of the measurement —
-    // the timed numbers then report DATA-PATH throughput (the thing that
-    // scales to 100 TB) instead of per-plan compile latency (which is
-    // amortized to zero on any long-lived production session). Size-
-    // dependent plan choices (broadcast vs shuffle) can differ between
-    // SFs, so a residual compile tail remains — this is a warm-up, not a
-    // pre-run of the measured work (different data, separate plans).
-    // Disable with SPARK_GRAFT_NO_WARM=1.
-    // WARM DIR RESOLUTION. A different-SF warm pass compiles DIFFERENT
-    // generated classes wherever plan choices are size-dependent
-    // (broadcast at sf0.001 vs shuffle at sf0.1), so the measured SF's
-    // codegen classes hit the timed region un-JITed — retry_diag showed
-    // the residual first-run stalls as in-task executor-run totals
-    // DESCENDING across re-runs at constant task counts (e03: 35.3 ->
-    // 15.5 -> 14.9 exec-s), the C2 warm-up curve. The fix that keeps
-    // the no-measured-data discipline intact: warm on a GenScale TWIN
-    // of the measured dir — same row counts (same plan choices, same
-    // generated source, same JIT'd classes) but startReplica=1, so
+    // WARM PASS (untimed): run every selected query once before the
+    // timed region, so the Janino compile + JIT of each query's codegen
+    // classes is not measured. The warm corpus is a GenScale TWIN of the
+    // measured dir: same row counts (so the same size-dependent plan
+    // choices and the same generated classes) but startReplica=1, so
     // every row is char-bijected / sign-permuted / id-shifted and the
     // measured data's values and pages are never touched. Built once
-    // under target/ and reused (marker-gated); only for measured dirs
-    // up to WarmTwinMaxMb raw (the generated scaling legs keep the old
-    // cheap warm-up), and SPARK_GRAFT_WARM_SF_DIR still overrides
-    // everything.
+    // under target/ and reused (marker-gated), only for measured dirs up
+    // to WarmTwinMaxMb raw; larger dirs, or a failed twin build, warm on
+    // the small fixed SF instead. SPARK_GRAFT_WARM_SF_DIR overrides the
+    // warm dir; SPARK_GRAFT_NO_WARM disables the pass and the touch.
     var twinSec = -1.0
     def dirBytes(p: String): Long =
       try scala.util.Using.resource(
@@ -204,16 +143,16 @@ object Bench {
         w.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
       } catch { case _: Throwable => Long.MaxValue }
+    // canonical-path compare, not string compare: a trailing slash or a
+    // symlinked SF dir would otherwise defeat the guard below and warm
+    // the MEASURED dataset itself (silently flattered numbers)
+    def canon(p: String) =
+      try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
     val warmDir = sys.env.get("SPARK_GRAFT_WARM_SF_DIR").getOrElse {
       if (sys.env.contains("SPARK_GRAFT_NO_WARM") ||
           dirBytes(sfDir) > (WarmTwinMaxMb << 20)) SmallSfDir
       else {
-        // twin key = basename + hash of the CANONICAL path (BenchPolicy.
-        // twinDirName): two corpora sharing a basename must not reuse
-        // each other's twin via a stale completion marker
-        val twin = "target/" + BenchPolicy.twinDirName(
-          try new java.io.File(sfDir).getCanonicalPath
-          catch { case _: Throwable => sfDir })
+        val twin = "target/" + twinDirName(canon(sfDir))
         val marker = java.nio.file.Paths.get(twin, "_TWIN_COMPLETE")
         if (!java.nio.file.Files.exists(marker)) try {
           val t0 = System.nanoTime()
@@ -227,75 +166,23 @@ object Bench {
         if (java.nio.file.Files.exists(marker)) twin else SmallSfDir
       }
     }
-    // canonical-path compare, not string compare: a trailing slash or a
-    // symlinked SF dir would otherwise defeat the guard and warm the
-    // MEASURED dataset itself (page cache + size-dependent plan choices
-    // pre-warmed on the data about to be timed — silently flattered
-    // numbers, exactly what the different-SF warm-up exists to avoid)
-    def canon(p: String) =
-      try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
-    // warm-pass / touch forensics, emitted in the artifact: the round-12
-    // driver run retried 7 queries DESPITE the corpus touch, and the
-    // artifact carried no evidence of whether (or how slowly) the
-    // warm-up machinery itself ran in that environment. These fields
-    // make the next stall decomposable from the artifact alone.
+    // warm-pass / touch durations, emitted under `warm` in the artifact
     var warmSec = -1.0
+    var warmN = 0
     var touchFiles = -1L
     var touchMb = -1.0
     var touchSec = -1.0
-    // WALL BUDGET on the warm pass (disclosed in the artifact): the warm
-    // pass is a warm-up, not a contract — on the round-13 driver host it
-    // ran 1301 s untimed (6.4x throttled vs the builder's 203 s for
-    // identical work), more than 5x the timed bench itself. The pass now
-    // walks the query list in bench order (the deterministic tier
-    // interleave above, so a truncated pass still covers a representative
-    // mix and the shared primitives) and stops when the budget expires.
-    // 300 s: a full twin pass fits with margin on an unthrottled host
-    // (~200 s measured), while a throttled host is capped at 5 min
-    // instead of 22. SPARK_GRAFT_NO_WARM still disables everything.
-    //
-    // FALLBACK SLICE: a query the twin budget never reached would hit
-    // the timed region fully cold — measured on a throttled window: the
-    // tail 43 of 214 un-warmed queries produced 5 anomaly retries and a
-    // +8% total. So queries left over when the twin budget expires are
-    // warmed against the cheap fixed small SF instead (the pre-r13 warm
-    // corpus: same generated classes for every size-INdependent plan,
-    // shared JIT primitives for the rest), under its own disclosed
-    // 120 s budget. Both budgets are checked BETWEEN queries, so each
-    // slice may overshoot by the one query running when it expires: the
-    // warm machinery is bounded at 300 + 120 s, plus at most two
-    // queries' run time, plus the touch.
-    var warmN = 0
-    var warmFallbackN = 0
-    var warmFallbackSec = -1.0
     if (!sys.env.contains("SPARK_GRAFT_NO_WARM") &&
         new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir)) {
       val w0 = System.nanoTime()
-      def sweep(): Unit =
+      selected.foreach { case (_, fn) =>
+        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () }
         // sweep per warm query: 200+ queries' checkpoint blocks piling
         // up through the warm pass would start the TIMED region with a
         // storage-eviction debt the first measured queries pay for
         graft.operators.Caches.releaseAllPersistent(spark)
-      val it = selected.iterator
-      // checked between queries: the last may overshoot by its own run time
-      while (it.hasNext && (System.nanoTime() - w0) / 1e9 < WarmBudgetSec) {
-        val fn = it.next()._2
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        sweep()
         warmN += 1
-      }
-      if (it.hasNext && new java.io.File(SmallSfDir).isDirectory &&
-          canon(SmallSfDir) != canon(sfDir) && canon(SmallSfDir) != canon(warmDir)) {
-        val f0 = System.nanoTime()
-        while (it.hasNext && (System.nanoTime() - f0) / 1e9 < WarmFallbackBudgetSec) {
-          val fn = it.next()._2
-          try fn(spark, SmallSfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-          sweep()
-          warmFallbackN += 1
-        }
-        warmFallbackSec = (System.nanoTime() - f0) / 1e9
       }
       spark.catalog.clearCache()
       System.gc()
@@ -303,20 +190,11 @@ object Bench {
     }
     // UNTIMED raw-byte touch of the measured SF dir: stream every file
     // (RECURSIVE walk — generated legs ship each table as a
-    // `<name>.parquet/` DIRECTORY of part files, which a flat listing
-    // would silently skip) through a read-and-discard loop so the OS
-    // page cache is warm before the first timed query. This is NOT the
-    // query warm-up the different-SF guard above exists to prevent —
-    // no plan is built, no Spark cache is touched, no size-dependent
-    // plan choice is made; it removes exactly the first-access
-    // disk/page-fault stall that the round-11 retry cluster measured
-    // (5 shingle-family queries retried, each landing at <= 1/3 its
-    // first-run time — the signature of timing cold I/O, not compute;
-    // same mechanism as the CC-gate warm-start finding). A production
-    // 100 TB run reads through a distributed FS whose first access the
-    // bench cannot model either way; the timed region is about compute
-    // throughput. SPARK_GRAFT_NO_WARM disables it along with the query
-    // warm pass — a deliberately-cold measurement stays cold.
+    // `<name>.parquet/` DIRECTORY of part files) through a read-and-
+    // discard loop so the OS page cache is warm before the first timed
+    // query. No plan is built and no Spark cache is touched: it removes
+    // only the first-access disk stall, which the timed region (compute
+    // throughput) does not mean to measure.
     if (!sys.env.contains("SPARK_GRAFT_NO_WARM")) try {
       val t0 = System.nanoTime()
       var nFiles = 0L
@@ -339,107 +217,29 @@ object Bench {
       touchMb = nBytes / 1048576.0
       touchSec = (System.nanoTime() - t0) / 1e9
     } catch { case _: Throwable => () }
-    // the one inter-measurement sweep discipline (checkpoint blocks +
-    // SQL cache + garbage), shared by the retry path and the per-query
-    // epilogue so the two can never silently diverge
+    // no cross-query bleed: releaseAllPersistent drops RDD-level blocks
+    // (localCheckpoint's home) that clearCache cannot see, and the
+    // explicit collection retires each query's garbage so a long
+    // concurrent-GC window does not tax whoever runs next
     def interQueryCleanup(): Unit = {
       graft.operators.Caches.releaseAllPersistent(spark)
       spark.catalog.clearCache()
-      // storage-debt gate (on by default): after the sweep, ZERO RDDs may
-      // remain registered as persistent — a survivor means the sweep's
-      // unpersist path broke (or something re-persisted during cleanup)
-      // and the round-7 t19 mechanism (dead checkpoint blocks stacking
-      // into storage pressure across 200 queries) is silently back. Fail
-      // the whole run loudly rather than publish numbers taxed by it.
+      // storage-debt gate: after the sweep, ZERO RDDs may remain
+      // registered as persistent — a survivor means the release path
+      // broke and dead checkpoint blocks would stack into storage
+      // pressure across 200 queries. Fail the run rather than publish
+      // numbers taxed by it.
       val leaked = spark.sparkContext.getPersistentRDDs
       require(leaked.isEmpty,
         s"persistent-RDD leak after inter-query sweep: ids ${leaked.keys.toSeq.sorted.take(8).mkString(",")} (${leaked.size} total)")
       System.gc()
     }
-    // Per-query steady-state reference times (seconds), checked in at
-    // plans/bench_steady.tsv (regenerated by scripts/steady_baseline.py
-    // from a controlled SPARK_GRAFT_REPEAT=2 run). The anomaly guard
-    // triggers on EACH QUERY'S OWN history — a measurement over 3x its
-    // recorded steady time is a host stall by construction (SCALING.md
-    // shows no query's genuine cost moving 3x round-over-round), where
-    // the old cross-query-median rule let 5-8x stalls on mid-size
-    // queries stand because they stayed under the absolute 12 s bar.
-    // The file pins the SF it was measured at; on any other SF it is
-    // ignored and the fallback family rule below applies.
-    val steady: Map[String, Double] = {
-      val path = java.nio.file.Paths.get("plans/bench_steady.tsv")
-      try {
-        import scala.jdk.CollectionConverters._
-        BenchPolicy.parseSteady(
-          java.nio.file.Files.readAllLines(path).asScala.toSeq, sfDir, canon)
-      } catch { case _: Throwable => Map.empty }
-    }
-    // The job/stage listener is now ALWAYS attached (it only appends
-    // tuples to in-memory buffers on the async bus thread — never in the
-    // measured path), because the round-12 driver artifact carried 7
-    // first-run stalls with NO decomposition: the env-gated JOBLOG was
-    // off in the driver environment, so "was the 10 s inside tasks
-    // (I/O / skew / executor starvation) or in the driver gap
-    // (planning / codegen / GC)" stayed inference. With the listener
-    // always on, every anomaly-retried query's observations — the
-    // stalled first run included — are drained into `retry_diag` in the
-    // artifact. SPARK_GRAFT_JOBLOG=1 additionally prints the verbose
-    // per-query stderr breakdown for every query (dev profiling), as
-    // before. Drains happen outside the timed region.
-    val jobLog = new JobLog
-    spark.sparkContext.addSparkListener(jobLog)
-    val verbose = sys.env.contains("SPARK_GRAFT_JOBLOG")
-    // drain the listener for the run that just finished and render one
-    // compact JSON diagnostic: wall vs sum-of-job-durations (the gap is
-    // driver-side planning/codegen/GC; concurrent jobs — AQE broadcast
-    // subtrees — can overlap, so a small NEGATIVE gap just means
-    // parallel jobs, not an accounting bug), job count, the heaviest job
-    // (with its call-site tag), and the heaviest stage with its
-    // executor-run sum (run ≈ wall on 1 task = serialized/skewed or
-    // cold-I/O; wall >> run = scheduler/executor starvation — the host
-    // throttle signature). The 250 ms bus quiesce runs OUTSIDE the
-    // timed region and only on anomaly/verbose paths.
-    def diagJson(name: String, wall: Double): String = {
-      Thread.sleep(250)
-      val jobs = jobLog.drain()
-      val stgs = jobLog.drainStages()
-      val inJobs = jobs.map(_._2).sum
-      val top = jobs.sortBy(-_._2).headOption.map { case (id, s, nt, cs) =>
-        f"j$id%d:$s%.2fs/$nt%dt[$cs%s]" }.getOrElse("")
-      val topStage = stgs.sortBy(-_._2).headOption.map { case (id, s, nt, run, nm) =>
-        f"s$id%d:$s%.2fs/$nt%dt run=$run%.2f $nm%s" }.getOrElse("")
-      if (verbose) {
-        val tops = jobs.sortBy(-_._2).take(8).map { case (id, s, nt, cs) =>
-          f"j$id%d:$s%.2fs/$nt%dt[$cs%s]" }.mkString(" ")
-        System.err.println(
-          f"JOBLOG $name%-26s wall=$wall%6.2f jobs=${jobs.size}%3d " +
-          f"injob=$inJobs%6.2f gap=${wall - inJobs}%6.2f top: $tops")
-        stgs.filter(_._2 >= 0.15).sortBy(-_._2).take(10)
-          .foreach { case (id, s, nt, run, nm) =>
-            System.err.println(
-              f"  STAGE s$id%d $s%.2fs/$nt%dt run=$run%.2f $nm%s") }
-      }
-      String.format(java.util.Locale.ROOT,
-        """{"wall":%.3f,"injob":%.3f,"gap":%.3f,"jobs":%d,"top":"%s","stage":"%s"}""",
-        Double.box(wall), Double.box(inJobs), Double.box(wall - inJobs),
-        Integer.valueOf(jobs.size), esc(top), esc(topStage))
-    }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // anomaly retries, fully disclosed in the output line: every
-    // observation, in measurement order (the kept value — their median —
-    // is what `queries` carries)
-    val retried = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // a rerun that CRASHED during the anomaly retry: the query still
-    // passes (a completed measurement exists) but the crash is disclosed
-    val retryErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // per-observation job/stage decomposition of every anomaly-retried
-    // query, keyed like `retries` — the stalled first run included
-    val retryDiag = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     selected.foreach { case (name, fn) =>
-      var elapsed = 0.0
-      var ok = true
-      def timedRun(): Unit = {
+      var best = Double.PositiveInfinity
+      var ok = false
+      (1 to repeat).foreach { _ =>
         val t0 = System.nanoTime()
         // noop sink materializes every output row/column (count() would
         // let Catalyst prune the projections and under-report)
@@ -450,130 +250,34 @@ object Bench {
               String.valueOf(e.getMessage)).take(300)
             false
           }
-        elapsed = (System.nanoTime() - t0) / 1e9 // cleanup is NOT the query
+        val sec = (System.nanoTime() - t0) / 1e9
         // a query is ok/err by its LAST run — drop stale error messages
         // from earlier repeats so n_ok + n_err always equals queries run
-        if (ok) errors.remove(name)
+        if (ok) { errors.remove(name); best = math.min(best, sec) }
       }
-      (1 to repeat).foreach { i =>
-        // drain everything queued before this run (previous query's
-        // stragglers, prior repeats) so a later diag drain covers
-        // exactly the LAST timed run. No sleep outside verbose mode:
-        // sub-ms bus lag can at worst leak a straggler event into a
-        // RETRIED query's diag, never into a measurement.
-        if (i == repeat) {
-          if (verbose) Thread.sleep(300)
-          jobLog.drain(); jobLog.drainStages(); ()
-        }
-        timedRun()
-      }
-      var firstDiag: String = null
-      if (verbose && ok) firstDiag = diagJson(name, elapsed)
-      // single-measurement anomaly guard: a transient host stall (IO
-      // freeze, neighbor burst, GC storm) can inflate exactly one query
-      // by 10-20x in a one-shot run — round 7's official artifact
-      // carried a 69 s measurement of a query that runs 3-5 s in every
-      // controlled rerun, before and since; round 8's let 5x stalls on
-      // mid-size queries stand because they stayed under the old 12 s
-      // absolute bar. The trigger is now PER-QUERY: a measurement over
-      // 3x the query's own checked-in steady time (floor 2 s, so
-      // sub-second jitter never retries) is re-measured TWICE after the
-      // usual inter-query cleanup and the MEDIAN of all runs kept —
-      // the standard robust estimator: neither the stall nor the
-      // luckiest run. ESCALATION (BenchPolicy.needMore): while the
-      // median of everything observed so far STILL trips the query's
-      // own trigger — the 2-of-3-stall shape, where median-of-three is
-      // itself a stall — keep observing, capped at five runs total. A
-      // query with no steady reference (new this round, or a bench at
-      // a different SF) falls back to the cross-query family rule
-      // (> 12 s AND > 4x the median of queries measured so far —
-      // genuinely heavy queries move the median with them, so real
-      // load growth never trips it). Every observation is disclosed
-      // under `retries`, and the retry count rides the compact summary
-      // line, so the artifact hides nothing.
-      val anomalous = ok && repeat == 1 &&
-        BenchPolicy.anomalous(steady, name, elapsed, acc.values)
-      if (anomalous) {
-        val obs = scala.collection.mutable.ArrayBuffer(elapsed)
-        // decompose the stalled first run (unless verbose already
-        // drained it) and every retry observation — this is what turns
-        // a driver-environment stall into data instead of inference
-        val diags = scala.collection.mutable.ArrayBuffer(
-          if (firstDiag != null) firstDiag else diagJson(name, elapsed))
-        while (ok && BenchPolicy.needMore(steady, name, obs.toSeq, acc.values)) {
-          interQueryCleanup()
-          timedRun()
-          if (ok) { obs += elapsed; diags += diagJson(name, elapsed) }
-        }
-        retryDiag(name) = diags.toSeq
-        // a rerun crash keeps the successful observations and stays a
-        // pass (the query demonstrably ran to completion) — but the
-        // crash itself must not vanish from the artifact: it moves to
-        // retry_errors rather than being silently wiped
-        if (!ok) {
-          errors.remove(name).foreach(msg => retryErrors(name) = msg)
-          ok = true
-        }
-        elapsed = BenchPolicy.median(obs.toSeq)
-        retried(name) = obs.toSeq
-      }
-      // no cross-query bleed: clearCache drops persisted blocks, and the
-      // explicit collection retires each query's garbage between
-      // measurements — otherwise a long concurrent-GC window taxes
-      // whoever runs next (measured: up to 10x on innocent bystander
-      // queries).
-      // releaseAllPersistent drops RDD-level blocks (localCheckpoint's
-      // home) that clearCache cannot see — deterministic, instead of
-      // waiting for GC + the async ContextCleaner; on a loaded box the
-      // cleaner falls behind and dead checkpoint blocks from hundreds of
-      // queries stack into storage pressure that spills LIVE state of
-      // whichever checkpoint-heavy query runs next.
       interQueryCleanup()
-      if (ok) acc(name) = elapsed
+      if (ok) results(name) = best
     }
-    val results = acc
-    // ms precision is plenty, and the shorter values keep more of the
-    // per-query map visible inside any tail-sliced capture. Locale.ROOT:
-    // a comma-decimal default locale would otherwise emit invalid JSON
-    // esc() on EVERY interpolated string — keys and sfDir included: a
-    // quote/backslash in SPARK_GRAFT_SF_DIR spliced raw would corrupt
-    // both stdout lines and bench.json, and the driver's JSON parse
-    // would silently lose the round's performance metrics
-    val qs = results.map { case (k, v) =>
-      "\"" + esc(k) + "\":" + String.format(java.util.Locale.ROOT, "%.3f",
-        Double.box(v))
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // a crashed query must be VISIBLE, not a fast time: failures are
-    // excluded from `queries`/total and reported in `errors`/`n_err`
-    val retryJson = retried.map { case (k, obs) =>
-      "\"" + esc(k) + "\":[" + obs.map(v =>
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-        .mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val retryErrJson = retryErrors.map { case (k, v) =>
-      "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
-    // diag values are pre-rendered JSON objects — splice raw, not quoted
-    val retryDiagJson = retryDiag.map { case (k, ds) =>
-      "\"" + esc(k) + "\":[" + ds.mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    // ms precision; Locale.ROOT, since a comma-decimal default locale
+    // would emit invalid JSON. esc() on every interpolated string, keys
+    // and sfDir included.
     def num(v: Double): String =
       if (v < 0) "null"
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val qs = results.map { case (k, v) => "\"" + esc(k) + "\":" + num(v) }
+      .mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
+      .mkString("{", ",", "}")
+    // a crashed query must be VISIBLE, not a fast time: failures are
+    // excluded from `queries`/total and reported in `errors`/`n_err`
+    val total = results.values.sum
     val warmJson =
-      s"""{"warm_sec":${num(warmSec)},"warm_dir":"${esc(warmDir)}","twin_build_sec":${num(twinSec)},"warm_budget_sec":${num(WarmBudgetSec)},"warm_queries":$warmN,"warm_fallback_queries":$warmFallbackN,"warm_fallback_sec":${num(warmFallbackSec)},"warm_complete":${warmN + warmFallbackN == selected.size},"touch_files":${if (touchFiles < 0) "null" else touchFiles.toString},"touch_mb":${num(touchMb)},"touch_sec":${num(touchSec)}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_ok":${results.size},"n_err":${errors.size},"errors":$errJson,"retries":$retryJson,"retry_diag":$retryDiagJson,"retry_errors":$retryErrJson,"warm":$warmJson,"canary_sec":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(canarySec))},"sf":"${esc(sfDir)}"}"""
+      s"""{"warm_sec":${num(warmSec)},"warm_dir":"${esc(warmDir)}","twin_build_sec":${num(twinSec)},"warm_queries":$warmN,"warm_complete":${warmN == selected.size},"touch_files":${if (touchFiles < 0) "null" else touchFiles.toString},"touch_mb":${num(touchMb)},"touch_sec":${num(touchSec)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_ok":${results.size},"n_err":${errors.size},"errors":$errJson,"warm":$warmJson,"canary_sec":${num(canarySec)},"sf":"${esc(sfDir)}"}"""
     println(line)
-    // the full line above exceeds tail-window captures at ~90 queries
-    // (a consumer keeping only the last N chars of stdout sees it
-    // truncated mid-line and can't parse it) — so also emit a compact
-    // summary line, short enough to always survive a tail slice intact
-    // n_retry surfaces the methodology in the compact line too: a
-    // consumer that only sees this line still knows how many queries
-    // were median-of-three re-measured (full observations in `retries`)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${results.size},"n_err":${errors.size},"n_retry":${retried.size},"sf":"${esc(sfDir)}"}""")
+    // the full line above exceeds tail-window captures at ~90 queries, so
+    // also emit a compact summary line that always survives a tail slice
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${results.size},"n_err":${errors.size},"sf":"${esc(sfDir)}"}""")
     // sbt appends its own trailing lines to stdout; a file copy keeps the
     // FULL JSON machine-readable regardless of how stdout is sliced
     try java.nio.file.Files.writeString(

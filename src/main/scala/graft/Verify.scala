@@ -15,6 +15,10 @@ object Verify {
       // results are partitioning-independent by construction)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+      // a generated class that fails to compile fails its query instead
+      // of falling back to interpreted evaluation, which only logs it
+      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      .config("spark.sql.codegen.fallback", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -84,18 +88,7 @@ object Verify {
       require(leaked.isEmpty,
         s"persistent-RDD leak after $name's sweep: ids ${leaked.keys.toSeq.sorted.take(8).mkString(",")} (${leaked.size} total)")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Bench.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -48,27 +48,12 @@ private[graft] object Caches {
     Option(planProbe.get).foreach(_ += df.queryExecution.executedPlan)
     val reliable = df.sparkSession.conf
       .get("spark.graft.checkpoint.mode", "local") == "reliable"
-    // label the materialization job with the operator call site — the
-    // Spark UI / JobLog profiler otherwise shows an iterative fit as a
-    // wall of anonymous checkpoint jobs with no way to tell which
-    // operator phase each belongs to
-    val sc = df.sparkSession.sparkContext
-    val caller = Thread.currentThread.getStackTrace.iterator
-      .map(e => (e.getClassName, e.getLineNumber))
-      .collectFirst { case (c, l)
-        if c.startsWith("graft.") && !c.contains("Caches") =>
-          c.stripPrefix("graft.").takeWhile(_ != '$') + ":" + l }
-      .getOrElse("eager")
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"ckpt $caller")
-    try {
-      if (reliable) {
-        require(sc.getCheckpointDir.isDefined,
-          "spark.graft.checkpoint.mode=reliable needs " +
-            "sparkContext.setCheckpointDir(<fault-tolerant path>)")
-        df.checkpoint()
-      } else df.localCheckpoint()
-    } finally sc.setJobDescription(prev)
+    if (reliable) {
+      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        "spark.graft.checkpoint.mode=reliable needs " +
+          "sparkContext.setCheckpointDir(<fault-tolerant path>)")
+      df.checkpoint()
+    } else df.localCheckpoint()
   }
 
   /** Postfix sugar for [[eager]]: `df.eagerCheckpoint()` — keeps

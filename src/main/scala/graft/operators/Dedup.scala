@@ -794,10 +794,11 @@ object Dedup {
       try {
         // small-star: for (x, y<x) emit (y, m) and (x, m), m = min(y's)
         val small = afterLarge.filter(col("dst") < col("src"))
-        val sMins = Caches.broadcastIfSmall(
-          small.groupBy("src").agg(min("dst").as("nmin")), 2 * prevCount)
+        // only the join's copy carries the broadcast hint: the union
+        // branch is no join, so a hint there is dropped with a warning
+        val sMins = small.groupBy("src").agg(min("dst").as("nmin"))
         val afterSmall = canon(
-          small.join(sMins, "src")
+          small.join(Caches.broadcastIfSmall(sMins, 2 * prevCount), "src")
             .select(col("dst").as("src"), col("nmin").as("dst"))
             .unionByName(sMins.select(col("src"), col("nmin").as("dst"))))
           .eagerCheckpoint()

@@ -416,6 +416,31 @@ class DedupSpec extends SparkSuite {
     assert(got.forall(_._2 == 1L))
   }
 
+  test("dupClusters: each forced distributed star round broadcasts its small-star mins") {
+    // every round checkpoints canon(small ⋈ sMins ∪ sMins); with the
+    // size-based auto-broadcast off, only the row-gated hint on the
+    // join's copy of sMins can make that join a broadcast
+    val d = (1L to 40L).toDF("doc_id")
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val probed = scala.collection.mutable.Buffer
+      .empty[org.apache.spark.sql.execution.SparkPlan]
+    graft.operators.Caches.planProbe.set(probed)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try forceDistributed(clusters(d, chain))
+    finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      graft.operators.Caches.planProbe.remove()
+    }
+    val rounds = probed.filter(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.UnionExec]))
+    assert(rounds.nonEmpty, "no star round was probed")
+    rounds.foreach { p =>
+      assert(p.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+        s"star round planned without a broadcast join:\n$p")
+    }
+  }
+
   test("collapsedDupClusters ≡ uncollapsed dupClusters(minhashDedupPairs)") {
     val d = spark.read.parquet(s"$sf0001/documents.parquet")
     // seed exact duplicates (normalization variants) on top of the corpus
