@@ -17,10 +17,12 @@ Members: for each direct `def`/`val` member of a top-level object or
 class (one indentation step in), skipping `private`/`protected` members
 (qualified ones too), `override` and `implicit` members (reached through
 a type, not by name) and `def main`, the member is printed as
-`path:line  Owner.name` when its name appears, as a whole word, in the
-code of no other file and only once in the code of its own file (at its
-definition). Overloads share a name, so one used overload hides the
-others.
+`path:line  Owner.name` when its name appears, as a whole word, only
+once in the code of its own file (at its definition) and in no other
+file whose code also names the owner (`Owner(` in such a file counts as
+a use of `apply`). Requiring the owner keeps a common member name (load,
+run, stats) from being taken as reached through an unrelated use.
+Overloads share a name, so one used overload hides the others.
 
 Types: a top-level `class` or `trait` (case classes included) is printed
 as `path:line  Name` when its name appears, as a whole word, only once
@@ -113,6 +115,16 @@ def main():
         return any(w.search(text) for other, text in code.items()
                    if other != path)
 
+    def member_used_elsewhere(owner, member, path):
+        # a bare name is common (load, run, stats, ...): a use in another
+        # file counts only where that file also names the owner, and
+        # `Owner(` is a call of its `apply`
+        w, o = word(member), word(owner)
+        call = re.compile(r"\b%s\s*\(" % re.escape(owner))
+        return any(o.search(text) and (w.search(text) or
+                                       (member == "apply" and call.search(text)))
+                   for other, text in code.items() if other != path)
+
     unreached, members, types = [], [], []
     for path in sorted(p for p in code if p.startswith(main_root + os.sep)):
         rel = os.path.relpath(path, repo)
@@ -132,7 +144,7 @@ def main():
                     continue
                 member = mm.group(2)
                 if (len(word(member).findall(code[path])) == 1
-                        and not used_elsewhere(member, path)):
+                        and not member_used_elsewhere(name, member, path)):
                     members.append("%s:%d  %s.%s" % (rel, j + 1, name, member))
             if typ:
                 if (len(word(name).findall(code[path])) == 1

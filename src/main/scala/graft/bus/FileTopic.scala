@@ -9,16 +9,15 @@ import scala.jdk.CollectionConverters._
   * directory-per-topic log.
   *
   * Layout: `root/<topic>/part-%06d.jsonl` are immutable appended message
-  * files; `root/<topic>/offsets/<group>.<consumer>` holds the last
-  * fully-consumed file sequence per consumer (the `consumer_offsets`
-  * table, simple_kafka_setup.py:50-57).
+  * files; `root/<topic>/claims/<group>.<seq>` is one group's claim on one
+  * part file (the reference's `claimed_by`, simple_kafka_setup.py:146-177),
+  * holding `owner:timestamp:claimed:nonce` while in flight and
+  * `owner:timestamp:done` once consumed.
   *
-  * Delivery semantics, mapped from the claim-based broker (:146-177):
-  * within a consumer group, messages are hash-partitioned across the
-  * group's consumers — every message is delivered to exactly one member
-  * (the exclusive claim); independent groups each see every message.
-  * The broker is deliberately metadata-scale (driver-side file IO, like
-  * the reference's SQLite): high-volume streams belong on
+  * Delivery semantics: within a consumer group every part file goes to
+  * exactly one member (the exclusive claim); independent groups each see
+  * every message. The broker is deliberately metadata-scale (driver-side
+  * file IO, like the reference's SQLite): high-volume streams belong on
   * [[graft.streaming.PipeStream]], this is the pub/sub control plane.
   */
 object FileTopic {
@@ -37,59 +36,15 @@ object FileTopic {
   /** The one parse of a part file's sequence number. */
   private[bus] def seqOf(name: String): Int =
     name.stripPrefix("part-").takeWhile(_.isDigit).toInt
-
-  /** Default consecutive polls AND minimum wall-clock a head-of-line
-    * sequence gap must persist before [[FileTopic.poll]] declares it a
-    * durable hole and throws. Both are required: a poll count alone
-    * would let a tight-polling consumer crash inside a network
-    * filesystem's attribute-cache window, where part-(N+1) can be
-    * visible before part-N for a moment; a time floor alone would let
-    * one stale observation an hour later trip the alarm. The time floor
-    * defaults ABOVE typical attribute-cache windows (NFS acdirmax
-    * defaults to 60 s — the motivating race), so a healthy consumer on
-    * NFS can never be crashed by cache-skewed visibility; deployments on
-    * local disk that want a faster alarm pass a smaller floor to the
-    * constructor. */
-  private[bus] val HoleTolerance = 3
-  private[bus] val HoleToleranceMs = 65000L
 }
 
-/** @param holeTolerancePolls consecutive polls a head-of-line gap must
-  *   persist before it is a durable hole (see [[FileTopic.HoleTolerance]])
-  * @param holeToleranceMs minimum wall-clock the same gap must persist —
-  *   keep it above the filesystem's attribute-cache window
-  * @param clock injectable millis clock shared by the hole bookkeeping
-  *   (tests advance it instead of sleeping through the tolerance) */
-class FileTopic(root: String,
-    holeTolerancePolls: Int = FileTopic.HoleTolerance,
-    holeToleranceMs: Long = FileTopic.HoleToleranceMs,
-    clock: () => Long = () => System.currentTimeMillis()) {
-
-  /** Per-consumer tracking of a sequence gap observed at the head of the
-    * undelivered run — see the durable-hole check in [[poll]]. PERSISTED
-    * next to the consumer's offset file (dot-prefixed, so [[stats]] and
-    * the offset reads skip it): an in-memory sighting would reset on
-    * every restart, so a crash-looping consumer — restarting faster than
-    * the tolerance elapses — would never report a durable hole at all. */
-  private case class HoleSighting(missing: Int, polls: Int, firstSeenMs: Long)
-
-  private def holeFile(topic: String, group: String, consumer: Int): Path =
-    offsetsDir(topic).resolve(s".hole.$group.$consumer")
-
-  private def readHole(f: Path): Option[HoleSighting] =
-    if (!Files.exists(f)) None
-    else scala.util.Try {
-      val Array(m, p, t) = new String(Files.readAllBytes(f),
-        StandardCharsets.UTF_8).trim.split(":")
-      HoleSighting(m.toInt, p.toInt, t.toLong)
-    }.toOption // corrupt sighting = no sighting; the clock restarts
+class FileTopic(root: String) {
 
   private def topicDir(topic: String): Path = Paths.get(root, topic)
-  private def offsetsDir(topic: String): Path = topicDir(topic).resolve("offsets")
 
   /** create_topic (simple_kafka_setup.py:80-93) — idempotent. */
   def createTopic(topic: String): Unit = {
-    Files.createDirectories(offsetsDir(topic))
+    Files.createDirectories(topicDir(topic))
   }
 
   /** Files.list returns a stream holding a directory fd — must be closed
@@ -113,8 +68,8 @@ class FileTopic(root: String,
     * per publish batch, made visible ATOMICALLY AND COMPLETE. A direct
     * CREATE_NEW write is atomic for the file's EXISTENCE, not its
     * content — a consumer listing the directory mid-write would read a
-    * half-written batch and commit its offset past the missing tail,
-    * losing it forever. So the batch is staged to a dot-prefixed temp
+    * half-written batch and mark it done with its tail missing, losing
+    * the tail forever. So the batch is staged to a dot-prefixed temp
     * name (invisible to [[partFiles]]' pattern) and linked into place
     * with create-exclusive semantics; a concurrent publisher racing to
     * the same sequence loses the link atomically and retries with the
@@ -153,113 +108,6 @@ class FileTopic(root: String,
       }
       published
     } finally Files.deleteIfExists(tmp)
-  }
-
-  private def offsetFile(topic: String, group: String, consumer: Int): Path =
-    offsetsDir(topic).resolve(s"$group.$consumer")
-
-  /** Guarded parse of an offset file: a pre-atomic-commit crash (or a
-    * hand-edited file) can leave it empty/corrupt — treat that as "no
-    * commit" (-1, at-least-once redelivery) rather than throwing, which
-    * would crash-loop every subsequent poll for this consumer until an
-    * operator hand-repaired the file. */
-  private def parseOffset(bytes: Array[Byte]): Int =
-    scala.util.Try(new String(bytes, StandardCharsets.UTF_8).trim.toInt)
-      .getOrElse(-1)
-
-  private def committed(topic: String, group: String, consumer: Int): Int = {
-    val f = offsetFile(topic, group, consumer)
-    if (Files.exists(f)) parseOffset(Files.readAllBytes(f)) else -1
-  }
-
-  /** Write a small state file ATOMICALLY: staged to a dot-prefixed temp
-    * (the publish discipline) and moved into place, so no reader — a
-    * poll, [[stats]], or a restarted consumer reading its hole sighting —
-    * can ever observe the truncated-but-unwritten middle of an in-place
-    * rewrite. Filesystems without atomic move degrade to a plain move
-    * (same visibility as a truncate-then-write, with the guarded parses
-    * as the backstop). */
-  private def atomicWrite(target: Path, content: String): Unit = {
-    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    try Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  private def commitOffset(topic: String, group: String, consumer: Int,
-      seq: Int): Unit =
-    atomicWrite(offsetFile(topic, group, consumer), f"$seq%06d")
-
-  /** subscribe+claim+commit (simple_kafka_setup.py:114-177): return the
-    * new messages owned by this consumer (stable hash split across the
-    * group) and advance its offset.
-    *
-    * Only the CONTIGUOUS prefix of new sequences (last+1, last+2, …) is
-    * delivered and committed: a directory listing is a live scan, so it
-    * can observe part-(N+1) created mid-scan while having already passed
-    * N's slot before part-N was linked — consuming past that hole would
-    * commit the offset over part-N and lose its messages forever.
-    * Sequences are dense by construction ([[publish]] retries until its
-    * create-exclusive link wins), so the skipped tail is simply delivered
-    * by the next poll once the listing sees the full run. */
-  def poll(topic: String, group: String, consumer: Int = 0,
-      groupSize: Int = 1): Seq[String] = {
-    createTopic(topic)
-    val last = committed(topic, group, consumer)
-    val newer = partFiles(topic).filter(seqOf(_) > last)
-    val files = newer.zipWithIndex
-      .takeWhile { case (f, i) => seqOf(f) == last + 1 + i }
-      .map(_._1)
-    // A transient hole (publish racing the listing) heals on the next
-    // poll; a DURABLE hole (part file deleted/lost, e.g. a partial
-    // restore) would wedge this consumer behind it silently forever —
-    // poll returning empty with files visible past the gap. Detect the
-    // same gap persisting across HoleTolerance consecutive polls and
-    // fail loudly with the missing sequence, so an operator can restore
-    // the file or explicitly skip it by advancing the offset.
-    if (files.isEmpty && newer.nonEmpty) {
-      val missing = last + 1
-      val now = clock()
-      val hf = holeFile(topic, group, consumer)
-      val seen = readHole(hf) match {
-        case Some(prev) if prev.missing == missing =>
-          HoleSighting(missing, prev.polls + 1, prev.firstSeenMs)
-        case _ => HoleSighting(missing, 1, now)
-      }
-      // persisted BEFORE the throw decision, same atomic temp+move
-      // discipline as the offset commit — a consumer that crashes (or
-      // crash-loops) inside the tolerance window resumes the SAME clock
-      // instead of resetting it, so a durable hole is reported after the
-      // tolerance no matter how often its consumer restarts
-      atomicWrite(hf, s"${seen.missing}:${seen.polls}:${seen.firstSeenMs}")
-      val heldMs = now - seen.firstSeenMs
-      if (seen.polls >= holeTolerancePolls && heldMs >= holeToleranceMs)
-        throw new IllegalStateException(
-          s"topic '$topic': sequence $missing is missing but " +
-            s"${newer.size} newer part file(s) exist (up to " +
-            s"${seqOf(newer.last)}) — durable hole after ${seen.polls} " +
-            s"polls over ${heldMs}ms; restore the file or advance the " +
-            "group offset past it")
-    } else Files.deleteIfExists(holeFile(topic, group, consumer))
-    val mine = files.flatMap { f =>
-      val lines = Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      val fileSeq = seqOf(f)
-      lines.zipWithIndex.collect {
-        case (m, i) if Math.floorMod(
-          scala.util.hashing.byteswap64(fileSeq.toLong << 32 | i), groupSize)
-          == consumer => m
-      }
-    }
-    files.lastOption.foreach(f =>
-      commitOffset(topic, group, consumer, seqOf(f)))
-    mine
   }
 
   // ---- claim-based consumption with dynamic rebalancing ----
@@ -362,27 +210,34 @@ class FileTopic(root: String,
     mine.flatten
   }
 
-  /** get_topic_stats (simple_kafka_setup.py:179-198): total messages,
-    * files, consumer count, and queue depth (messages not yet consumed by
-    * the laggiest registered consumer). */
+  /** get_topic_stats (simple_kafka_setup.py:179-198) with the reference's
+    * definitions: total messages and part files; queue depth = messages in
+    * part files that no group has claimed (`claimed_by IS NULL`); consumer
+    * count = distinct (group, owner) pairs named in claim tokens. A token
+    * caught mid-write names no owner, but its file still counts as claimed. */
   def stats(topic: String): Map[String, Long] = {
     createTopic(topic)
     val files = partFiles(topic)
-    // one read per part file: the per-file line counts feed both the
-    // total and the depth sums (the old shape read every file twice)
-    val lineCounts = files.map(f =>
-      f -> Files.readAllLines(f).size().toLong).toMap
-    val total = lineCounts.valuesIterator.sum
-    // skip dot-prefixed staging residue (a crashed commitOffset's tmp);
-    // parseOffset guards the read against pre-atomic-commit leftovers
-    val offsets = listDir(offsetsDir(topic))
-      .filterNot(_.getFileName.toString.startsWith("."))
-    val minCommitted =
-      if (offsets.isEmpty) -1
-      else offsets.map(p => parseOffset(Files.readAllBytes(p))).min
-    val unconsumed = files.filter(seqOf(_) > minCommitted)
-      .map(lineCounts).sum
-    Map("total_messages" -> total, "n_files" -> files.size.toLong,
-      "n_consumers" -> offsets.size.toLong, "queue_depth" -> unconsumed)
+    val lineCounts = files.map(f => seqOf(f) -> Files.readAllLines(f).size().toLong)
+    val ClaimName = """(.+)\.(\d{6,})""".r
+    val claims =
+      if (!Files.isDirectory(claimsDir(topic))) Nil
+      else listDir(claimsDir(topic)).flatMap { cf =>
+        cf.getFileName.toString match {
+          case ClaimName(group, seq) => Some((group, seq.toInt, cf))
+          case _ => None
+        }
+      }
+    val claimed = claims.map(_._2).toSet
+    val owners = claims.flatMap { case (group, _, cf) =>
+      scala.util.Try(new String(Files.readAllBytes(cf), StandardCharsets.UTF_8))
+        .toOption.map(_.trim.split(":")).collect {
+          case Array(owner, _, _, _*) => group -> owner
+        }
+    }.distinct
+    Map("total_messages" -> lineCounts.map(_._2).sum,
+      "n_files" -> files.size.toLong,
+      "n_consumers" -> owners.size.toLong,
+      "queue_depth" -> lineCounts.collect { case (seq, n) if !claimed(seq) => n }.sum)
   }
 }

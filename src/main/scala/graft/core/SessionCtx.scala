@@ -56,7 +56,6 @@ final class SessionCtx(val user: String, initialRole: String = "PUBLIC") {
   def set(name: String, value: String): this.type = {
     vars(name) = value; this
   }
-  def unset(name: String): this.type = { vars -= name; this }
   def variable(name: String): Option[String] = vars.get(name)
 
   /** `identifier($var)` (A4:51): a `$`-prefixed reference resolves

@@ -13,26 +13,16 @@ class FileTopicSpec extends SparkSuite {
     val b = broker()
     b.publish("orders", Seq("m1", "m2"))
     b.publish("orders", Seq("m3"))
-    val got = b.poll("orders", "g1")
+    val got = b.pollClaims("orders", "g1", 0)
     assert(got === Seq("m1", "m2", "m3"))
-    // committed: nothing new on re-poll
-    assert(b.poll("orders", "g1").isEmpty)
+    // claimed and done: nothing new on re-poll, by any member of the group
+    assert(b.pollClaims("orders", "g1", 0).isEmpty)
+    assert(b.pollClaims("orders", "g1", 1).isEmpty)
     // new publish arrives incrementally
     b.publish("orders", Seq("m4"))
-    assert(b.poll("orders", "g1") === Seq("m4"))
-  }
-
-  test("consumer group splits messages disjointly and completely (ST12)") {
-    val b = broker()
-    val msgs = (1 to 40).map(i => s"m$i")
-    msgs.grouped(10).foreach(g => b.publish("t", g))
-    val c0 = b.poll("t", "workers", consumer = 0, groupSize = 2)
-    val c1 = b.poll("t", "workers", consumer = 1, groupSize = 2)
-    assert((c0 ++ c1).sorted === msgs.sorted)  // complete
-    assert(c0.toSet.intersect(c1.toSet).isEmpty) // exclusive delivery
-    assert(c0.nonEmpty && c1.nonEmpty)           // actually balanced
-    // an independent group sees every message (fan-out across groups)
-    assert(b.poll("t", "audit").sorted === msgs.sorted)
+    assert(b.pollClaims("orders", "g1", 0) === Seq("m4"))
+    // another group keeps its own progress and sees every message
+    assert(b.pollClaims("orders", "g2", 0) === Seq("m1", "m2", "m3", "m4"))
   }
 
   test("stats reports depth, consumers, totals (ST13)") {
@@ -40,12 +30,23 @@ class FileTopicSpec extends SparkSuite {
     b.publish("t", Seq("a", "b"))
     val s0 = b.stats("t")
     assert(s0("total_messages") === 2 && s0("queue_depth") === 2 &&
-      s0("n_consumers") === 0)
-    b.poll("t", "g1")
+      s0("n_consumers") === 0 && s0("n_files") === 1)
+    b.pollClaims("t", "g1", 0)
     val s1 = b.stats("t")
     assert(s1("queue_depth") === 0 && s1("n_consumers") === 1)
     b.publish("t", Seq("c"))
     assert(b.stats("t")("queue_depth") === 1)
+    // depth counts files NO group has claimed: g2's claim of the new
+    // file empties the queue although g1 has not read it
+    b.pollClaims("t", "g2", 0)
+    val s2 = b.stats("t")
+    assert(s2("queue_depth") === 0 && s2("n_consumers") === 2)
+    // an in-flight claim is a claim too, and its owner a consumer
+    b.publish("t", Seq("d", "e"))
+    b.pollClaims("t", "g1", 3, markDone = false)
+    val s3 = b.stats("t")
+    assert(s3("queue_depth") === 0 && s3("n_consumers") === 3 &&
+      s3("total_messages") === 5 && s3("n_files") === 3)
   }
 
   test("claim polling rebalances a dead consumer's in-flight work") {
@@ -117,7 +118,7 @@ class FileTopicSpec extends SparkSuite {
     pool.shutdown()
     assert(landed.distinct.length === nPublishers,
       "two publishers claimed the same sequence")
-    val got = b.poll("t", "g")
+    val got = b.pollClaims("t", "g", 0)
     assert(got.sorted === (0 until nPublishers).map(p => s"batch-$p").sorted,
       "a racing publisher's batch was lost")
     val s = Files.list(java.nio.file.Paths.get(root, "t"))
@@ -134,100 +135,49 @@ class FileTopicSpec extends SparkSuite {
     assert(leftovers.isEmpty, s"staging files left behind: $leftovers")
   }
 
-  test("a hole in the listed sequence bounds delivery to the contiguous prefix") {
+  test("a file that lands late in a sequence gap is claimed on the next poll and holds back no later file") {
     val root = Files.createTempDirectory("bus")
     val b = new FileTopic(root.toString)
     b.publish("t", Seq("m0"))
     b.publish("t", Seq("m1"))
     b.publish("t", Seq("m2"))
-    // model the live-scan race: part-000001 was linked mid-scan, so this
-    // listing sees 0 and 2 but not 1 — consuming 2 would commit the
-    // offset over 1 and lose it forever
-    val hidden = root.resolve("t/part-000001.jsonl")
+    // model a listing that sees part-000000 and part-000002 but not yet
+    // part-000001 (linked mid-scan, or restored later)
+    val late = root.resolve("t/part-000001.jsonl")
     val aside = root.resolve("t/.part-000001.hidden")
-    Files.move(hidden, aside)
-    assert(b.poll("t", "g") === Seq("m0"), "must stop at the hole")
-    Files.move(aside, hidden)
-    // the skipped tail is simply the next poll's delivery
-    assert(b.poll("t", "g") === Seq("m1", "m2"))
-    assert(b.poll("t", "g").isEmpty)
+    Files.move(late, aside)
+    assert(b.pollClaims("t", "g", 0) === Seq("m0", "m2"),
+      "a later file must not wait behind the gap")
+    Files.move(aside, late)
+    assert(b.pollClaims("t", "g", 0) === Seq("m1"))
+    assert(b.pollClaims("t", "g", 0).isEmpty)
   }
 
-  test("a DURABLE hole fails loudly after the tolerance instead of wedging") {
-    val root = Files.createTempDirectory("bus")
-    var clockMs = 1000L
-    val b = new FileTopic(root.toString, holeToleranceMs = 2000L,
-      clock = () => clockMs)
-    b.publish("t", Seq("m0"))
-    b.publish("t", Seq("m1"))
-    b.publish("t", Seq("m2"))
-    assert(b.poll("t", "g") === Seq("m0", "m1", "m2"))
-    b.publish("t", Seq("m3"))
-    b.publish("t", Seq("m4"))
-    // part-000003 is LOST (partial restore) — not a transient listing race
-    Files.delete(root.resolve("t/part-000003.jsonl"))
-    // the first polls are indistinguishable from a race: empty, no error
-    assert(b.poll("t", "g").isEmpty)
-    assert(b.poll("t", "g").isEmpty)
-    // poll count alone must NOT trip the alarm — an NFS attribute-cache
-    // window can hide a freshly-published file for seconds while a
-    // tight-polling consumer burns through any count
-    assert(b.poll("t", "g").isEmpty, "fast polls within the time floor stay silent")
-    clockMs += 2100 // clear the 2 s time floor
-    // the gap persisting past BOTH tolerances must be loud, not silent
-    val e = intercept[IllegalStateException](b.poll("t", "g"))
-    assert(e.getMessage.contains("sequence 3"))
-    assert(e.getMessage.contains("durable hole"))
-    // operator remedy: advance the offset past the hole → consumption
-    // resumes (and the sighting counter resets for future gaps)
-    val off = root.resolve("t/offsets/g.0")
-    Files.write(off, "000003".getBytes)
-    assert(b.poll("t", "g") === Seq("m4"))
-    assert(b.poll("t", "g").isEmpty)
-    // the healed poll also cleared the persisted sighting
-    assert(!Files.exists(root.resolve("t/offsets/.hole.g.0")))
-  }
-
-  test("a crash-looping consumer still reports a durable hole (persisted sighting)") {
-    val root = Files.createTempDirectory("bus")
-    var clockMs = 1000L
-    val clock = () => clockMs
-    def freshConsumer() = // a restart = a brand-new broker instance
-      new FileTopic(root.toString, holeToleranceMs = 2000L, clock = clock)
-    val producer = freshConsumer()
-    producer.publish("t", Seq("m0"))
-    producer.publish("t", Seq("m1"))
-    assert(freshConsumer().poll("t", "g") === Seq("m0", "m1"))
-    producer.publish("t", Seq("m2"))
-    producer.publish("t", Seq("m3"))
-    Files.delete(root.resolve("t/part-000002.jsonl")) // durable loss
-    // each poll is a NEW instance restarting INSIDE the tolerance window —
-    // with in-memory-only sightings the clock would reset every time and
-    // the hole would never be reported
-    assert(freshConsumer().poll("t", "g").isEmpty)
-    clockMs += 700
-    assert(freshConsumer().poll("t", "g").isEmpty)
-    clockMs += 700
-    assert(freshConsumer().poll("t", "g").isEmpty)
-    clockMs += 700 // 2100 ms since first sighting, 3 polls seen
-    val e = intercept[IllegalStateException](freshConsumer().poll("t", "g"))
-    assert(e.getMessage.contains("sequence 2"))
-    assert(e.getMessage.contains("durable hole"))
-  }
-
-  test("an empty or corrupt offset file degrades to redelivery, not a crash-loop") {
+  test("an unreadable claim token is reclaimable only after the claim file's mtime passes the TTL") {
     val root = Files.createTempDirectory("bus")
     val b = new FileTopic(root.toString)
     b.publish("t", Seq("m0"))
-    assert(b.poll("t", "g") === Seq("m0"))
-    // a pre-atomic-commit crash could leave the file empty; polls must
-    // treat it as "no commit" (at-least-once) instead of throwing forever
-    val off = root.resolve("t/offsets/g.0")
-    Files.write(off, Array.emptyByteArray)
-    assert(b.poll("t", "g") === Seq("m0"))
-    assert(b.poll("t", "g").isEmpty, "redelivery re-commits the offset")
-    // stats must tolerate a corrupt offset too (reads every consumer's)
-    Files.write(off, "garbage".getBytes)
-    assert(b.stats("t")("queue_depth") === 1)
+    b.publish("t", Seq("m1"))
+    val claims = Files.createDirectories(root.resolve("t/claims"))
+    val mtime = 1000000L
+    // one token with no parseable fields, one whose timestamp is garbage:
+    // both fall back to the claim file's own age
+    Seq("g.000000" -> "garbage", "g.000001" -> "7:notatime:claimed:x")
+      .foreach { case (name, token) =>
+        val cf = claims.resolve(name)
+        Files.write(cf, token.getBytes)
+        Files.setLastModifiedTime(cf,
+          java.nio.file.attribute.FileTime.fromMillis(mtime))
+      }
+    var clock = mtime + 1000
+    val now = () => clock
+    assert(b.pollClaims("t", "g", 1, claimTtlMs = 5000, now = now).isEmpty,
+      "a fresh claim file with an unreadable token must stay claimed")
+    clock = mtime + 6000
+    assert(b.pollClaims("t", "g", 1, claimTtlMs = 5000, now = now) ===
+      Seq("m0", "m1"))
+    // the reclaim completed: the files are done for the group
+    clock += 60000
+    assert(b.pollClaims("t", "g", 2, claimTtlMs = 5000, now = now).isEmpty)
   }
 }

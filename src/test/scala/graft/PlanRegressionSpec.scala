@@ -184,4 +184,19 @@ class PlanRegressionSpec extends SparkSuite {
     assert(missing.isEmpty,
       s"queries without a plan snapshot budget: ${missing.toSeq.sorted.mkString(", ")}")
   }
+
+  test("plan snapshot files exist exactly where exchange_budget.tsv has their rows") {
+    // graft.Explain writes <q>.txt with the <q> row and <q>.interior.txt
+    // with the <q>#interior row, so a snapshot without its row is one
+    // that Explain no longer writes and nothing checks
+    val mismatched = SparkEntry.queries.keySet.toSeq.sorted.flatMap { q =>
+      Seq(s"$q.txt" -> q, s"$q.interior.txt" -> s"$q#interior").collect {
+        case (file, row) if Files.exists(Paths.get("plans", file)) !=
+            budgets.contains(row) =>
+          s"plans/$file " + (if (budgets.contains(row)) "missing" else
+            s"has no $row row")
+      }
+    }
+    assert(mismatched.isEmpty, mismatched.mkString("\n"))
+  }
 }

@@ -29,8 +29,6 @@ class SessionCtxSpec extends SparkSuite {
     assert(ctx.identifier("Data_ENG") === "Data_ENG")
     val e = intercept[IllegalArgumentException](ctx.identifier("$nope"))
     assert(e.getMessage.contains("nope"))
-    ctx.set("gone", "x").unset("gone")
-    intercept[IllegalArgumentException](ctx.identifier("$gone"))
   }
 
   test("useRole enforces grants and drives the masking tier") {
